@@ -16,7 +16,7 @@ import graft.ops.Upsert
   * a dataflow:
   *
   *   new rows   = batch ⋉ state  WHERE ts > high_water   (T1/P6)
-  *   next state = merge(state, max(ts) per key)          (T3, monotone)
+  *   next state = max(ts) per key over state ∪ batch     (T3, monotone)
   *
   * The state table is broadcast (it has one row per source), so the gate
   * adds zero shuffles to the batch scan at any scale; with a timestamp-
@@ -70,29 +70,18 @@ object Incremental {
       .drop("__graft_sk", "__graft_hw")
   }
 
-  /** T3: advance the watermark to max(ts) per key seen in this batch.
-    * Monotone by construction: merge is stage-wins and the stage carries
-    * max(old, new) via the union inside the aggregate.
+  /** T3: advance the watermark to max(ts) per key seen in this batch, in
+    * one aggregate over the union of the state and the batch: keys only in
+    * the state keep their watermark, an older batch never lowers it
+    * (monotone by construction), and a key whose batch timestamps are all
+    * null gets the epoch.
     */
   def advance(state: DataFrame, batch: DataFrame, keyCol: String,
-              tsCol: String): DataFrame = {
-    val observed = batch.groupBy(col(keyCol).as("source_key"))
-      .agg(max(col(tsCol)).as("high_water"))
-    val merged = Upsert.merge(
-      state,
-      // guard against a batch whose max is older than the stored watermark
-      observed.join(state.withColumnRenamed("high_water", "_old"),
-        Seq("source_key"), "left")
-        .select(col("source_key"),
-          greatest(col("high_water"), coalesce(col("_old"), epoch)).as("high_water")),
-      Seq("source_key"))
-    merged
-  }
+              tsCol: String): DataFrame =
+    state.unionByName(batch.select(col(keyCol).as("source_key"),
+        coalesce(col(tsCol), epoch).as("high_water")))
+      .groupBy("source_key").agg(max("high_water").as("high_water"))
 
-  /** T1+T3+T6 end-to-end: read state table, emit new rows, persist the
-    * advanced state atomically (write-temp-then-swap — the reference only
-    * persists its watermark after a successful run, :267).
-    */
   /** State table read, pinned in memory: incremental results are lazy, and
     * the atomic state swap deletes the files they would otherwise re-read.
     * The state is one row per source, so this is bytes, not data.
@@ -105,7 +94,10 @@ object Incremental {
       stateSchema)
   }
 
-  /** The returned rows are MATERIALIZED (localCheckpoint) before the state
+  /** T1+T3+T6 end-to-end: read state table, emit new rows, persist the
+    * advanced state atomically (write-temp-then-swap — the reference only
+    * persists its watermark after a successful run, :267).
+    * The returned rows are MATERIALIZED (localCheckpoint) before the state
     * swap: returning a lazy frame would let a caller crash after the
     * watermark already advanced, silently losing the batch on rerun — the
     * persist-last contract (REF :267) must cover the caller's consumption,

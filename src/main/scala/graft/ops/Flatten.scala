@@ -64,35 +64,32 @@ object Flatten {
   /** P8: dynamic page-envelope normalization. A page payload is either a bare
     * JSON array of events or an object wrapping the array under one of
     * data|events|items|results (REF wistia_pull_wistia_api.py:135-146).
-    * Input: one string column `payload` per page. The bare-array form is
-    * handled by a second parse attempt — `from_json` returns null on shape
-    * mismatch, so the coalesce order resolves the variant per row with no
-    * driver-side branching (the reference's `_page_shape` control flow
-    * becomes data).
+    * Input: one string column `payload` per page. The coalesce order
+    * resolves the variant per row with no driver-side branching (the
+    * reference's `_page_shape` control flow becomes data).
     */
   def normalizePages(pages: DataFrame, payloadCol: String = "payload"): DataFrame =
-    normalizedRows(pages, payloadCol)
-      .withColumn("_row", explode(col("_rows")))
-      .select(col("_row.*"))
+    normalizePagesWithQuarantine(pages, payloadCol)._1
 
-  /** `from_json` with an ARRAY schema silently wraps a bare OBJECT into a
-    * one-element array (all-null fields), so the bare-array fallback must
-    * be gated on the payload actually being an array — otherwise corrupt
-    * objects materialize as all-null rows instead of parse failures.
+  /** Adds `_rows`: the page's events, or null for a page no envelope rule
+    * recognizes. The envelope struct is its own column, parsed once: Catalyst
+    * splits `from_json(p).getField(f)` into one parse per field, but does not
+    * inline a non-cheap column that its consumer references four times. The
+    * bare-array parse is gated on `[`: with an ARRAY schema, `from_json` wraps
+    * a bare OBJECT into a one-element all-null array, hiding a parse failure.
     */
-  private def normalizedRows(pages: DataFrame, payloadCol: String): DataFrame = {
-    val env = from_json(col(payloadCol), Schemas.wistiaEventPage)
+  def tagPages(pages: DataFrame, payloadCol: String = "payload"): DataFrame = {
     val bare = from_json(col(payloadCol),
       org.apache.spark.sql.types.ArrayType(Schemas.wistiaEventRaw))
     val isArray = ltrim(col(payloadCol)).startsWith("[")
-    pages.withColumn("_rows", coalesce(
-      env.getField("data"), env.getField("events"),
-      env.getField("items"), env.getField("results"),
-      when(isArray, bare)))
+    pages.withColumn("_env", from_json(col(payloadCol), Schemas.wistiaEventPage))
+      .withColumn("_rows", coalesce(col("_env.data"), col("_env.events"),
+        col("_env.items"), col("_env.results"), when(isArray, bare)))
+      .drop("_env")
   }
 
   /** P8 + T6 hardened: corrupt or unrecognized pages don't vanish (plain
-    * [[normalizePages]] silently drops them via the null explode) and don't
+    * [[normalizePages]] silently drops them) and don't
     * fail the run (the reference isolates failures per media and proceeds,
     * REF wistia_pull_wistia_api.py:261-267) — they land in a quarantine
     * frame carrying the raw payload for replay after a parser fix.
@@ -100,14 +97,24 @@ object Flatten {
     */
   def normalizePagesWithQuarantine(pages: DataFrame,
                                    payloadCol: String = "payload")
+      : (DataFrame, DataFrame) =
+    splitTagged(tagPages(pages, payloadCol), payloadCol)
+
+  /** Splits [[tagPages]] output into (good rows, quarantined pages); a
+    * caller that pins the tagged pages parses each page once for both. No
+    * side filters on `_rows`, not even the filter `explode` infers: Catalyst
+    * pushes it below the parse, which re-parses per envelope field.
+    * `posexplode_outer` infers none; its `pos` is null where `explode` drops.
+    */
+  def splitTagged(tagged: DataFrame, payloadCol: String = "payload")
       : (DataFrame, DataFrame) = {
-    val tagged = normalizedRows(pages, payloadCol)
-    val good = tagged.filter(col("_rows").isNotNull)
-      .withColumn("_row", explode(col("_rows")))
+    val good = tagged.select(posexplode_outer(col("_rows")).as(Seq("_pos", "_row")))
+      .filter(col("_pos").isNotNull)
       .select(col("_row.*"))
-    val quarantined = tagged.filter(col("_rows").isNull)
-      .select(col(payloadCol).as("raw_payload"),
-        current_timestamp().as("quarantined_at"))
+    val quarantined = tagged
+      .select(explode(when(col("_rows").isNull, array(col(payloadCol))))
+        .as("raw_payload"))
+      .withColumn("quarantined_at", current_timestamp())
     (good, quarantined)
   }
 }

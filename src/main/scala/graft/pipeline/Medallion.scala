@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, StructType}
 
 import graft.incr.Incremental
 import graft.ops.{Agg, Dedup, Flatten, Upsert}
@@ -35,12 +36,13 @@ object Medallion {
   }
 
   /** Bronze: persist one pull's page payloads under the reference's
-    * media_id=/dt= partition layout (REF wistia_pull_wistia_api.py:117-129).
+    * media_id=/dt= partition layout (REF wistia_pull_wistia_api.py:117-129),
+    * one file per pull (already in driver memory, so one task costs nothing).
     */
   def writeBronzePages(spark: SparkSession, layout: Layout, mediaId: String,
                        dt: String, pull: PagedSource.PullResult): Unit = {
     import spark.implicits._
-    pull.payloads.toDF("payload")
+    pull.payloads.toDF("payload").coalesce(1)
       .withColumn("media_id", lit(mediaId))
       .withColumn("dt", lit(dt))
       .write.mode("append").partitionBy("media_id", "dt")
@@ -64,6 +66,8 @@ object Medallion {
     *
     * The bronze scan is pruned to partitions at/after the oldest stored
     * watermark day, so per-run cost tracks the delta, not total history.
+    * A run parses each page and dedups once: the quarantine append, the fact
+    * append and the watermark advance read two pins, tagged pages and rows.
     */
   def refreshFactEvents(spark: SparkSession, layout: Layout): DataFrame = {
     val pinned = Incremental.pinnedState(spark, layout.state)
@@ -72,45 +76,47 @@ object Medallion {
       if (hw.isEmpty) None
       else Some(hw.min.toInstant.toString.take(10)) // min across sources
     }
-    val allPages = spark.read
-      .schema(new org.apache.spark.sql.types.StructType()
-        .add("payload", org.apache.spark.sql.types.StringType)
-        .add("media_id", org.apache.spark.sql.types.StringType)
-        .add("dt", org.apache.spark.sql.types.StringType))
+    val allPages = spark.read.schema("payload STRING, media_id STRING, dt STRING")
       .option("basePath", layout.bronzeEvents)
       .json(layout.bronzeEvents)
     val pages = minDt.fold(allPages)(d => allPages.filter(col("dt") >= d))
       .select("payload")
     // T6: unparseable pages isolate into the quarantine table (the
     // reference's per-media try/except, REF wistia_pull_wistia_api.py:
-    // 261-267, generalized per page). Parse once; both consumers share it.
-    val (rows, quarantined) = Flatten.normalizePagesWithQuarantine(
-      pages.persist())
-    appendNewQuarantined(spark, layout, quarantined)
-    val flat = Flatten.factEvents(rows)
-    val deduped = Dedup.firstWins(flat, Seq("event_key"),
+    // 261-267, generalized per page).
+    val tagged = Flatten.tagPages(pages).persist()
+    val (rows, quarantined) = Flatten.splitTagged(tagged)
+    val deduped = Dedup.firstWins(Flatten.factEvents(rows), Seq("event_key"),
       Schemas.factEvents.fieldNames.filterNot(_ == "event_key").toSeq
         .map(c => if (c == "received_at") col(c).desc else col(c).asc))
-    val candidates = Incremental.newRowsInclusive(
-      deduped, pinned, "media_id", "received_at")
-    val existingKeys =
-      if (Tables.pathExists(spark, layout.factEvents))
-        spark.read.parquet(layout.factEvents).select("event_key")
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        new org.apache.spark.sql.types.StructType()
-          .add("event_key", org.apache.spark.sql.types.StringType))
-    // fact is dt-partitioned so downstream gold refreshes prune to the
-    // days a run actually touched.
-    candidates.join(existingKeys, Seq("event_key"), "left_anti")
-      .withColumn("dt", to_date(col("received_at")))
-      .write.mode("append").partitionBy("dt").parquet(layout.factEvents)
-    Upsert.atomicReplace(spark,
-      Incremental.advance(pinned, deduped, "media_id", "received_at"),
-      layout.state)
-    pages.unpersist()
-    spark.read.parquet(layout.factEvents)
+      .persist()
+    try {
+      if (!quarantined.isEmpty) appendNewQuarantined(spark, layout, quarantined)
+      val candidates = Incremental.newRowsInclusive(
+        deduped, pinned, "media_id", "received_at")
+      val fresh =
+        if (!Tables.pathExists(spark, layout.factEvents)) candidates
+        else candidates.join(spark.read.schema("event_key STRING")
+          .parquet(layout.factEvents).select("event_key"), Seq("event_key"),
+          "left_anti")
+      // fact is dt-partitioned so downstream gold refreshes prune to the
+      // days a run actually touched.
+      fresh.withColumn("dt", to_date(col("received_at")))
+        .write.mode("append").partitionBy("dt").parquet(layout.factEvents)
+      Upsert.atomicReplace(spark,
+        Incremental.advance(pinned, deduped, "media_id", "received_at"),
+        layout.state)
+    } finally {
+      deduped.unpersist()
+      tagged.unpersist()
+    }
+    readFact(spark, layout)
   }
+
+  // Known schemas: a schemaless parquet read runs a schema-inference job.
+  private def readFact(spark: SparkSession, layout: Layout): DataFrame =
+    spark.read.schema(Schemas.factEvents.add("dt", DateType))
+      .parquet(layout.factEvents)
 
   /** Idempotent quarantine append: re-parsing old bronze must not re-add
     * pages already quarantined (keyed by payload hash).
@@ -120,8 +126,8 @@ object Medallion {
     val keyed = quarantined.withColumn("payload_hash", md5(col("raw_payload")))
     val fresh =
       if (Tables.pathExists(spark, layout.quarantine)) {
-        val existing = spark.read.parquet(layout.quarantine)
-          .select("payload_hash")
+        val existing = spark.read.schema("payload_hash STRING")
+          .parquet(layout.quarantine)
         keyed.join(existing, Seq("payload_hash"), "left_anti")
       } else keyed
     fresh.write.mode("append").parquet(layout.quarantine)
@@ -142,7 +148,7 @@ object Medallion {
         .localCheckpoint(true), stage, Seq("media_id"))
     } else stage
     Upsert.atomicReplace(spark, merged, layout.dimMedia)
-    spark.read.parquet(layout.dimMedia)
+    spark.read.schema(Schemas.dimMedia).parquet(layout.dimMedia)
   }
 
   /** Gold: daily engagement rollup upserted on (media_id, dt) — the
@@ -155,7 +161,7 @@ object Medallion {
     */
   def refreshDailyAgg(spark: SparkSession, layout: Layout,
                       onlyDays: Option[Seq[java.sql.Date]] = None): DataFrame = {
-    val allFact = spark.read.parquet(layout.factEvents)
+    val allFact = readFact(spark, layout)
     val fact = onlyDays.fold(allFact)(days =>
       allFact.filter(col("dt").isin(days.map(d => lit(d)): _*)))
     val daily = fact
@@ -169,6 +175,7 @@ object Medallion {
         (col("play_count").cast("double") / col("load_count")).as("play_rate"),
         col("sum_viewed"), col("visitors"))
     Upsert.overwritePartitions(daily, layout.dailyAgg, Seq("dt"))
-    spark.read.parquet(layout.dailyAgg)
+    spark.read.schema(StructType(daily.schema.filterNot(_.name == "dt") :+
+      daily.schema("dt"))).parquet(layout.dailyAgg)
   }
 }

@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.sources.PagedSource.{Checkpoint, PullResult}
 
 /** Runnable end-to-end demo of the medallion pipeline against a temp dir:
@@ -12,13 +11,7 @@ import graft.sources.PagedSource.{Checkpoint, PullResult}
   */
 object MedallionDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build("local[4]", 4)
     spark.sparkContext.setLogLevel("ERROR")
 
     val root = args.headOption.getOrElse(

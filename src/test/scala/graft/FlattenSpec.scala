@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{CaseWhen, JsonToStructs, StartsWith}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 import graft.ops.Flatten
 import graft.schema.Schemas
@@ -68,6 +70,54 @@ class FlattenSpec extends SparkSpec {
     assert(out.count() == 8)
     assert(out.schema.fieldNames.contains("event_key"))
     assert(out.select("event_key").distinct().as[String].collect().toSeq == Seq("e1"))
+  }
+
+  /** The per-field form the normalizer used before `tagPages`: Catalyst
+    * turns each `getField` into its own single-field parse.
+    */
+  private def perFieldTag(pages: DataFrame): DataFrame = {
+    val env = from_json(col("payload"), Schemas.wistiaEventPage)
+    val bare = from_json(col("payload"), ArrayType(Schemas.wistiaEventRaw))
+    pages.withColumn("_rows", coalesce(env.getField("data"),
+      env.getField("events"), env.getField("items"), env.getField("results"),
+      when(ltrim(col("payload")).startsWith("["), bare)))
+  }
+
+  test("normalizePagesWithQuarantine parses each page once; every shape splits as before") {
+    val ev = eventJson("e1", "2025-05-01T00:00:00Z", false)
+    val pages = Seq(
+      s"""{"data":[$ev],"total":1,"per_page":50}""",
+      s"""{"events":[$ev,$ev]}""",
+      s"""{"items":[$ev]}""",
+      s"""{"results":[$ev]}""",
+      s"""[$ev,$ev,$ev]""",
+      "<html><body>502 Bad Gateway</body></html>",
+      """{"totally":"unrecognized","total":3}""",
+      s"""{"data":[$ev],"total":"many","per_page":{"n":50}}""")
+    // a file scan, not a local relation, which the optimizer folds away
+    val dir = java.nio.file.Files.createTempDirectory("graft-pages").toString
+    pages.toDF("payload").write.mode("overwrite").parquet(dir)
+    val df = spark.read.parquet(dir)
+    val (good, quarantined) = Flatten.normalizePagesWithQuarantine(df)
+
+    for (side <- Seq(good, quarantined)) {
+      val plan = side.queryExecution.optimizedPlan
+      val parses = plan.flatMap(_.expressions.flatMap(_.collect {
+        case j: JsonToStructs => j.schema.simpleString }))
+      assert(parses.sorted == Seq(ArrayType(Schemas.wistiaEventRaw).simpleString,
+        Schemas.wistiaEventPage.simpleString).sorted, plan)
+      val gated = plan.flatMap(_.expressions.flatMap(_.collect {
+        case CaseWhen(Seq((p, j: JsonToStructs)), None)
+            if p.isInstanceOf[StartsWith] && j.schema.isInstanceOf[ArrayType] => j }))
+      assert(gated.size == 1, plan)
+    }
+
+    val byPage = (f: DataFrame) => f.select("payload", "_rows").collect()
+      .map(r => r.getString(0) -> Option(r.get(1))).toMap
+    assert(byPage(Flatten.tagPages(df)) == byPage(perFieldTag(df)))
+    assert(good.count() == 9)
+    assert(quarantined.select("raw_payload").as[String].collect().toSet ==
+      Set(pages(5), pages(6)))
   }
 
   private def writeTemp(lines: Seq[String]): String = {

@@ -69,6 +69,55 @@ class HardeningSpec extends SparkSpec {
       "m2" -> java.sql.Timestamp.valueOf("2025-04-02 09:00:00")))
   }
 
+  test("advance (union + max) equals the join/greatest/merge form on every state shape") {
+    import graft.incr.Incremental
+    import graft.ops.Upsert
+    def joinForm(state: org.apache.spark.sql.DataFrame,
+                 batch: org.apache.spark.sql.DataFrame) = {
+      val observed = batch.groupBy(col("source").as("source_key"))
+        .agg(max(col("ts")).as("high_water"))
+      Upsert.merge(state,
+        observed.join(state.withColumnRenamed("high_water", "_old"),
+          Seq("source_key"), "left")
+          .select(col("source_key"), greatest(col("high_water"),
+            coalesce(col("_old"), lit("1970-01-01 00:00:00").cast("timestamp")))
+            .as("high_water")),
+        Seq("source_key"))
+    }
+    def ts(s: String) = Option(s).map(java.sql.Timestamp.valueOf)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("source_key", "high_water").as[(String, Option[java.sql.Timestamp])]
+        .collect().sortBy(_._1).toSeq
+    val state = Seq(
+      ("only_state", ts("2025-04-01 08:00:00")),
+      ("older_batch", ts("2025-04-03 12:00:00")),
+      ("newer_batch", ts("2025-04-01 09:00:00")),
+      ("null_batch", ts("2025-04-02 00:00:00")))
+      .toDF("source_key", "high_water")
+    val batch = Seq(
+      ("only_batch", ts("2025-04-02 10:00:00")),
+      ("only_batch", ts("2025-04-02 11:00:00")),
+      ("older_batch", ts("2025-04-02 12:00:00")),
+      ("newer_batch", ts("2025-04-04 09:00:00")),
+      ("newer_batch", None),
+      ("null_batch", None),
+      ("null_only_batch", None),
+      ("null_only_batch", None))
+      .toDF("source", "ts")
+    for (s <- Seq(Incremental.emptyState(spark), state)) {
+      val got = rows(Incremental.advance(s, batch, "source", "ts"))
+      assert(got == rows(joinForm(s, batch)))
+      assert(got.map(_._1).distinct.size == got.size)
+    }
+    val got = rows(Incremental.advance(state, batch, "source", "ts")).toMap
+    assert(got("only_state") == ts("2025-04-01 08:00:00"))
+    assert(got("older_batch") == ts("2025-04-03 12:00:00"), "never lowered")
+    assert(got("newer_batch") == ts("2025-04-04 09:00:00"))
+    assert(got("null_batch") == ts("2025-04-02 00:00:00"))
+    assert(got("null_only_batch") ==
+      Some(java.sql.Timestamp.from(java.time.Instant.EPOCH)))
+  }
+
   test("compactTable collapses small files; content unchanged") {
     val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString
     val table = s"$dir/t"

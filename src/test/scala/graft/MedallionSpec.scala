@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.Medallion
@@ -116,5 +118,58 @@ class MedallionSpec extends SparkSpec {
 
     val gold2 = Medallion.refreshDailyAgg(spark, l)
     assert(gold2.count() == 3, "re-running the gold refresh must be idempotent")
+  }
+
+  /** Spark jobs `body` launches. */
+  private def jobsOf(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try body
+    finally {
+      ListenerDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(l)
+    }
+    n.get
+  }
+
+  test("re-running a silver refresh appends nothing; an incremental run keeps its job budget") {
+    val l = Layout(java.nio.file.Files.createTempDirectory("graft-medallion").toString)
+    val done = Checkpoint(1L, None)
+    Medallion.writeBronzePages(spark, l, "m1", "2025-02-01", PullResult(Seq(
+      page(ev("a1", "2025-02-01T10:00:00Z", "m1", 0.5)),
+      """<html>503 Service Unavailable</html>"""), done, complete = true))
+    Medallion.writeBronzePages(spark, l, "m2", "2025-02-01", PullResult(Seq(
+      s"""[${ev("b1", "2025-02-01T11:00:00Z", "m2", 0.1)}]"""), done, complete = true))
+    Medallion.refreshFactEvents(spark, l)
+
+    // an incremental day: state, fact and quarantine all exist; overlap
+    // re-delivery (a1), new events and a new corrupt page
+    Medallion.writeBronzePages(spark, l, "m1", "2025-02-02", PullResult(Seq(
+      s"""{"items":[${ev("a1", "2025-02-01T10:00:00Z", "m1", 0.5)},
+         |${ev("a2", "2025-02-02T09:00:00Z", "m1", 0.7)}]}"""
+        .stripMargin.replaceAll("\n", ""),
+      """{"unknown":"envelope"}"""), done, complete = true))
+    Medallion.writeBronzePages(spark, l, "m2", "2025-02-02", PullResult(Seq(
+      s"""{"results":[${ev("b2", "2025-02-02T12:00:00Z", "m2", 0.0)}]}"""),
+      done, complete = true))
+    val jobs = jobsOf(Medallion.refreshFactEvents(spark, l))
+    // 11 measured on Spark 4.1.2 local[4] (19 when every consumer re-parsed
+    // the pages and each read inferred its schema); the headroom absorbs
+    // planner drift, not a re-parse or a schema-inference job
+    assert(jobs <= 13, s"incremental refreshFactEvents launched $jobs jobs")
+
+    def snapshot() = (
+      spark.read.parquet(l.factEvents).select("event_key").as[String].collect().sorted.toSeq,
+      spark.read.parquet(l.quarantine).select("raw_payload").as[String].collect().sorted.toSeq,
+      spark.read.parquet(l.state).as[(String, java.sql.Timestamp)].collect().sortBy(_._1).toSeq)
+    val before = snapshot()
+    assert(before._1 == Seq("a1", "a2", "b1", "b2"))
+    assert(before._2.size == 2)
+    Medallion.refreshFactEvents(spark, l)
+    assert(snapshot() == before, "re-running over unchanged bronze must append 0 rows")
   }
 }

@@ -23,6 +23,7 @@ per-round times, per-round ratios, and each engine's cross-round band
 movement is matched by the single-process DuckDB control's movement.
 """
 import json
+import math
 import subprocess
 import sys
 import time
@@ -64,6 +65,14 @@ def duck_round(names, oracles: dict, sf: str) -> dict:
     return res
 
 
+def band(xs):
+    """Cross-round max/min. NaN when any round is missing: max/min over a
+    list holding NaN depends on its order ([1.0, nan] gives 1.00)."""
+    if not xs or not all(math.isfinite(x) and x > 0 for x in xs):
+        return float("nan")
+    return max(xs) / min(xs)
+
+
 def main():
     prefixes = sys.argv[1]
     sf = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
@@ -86,20 +95,17 @@ def main():
         # negative timing that flows into the ratio column
         s = [sr.get(k, float("nan")) for sr in spark_rounds]
         d = [dr[n] for dr in duck_rounds]
-        band = (max(s) / min(s)) if min(s) > 0 else float("nan")
-        dband = (max(d) / min(d)) if min(d) > 0 else float("nan")
         rows.append({"query": n, "spark": s, "duck": d,
                      "ratio": [si / di if di > 0 and si > 0 else float("nan")
                                for si, di in zip(s, d)],
-                     "spark_band": band, "duck_band": dband})
+                     "spark_band": band(s), "duck_band": band(d)})
     # spark-only (no-oracle) subset members still get their band
     covered = {qkey(n) for n in duck_names}
     for k in sorted(spark_rounds[0]):
         if k not in covered:
-            s = [sr.get(k, -1.0) for sr in spark_rounds]
-            band = (max(s) / min(s)) if min(s) > 0 else float("nan")
+            s = [sr.get(k, float("nan")) for sr in spark_rounds]
             rows.append({"query": k + " (no oracle)", "spark": s,
-                         "duck": [], "ratio": [], "spark_band": band,
+                         "duck": [], "ratio": [], "spark_band": band(s),
                          "duck_band": float("nan")})
     print(json.dumps({"metric": "paired_bench", "sf": sf, "rounds": rounds,
                       "rows": rows}))

@@ -114,6 +114,91 @@ private[graft] object OracleGen {
     s"CAST($chain AS BIGINT)"
   }
 
+  /** `(doc_id, shingle)` rows of the word-trigram shingles of the
+    * `documents` rows matching `where` — the [[graft.text.TextDedup]]
+    * tokenization (split on `\s+`, documents under 3 tokens drop out).
+    */
+  def trigramShingles(where: String = "TRUE"): String =
+    s"""SELECT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
+       |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
+       |        FROM (SELECT doc_id, string_split_regex(text, '\\s+') AS t
+       |              FROM documents WHERE $where)
+       |        WHERE len(t) >= 3)""".stripMargin
+
+  /** The CTE list (no `WITH`) re-deriving
+    * [[graft.text.TextDedup.nearDupPairs]] over the `(doc_id, shingle)`
+    * rows of `shingles`, ending in `pairs(doc_a, doc_b, jaccard)`: the
+    * poly-hash affine MinHash ([[polyHash61]] once per distinct shingle
+    * string, fanned to 8 [[polyAffine]] minima), 2 bands of 4 '|'-joined
+    * values, band-equality candidates restricted by `sides` (over band
+    * rows `a`, `b`), and the exact Jaccard of the hashed shingle sets
+    * ≥ 0.5. `hsh` and `pairs` are `MATERIALIZED`: DuckDB otherwise
+    * inlines a CTE at every reference, re-running the per-character
+    * hash fold for sig, sizes and both verify sides (measured ~15× on
+    * the components statement).
+    */
+  def nearDupCtes(shingles: String,
+                  sides: String = "a.doc_id < b.doc_id"): String = {
+    val sig = (0 until 8).map(i => s"    MIN(${polyAffine("h", i)}) AS m$i")
+      .mkString(",\n")
+    def band(ms: Range) =
+      ms.map(i => s"CAST(m$i AS VARCHAR)").mkString(" || '|' || ")
+    s"""ush AS MATERIALIZED (
+       |  SELECT DISTINCT doc_id, shingle FROM ($shingles)),
+       |hsh AS MATERIALIZED (
+       |  SELECT DISTINCT u.doc_id, k.h FROM ush u
+       |  JOIN (SELECT shingle, ${polyHash61("shingle")} AS h
+       |        FROM (SELECT DISTINCT shingle FROM ush)) k
+       |    ON k.shingle = u.shingle),
+       |sig AS (
+       |  SELECT doc_id,
+       |$sig
+       |  FROM hsh GROUP BY doc_id),
+       |bands AS (
+       |  SELECT doc_id, ${band(0 until 4)} AS band, 0 AS band_id FROM sig
+       |  UNION ALL
+       |  SELECT doc_id, ${band(4 until 8)} AS band, 1 AS band_id FROM sig),
+       |cand AS (
+       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |  FROM bands a JOIN bands b
+       |    ON a.band = b.band AND a.band_id = b.band_id AND $sides),
+       |sizes AS (SELECT doc_id, COUNT(*) AS n FROM hsh GROUP BY doc_id),
+       |inter AS (
+       |  SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
+       |  FROM cand c
+       |  JOIN hsh sa ON sa.doc_id = c.doc_a
+       |  JOIN hsh sb ON sb.doc_id = c.doc_b AND sa.h = sb.h
+       |  GROUP BY c.doc_a, c.doc_b),
+       |pairs AS MATERIALIZED (
+       |  SELECT c.doc_a, c.doc_b,
+       |    CAST(i.n_inter AS DOUBLE) / (za.n + zb.n - i.n_inter) AS jaccard
+       |  FROM cand c
+       |  JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
+       |  JOIN sizes za ON za.doc_id = c.doc_a
+       |  JOIN sizes zb ON zb.doc_id = c.doc_b
+       |  WHERE CAST(i.n_inter AS DOUBLE) / (za.n + zb.n - i.n_inter) >= 0.5)""".stripMargin
+  }
+
+  /** [[nearDupCtes]] plus the component walk over its pairs, ending in
+    * `clusters(doc_id, cluster_id)` — every label reachable through the
+    * symmetric edge set, MIN per doc = the component minimum that
+    * [[graft.text.TextDedup.dedupClusters]] converges to. The walk is
+    * recursive: the enclosing statement must open with `WITH RECURSIVE`.
+    */
+  def clusterCtes(shingles: String): String =
+    s"""${nearDupCtes(shingles)},
+       |edges AS (
+       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
+       |  UNION
+       |  SELECT doc_b AS src, doc_a AS dst FROM pairs),
+       |walk AS (
+       |  SELECT src AS doc_id, src AS lab FROM edges
+       |  UNION
+       |  SELECT e.src AS doc_id, w.lab
+       |  FROM edges e JOIN walk w ON w.doc_id = e.dst),
+       |clusters AS (
+       |  SELECT doc_id, MIN(lab) AS cluster_id FROM walk GROUP BY doc_id)""".stripMargin
+
   /** The 60-bit simhash fold of per-token hash column `h` as an
     * aggregate SQL expression (one per-doc GROUP BY consumes it): bit i
     * is set iff strictly more tokens carry a 1 there than a 0 —

@@ -206,9 +206,6 @@ object GraftFunctions {
   def kmv_union_agg(c: Column, k: Int): Column =
     column(KmvUnionAgg(expr(c), k).toAggregateExpression())
 
-  def seeded_md5(s: Column, numSeeds: Int): Column =
-    column(SeededMd5(expr(s), numSeeds))
-
   /** Single-pass Aho-Corasick blocklist counter (see [[MultiMatchCounts]]):
     * element i of the returned `array<int>` is the non-overlapping greedy
     * count of `terms(i)` in `text`.
@@ -231,11 +228,6 @@ object GraftFunctions {
         s"$name must be a non-null literal integer, got " +
           s"${if (other == null) "NULL" else other.getClass.getSimpleName}")
     }
-  }
-
-  private[functions] def seededMd5FromSql(exprs: Seq[Expression]): Expression = {
-    require(exprs.size == 2, "seeded_md5(str, numSeeds)")
-    SeededMd5(exprs(0), litInt(exprs(1), "seeded_md5: numSeeds"))
   }
 
   private[functions] def lshBucketFromSql(exprs: Seq[Expression]): Expression = {
@@ -327,8 +319,6 @@ object GraftFunctions {
       "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "lsh_bucket", lshBucketFromSql, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "seeded_md5", seededMd5FromSql, "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "kgram_min_hash", kgramMinHashFromSql, "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

@@ -30,10 +30,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[LshBucket].getName, "lsh_bucket"),
       GraftFunctions.lshBucketFromSql _))
     ext.injectFunction((
-      FunctionIdentifier("seeded_md5"),
-      new ExpressionInfo(classOf[SeededMd5].getName, "seeded_md5"),
-      GraftFunctions.seededMd5FromSql _))
-    ext.injectFunction((
       FunctionIdentifier("kgram_min_hash"),
       new ExpressionInfo(classOf[KgramMinHash].getName, "kgram_min_hash"),
       GraftFunctions.kgramMinHashFromSql _))

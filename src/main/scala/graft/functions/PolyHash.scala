@@ -240,8 +240,8 @@ case class KgramPolyMinHash(child: Expression, k: Int)
 }
 
 /** `poly_hashes(s, numHashes)` — the affine MinHash signature family over
-  * ONE base hash, as a single array projection (aggregate over
-  * `element_at`, the [[SeededMd5]] shape).
+  * ONE base hash, as a single array projection (project it once per row,
+  * then aggregate over `element_at`).
   */
 case class PolyHashes(child: Expression, numHashes: Int)
     extends UnaryExpression with PolyHashInput {

@@ -4,6 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftplan.FreshPlan
+import org.apache.spark.sql.types.{ArrayType, LongType}
+
+import graft.functions.PolyHashMath
 
 /** Document deduplication family (SURVEY.md §2.4 A8 + north star):
   * exact, MinHash+LSH near-dup, n-gram Jaccard verification, SimHash.
@@ -14,10 +17,12 @@ import org.apache.spark.sql.graftplan.FreshPlan
   * bands → fewer, more-similar candidates); the exact-Jaccard verify runs
   * only on LSH candidates.
   *
-  * Hash choice: the MinHash rows use `md5(shingle || '#' || seed)` rather
-  * than xxhash64 — slightly slower, but bit-identical across engines, which
-  * makes the whole near-dup pipeline oracle-checkable in SQL. The SimHash
-  * path uses codegen'd xxhash64 (engine-internal, no oracle).
+  * Hash choice: ONE MinHash family, the 61-bit poly hash
+  * ([[graft.functions.PolyHashMath]]): one O(len) rolling hash per
+  * shingle fanned to k affine minima, codegen'd in Spark and plain SQL in
+  * DuckDB ([[graft.OracleGen.nearDupCtes]]), so every near-dup row is
+  * hash-exact oracle-checked. SimHash keeps its md5-prefix token hash
+  * (its own operator, also SQL-expressible).
   */
 object TextDedup {
 
@@ -78,56 +83,21 @@ object TextDedup {
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"),
         col("col").as("_h"))
 
-  /** MinHash signature: `numHashes` per-doc minima of seeded md5 prefixes.
-    * One hash-aggregate on doc_id; signature columns are m0..m{k-1}.
-    * This is the ORACLE twin (bit-identical in DuckDB SQL); production
-    * pipelines should use [[minhashSignaturesFast]].
+  /** MinHash signature: `numHashes` per-doc minima of the codegen'd
+    * poly-hash affine family ([[graft.functions.PolyHashes]] — ONE O(len)
+    * rolling hash per shingle, fanned to `numHashes` affine transforms).
+    * One hash-aggregate on doc_id; signature columns are m0..m{k-1},
+    * BIGINT.
     */
   def minhashSignatures(shingleDf: DataFrame, numHashes: Int = 8): DataFrame = {
-    val aggs = (0 until numHashes).map { i =>
-      min(substring(md5(concat(col("shingle"), lit(s"#$i"))), 1, 16)).as(s"m$i")
-    }
-    shingleDf.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Production MinHash signature: the codegen'd poly-hash affine family
-    * ([[graft.functions.PolyHashes]] — ONE O(len) rolling hash per
-    * shingle, fanned to `numHashes` affine transforms). Same shape as
-    * [[minhashSignatures]] (m0..m{k-1}, here BIGINT) but no md5 digest +
-    * hex substring per seed — the md5 form was the largest data-path cost
-    * in the bench (the SimHash precedent measured ~8× for the same
-    * switch). Unlike the xxhash64 variant this replaced (round 17), the
-    * poly hash IS SQL-expressible in DuckDB (list_reduce in HUGEINT mod
-    * 2^61−1), so fast-path queries are hash-exact oracle-checked, not
-    * rows-only.
-    */
-  def minhashSignaturesFast(shingleDf: DataFrame, numHashes: Int = 8): DataFrame = {
     val withH = shingleDf.select(col("doc_id"),
-      graft.functions.PolyHashMath.polyHashesCol(col("shingle"), numHashes)
-        .as("_ph"))
+      PolyHashMath.polyHashesCol(col("shingle"), numHashes).as("_ph"))
     val aggs = (0 until numHashes).map { i =>
       min(element_at(col("_ph"), i + 1)).as(s"m$i")
     }
     withH.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** LSH banding: split the signature into `numBands` concatenated bands
-    * and bucket per (band_id, band value). Returns distinct candidate
-    * pairs with doc_a < doc_b. Band cells are '|'-delimited so
-    * variable-width values (the BIGINT fast signatures) cannot alias
-    * across cell boundaries; the fixed-width md5 path is unaffected.
-    *
-    * Shape: ONE pass over `signatures` — bands posexplode off each row,
-    * one shuffle to (band_id, band) buckets, and the candidate pairs
-    * expand in-partition from the sorted per-bucket id list. The earlier
-    * union + self-join form consumed the signature plan four times (two
-    * union branches × two join sides) and Spark re-executed the whole
-    * upstream shingle scan for each — 4× the dominant cost. Pair count is
-    * still Σ_band (bucket size)², controlled by band width; per-task
-    * memory is O(bucket size), which the LSH design bounds (run
-    * [[exactDedup]] first so identical-text floods can't create a
-    * degenerate bucket).
-    */
   /** In-partition ordered-pair expansion over a sorted per-bucket array
     * `col`: every (a, b) with a strictly before b, projected by `inner`
     * (an expression over struct/scalar lambda vars `a` and `b`). The
@@ -150,6 +120,22 @@ object TextDedup {
     }
   }
 
+  /** LSH banding: split the signature into `numBands` concatenated bands
+    * and bucket per (band_id, band value). Returns distinct candidate
+    * pairs with doc_a < doc_b. Band cells are '|'-delimited so the
+    * variable-width BIGINT values cannot alias across cell boundaries.
+    *
+    * Shape: ONE pass over `signatures` — bands posexplode off each row,
+    * one shuffle to (band_id, band) buckets, and the candidate pairs
+    * expand in-partition from the sorted per-bucket id list. The earlier
+    * union + self-join form consumed the signature plan four times (two
+    * union branches × two join sides) and Spark re-executed the whole
+    * upstream shingle scan for each — 4× the dominant cost. Pair count is
+    * still Σ_band (bucket size)², controlled by band width; per-task
+    * memory is O(bucket size), which the LSH design bounds (run
+    * [[exactDedup]] first so identical-text floods can't create a
+    * degenerate bucket).
+    */
   def lshCandidates(signatures: DataFrame, numHashes: Int = 8,
                     numBands: Int = 2): DataFrame =
     signatures
@@ -186,62 +172,61 @@ object TextDedup {
           (col("na") + col("nb") - col("n_inter"))).as("jaccard"))
   }
 
-  /** Fused near-dup pipeline: ONE pass over the corpus. The staged form
-    * ([[minhashSignatures]] → [[lshCandidates]] → [[jaccardVerify]])
-    * consumes the shingle subtree four times (signature branch + both
-    * verify sides + sizes) and Spark re-executes the tokenize/explode scan
-    * for each — exchange reuse never fires across the differing aggregates.
-    * Here a single groupBy(doc_id) emits the minhash minima AND the
-    * distinct shingle set; the set rides into the band buckets, so the
-    * exact Jaccard is computed at pair-expansion time from data already
-    * in-partition. Plan: scan → explode → hash-agg(doc_id) → posexplode
-    * bands → hash-agg(band) → in-partition pair expand → distinct. Three
-    * shuffles, zero joins, one scan.
+  /** Persistable near-dup signature index over a corpus: one row per
+    * (doc, LSH band) with the band value and the doc's distinct shingle
+    * set `sh` — everything [[nearDupAgainstIndex]] needs to both
+    * CANDIDATE (band equality) and VERIFY (exact Jaccard) an incoming
+    * document without touching the corpus text again. It is also the
+    * shared first half of [[nearDupPairs]]. A MinHash signature depends
+    * only on its own document's shingles, so index rows built
+    * corpus-split by corpus-split are identical to a single full build —
+    * the index can be appended batch by batch.
     *
-    * Per-bucket memory grows from O(ids) to O(ids × shingle set); LSH
-    * bucket sizes are bounded by band width, and identical-text floods
-    * must be removed first via [[exactDedup]] (same caveat as
-    * [[lshCandidates]]).
-    */
-  /** Per-document banded LSH profile: one row per (doc, band) carrying the
-    * band value AND the document's (possibly hashed) shingle set. This is
-    * the shared first half of the fused pipeline — and, persisted, it IS
-    * the near-dup signature index an incremental pipeline probes
-    * ([[signatureIndex]] / [[nearDupAgainstIndex]]).
-    *
-    * The k seeded hashes are PROJECTED once per shingle row as an array
+    * The k affine hashes are PROJECTED once per shingle row as an array
     * (one expression evaluation), then each min-agg reads its element —
     * k hash computations per row, not k per aggregate child evaluation.
-    * `shingleKey` is what the verify set holds per shingle: the oracle
-    * twin keeps raw strings (SQL-expressible Jaccard); the production
-    * path keys by xxhash64, shrinking what the band shuffle carries from
-    * ~n-gram string width to 8 bytes per distinct shingle.
+    * `sh` holds each shingle's poly_hash61 key (`array<bigint>`), not the
+    * n-gram text: the band shuffle carries 8 bytes per distinct shingle,
+    * and the Jaccard of the hashed sets equals the exact n-gram Jaccard
+    * up to 61-bit collisions (~n²/2⁶¹, negligible at any corpus size
+    * that fits an LSH bucket) — the SQL twin hashes identically, so even
+    * a collision agrees across engines.
     */
-  private def bandedProfiles(docs: DataFrame,
-                             hashArray: (org.apache.spark.sql.Column, Int) =>
-                               org.apache.spark.sql.Column,
-                             numHashes: Int, numBands: Int,
-                             shingleKey: org.apache.spark.sql.Column =>
-                               org.apache.spark.sql.Column): DataFrame = {
+  def signatureIndex(docs: DataFrame, numHashes: Int = 8,
+                     numBands: Int = 2): DataFrame = {
     val profAggs = (0 until numHashes)
       .map(i => min(element_at(col("_h"), i + 1)).as(s"m$i")) :+
-      collect_set(shingleKey(col("shingle"))).as("sh")
+      collect_set(PolyHashMath.polyHash61Col(col("shingle"))).as("sh")
     shinglesRaw(docs)
       .select(col("doc_id"), col("shingle"),
-        hashArray(col("shingle"), numHashes).as("_h"))
+        PolyHashMath.polyHashesCol(col("shingle"), numHashes).as("_h"))
       .groupBy(col("doc_id")).agg(profAggs.head, profAggs.tail: _*)
       .select(col("doc_id"), col("sh"),
         posexplode(array(bandCols(numHashes, numBands): _*)))
       .withColumnsRenamed(Map("pos" -> "band_id", "col" -> "band"))
   }
 
-  private def nearDupFused(docs: DataFrame, threshold: Double,
-                           hashArray: (org.apache.spark.sql.Column, Int) =>
-                             org.apache.spark.sql.Column,
-                           numHashes: Int = 8, numBands: Int = 2,
-                           shingleKey: org.apache.spark.sql.Column =>
-                             org.apache.spark.sql.Column = identity)
-      : DataFrame = {
+  /** Full near-dup pipeline: shingle → minhash → LSH candidates → exact
+    * Jaccard ≥ threshold, in ONE pass over the corpus. The staged form
+    * ([[minhashSignatures]] → [[lshCandidates]] → [[jaccardVerify]])
+    * consumes the shingle subtree four times (signature branch + both
+    * verify sides + sizes) and Spark re-executes the tokenize/explode scan
+    * for each — exchange reuse never fires across the differing aggregates.
+    * Here a single groupBy(doc_id) ([[signatureIndex]]) emits the minhash
+    * minima AND the distinct shingle set; the set rides into the band
+    * buckets, so the exact Jaccard is computed at pair-expansion time
+    * from data already in-partition. Plan: scan → explode →
+    * hash-agg(doc_id) → posexplode bands → hash-agg(band) → in-partition
+    * pair expand → distinct. Three shuffles, zero joins, one scan.
+    *
+    * Per-bucket memory grows from O(ids) to O(ids × shingle set); LSH
+    * bucket sizes are bounded by band width, and identical-text floods
+    * must be removed first via [[exactDedup]] (same caveat as
+    * [[lshCandidates]]). Identical texts always pair: equal shingle sets
+    * give equal signatures, hence equal bands. Oracle:
+    * [[graft.OracleGen.nearDupCtes]] (q30/q64).
+    */
+  def nearDupPairs(docs: DataFrame, threshold: Double = 0.5): DataFrame = {
     // Contract boundary: the staged form's inner verify join omits
     // zero-intersection candidates, the fused form emits them with
     // jaccard 0.0 — any POSITIVE threshold filters both identically
@@ -249,7 +234,7 @@ object TextDedup {
     require(threshold > 0,
       s"nearDup threshold must be > 0 (zero-overlap pairs are not " +
         s"near-dups and are not materialized), got $threshold")
-    bandedProfiles(docs, hashArray, numHashes, numBands, shingleKey)
+    signatureIndex(docs)
       .groupBy(col("band_id"), col("band"))
       .agg(sort_array(collect_list(struct(col("doc_id"), col("sh")))).as("items"))
       .filter(size(col("items")) > 1)
@@ -263,62 +248,6 @@ object TextDedup {
       .distinct()
       .filter(col("jaccard") >= threshold)
   }
-
-  /** Full near-dup pipeline: shingle → minhash → LSH candidates → exact
-    * Jaccard ≥ threshold (fused single-pass plan, see [[nearDupFused]]).
-    * Oracle-checkable md5 form; production entry point is
-    * [[nearDupPairsFast]].
-    */
-  def nearDupPairs(docs: DataFrame, threshold: Double = 0.5): DataFrame =
-    nearDupFused(docs, threshold,
-      (s, k) => graft.functions.GraftFunctions.seeded_md5(s, k))
-
-  /** Production near-dup pipeline: same shape as [[nearDupPairs]] but with
-    * the poly-hash affine signatures ([[graft.functions.PolyHashes]] —
-    * one rolling hash per shingle, not k md5 digests), and the verify
-    * sets hold poly_hash61(shingle) keys instead of raw n-gram strings —
-    * the Jaccard of the hashed sets equals the exact n-gram Jaccard up to
-    * 61-bit collisions (~n²/2⁶¹, negligible at any corpus size that fits
-    * an LSH bucket), and the band shuffle carries 8 bytes per distinct
-    * shingle instead of the n-gram text. Only the LSH recall lottery
-    * (which random minima band together) differs from the md5 path.
-    * Identical texts always pair: equal shingle sets give equal
-    * signatures, hence equal bands. The poly hash is SQL-expressible
-    * (unlike the xxhash64 it replaced round 17), so this production path
-    * is hash-exact oracle-checked end to end (q64).
-    */
-  def nearDupPairsFast(docs: DataFrame, threshold: Double = 0.5): DataFrame =
-    nearDupFused(docs, threshold,
-      (s, k) => graft.functions.PolyHashMath.polyHashesCol(s, k),
-      shingleKey = s => graft.functions.PolyHashMath.polyHash61Col(s))
-
-  /** Persistable near-dup signature index over a corpus: one row per
-    * (doc, LSH band) with the band value and the doc's distinct shingle
-    * set — everything [[nearDupAgainstIndex]] needs to both CANDIDATE
-    * (band equality) and VERIFY (exact Jaccard) an incoming document
-    * without touching the corpus text again. A MinHash signature depends
-    * only on its own document's shingles, so index rows built corpus-split
-    * by corpus-split are identical to a single full build — the index can
-    * be appended batch by batch.
-    *
-    * Oracle-checkable md5 form; [[signatureIndexFast]] is the production
-    * twin (xxhash64 signatures, 8-byte hashed shingle keys).
-    */
-  def signatureIndex(docs: DataFrame, numHashes: Int = 8,
-                     numBands: Int = 2): DataFrame =
-    bandedProfiles(docs,
-      (s, k) => graft.functions.GraftFunctions.seeded_md5(s, k),
-      numHashes, numBands, identity)
-
-  /** Production signature index: same shape as [[signatureIndex]] with
-    * poly-hash affine signatures and poly_hash61 shingle keys (see
-    * [[nearDupPairsFast]] for the equivalence argument).
-    */
-  def signatureIndexFast(docs: DataFrame, numHashes: Int = 8,
-                         numBands: Int = 2): DataFrame =
-    bandedProfiles(docs,
-      (s, k) => graft.functions.PolyHashMath.polyHashesCol(s, k),
-      numHashes, numBands, s => graft.functions.PolyHashMath.polyHash61Col(s))
 
   /** Incremental near-dup: which documents of a NEW batch near-duplicate
     * something already in the corpus — without re-pairing the corpus.
@@ -341,6 +270,15 @@ object TextDedup {
                           threshold: Double): DataFrame = {
     require(threshold > 0,
       s"nearDup threshold must be > 0, got $threshold")
+    // a persisted index is input from outside the run: an md5-era index
+    // (raw n-gram strings in `sh`, md5-hex bands) would probe poly-hash
+    // bands and silently pair nothing
+    val sh = index.schema.find(_.name == "sh").map(_.dataType)
+    require(sh.exists { case ArrayType(LongType, _) => true; case _ => false },
+      "nearDupAgainstIndex: index.sh must be array<bigint> (poly_hash61 " +
+        s"shingle keys), got ${sh.fold("no sh column")(_.simpleString)} — " +
+        "array<string> is the retired md5 signature-index format; rebuild " +
+        "the index with signatureIndex")
     val probe = broadcast(batchIndex.select(col("band_id"), col("band"),
       col("doc_id").as("doc_b"), col("sh").as("sh_b")))
     index
@@ -743,12 +681,9 @@ object TextDedup {
     docs.join(losers, Seq("doc_id"), "left_anti")
   }
 
-  /** End-to-end near-dup removal with the production (xxhash64) pair
-    * pipeline; the oracle-checkable md5 twin is
-    * `survivors(docs, nearDupPairs(docs, t))`.
-    */
+  /** End-to-end near-dup removal: [[survivors]] of [[nearDupPairs]]. */
   def dedupedCorpus(docs: DataFrame, threshold: Double = 0.5): DataFrame =
-    survivors(docs, nearDupPairsFast(docs, threshold))
+    survivors(docs, nearDupPairs(docs, threshold))
 
   /** SimHash-64 per document (engine-internal hash; no SQL oracle).
     * Per token: xxhash64 → each of the 64 bits votes ±1; the sign vector is

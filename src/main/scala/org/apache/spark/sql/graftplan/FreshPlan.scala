@@ -50,9 +50,9 @@ object FreshPlan {
 
   /** [[checkpointFresh]] that SKIPS the re-materialization when `df` is
     * already a materialized checkpoint (a `LogicalRDD`, optionally under
-    * one narrow projection) — then the blocks/files exist and a second
-    * checkpoint would copy them verbatim; only the stat-strip re-wrap is
-    * applied. Round 21: the inline maintenance compositions
+    * one deterministic projection) — then the blocks/files exist and a
+    * second checkpoint would copy them verbatim; only the stat-strip
+    * re-wrap is applied. Round 21: the inline maintenance compositions
     * (q188/q189/q201/q209 feed `dedupClusters` output STRAIGHT into
     * resume/forget) were paying a full label-store copy inside
     * `validatedLabeling` for state materialized one call earlier.
@@ -64,8 +64,11 @@ object FreshPlan {
     val alreadyMat = checkpointDir.isEmpty && (
       df.queryExecution.analyzed match {
         case _: org.apache.spark.sql.execution.LogicalRDD => true
+        // a non-deterministic projection (rand(), uuid()) re-evaluates
+        // on every action, so it is not materialized state
         case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
-          p.child.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+          p.child.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD] &&
+            p.projectList.forall(_.deterministic)
         case _ => false
       })
     if (alreadyMat) rewrap(df) else checkpointFresh(df, checkpointDir)

@@ -90,6 +90,26 @@ class FreshPlanSpec extends SparkSpec {
     assert(rddDirs(dirB) >= 1, "root B must hold B's surviving cut")
   }
 
+  test("freshIfMaterialized copies a non-deterministic projection over a " +
+      "checkpoint") {
+    val base = spark.range(200).toDF("id").localCheckpoint()
+    // rand() replays its per-partition seed over an unchanged RDD, so the
+    // UUID column is what exposes a pass-through that re-evaluates
+    val uuid = udf(() => java.util.UUID.randomUUID().toString)
+      .asNondeterministic()
+    val df = FreshPlan.freshIfMaterialized(
+      base.select(col("id"), rand().as("r"), uuid().as("u")), None)
+    def vals = df.orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSeq
+    assert(vals == vals,
+      "a non-deterministic projection must be evaluated once, not per action")
+    // the deterministic shortcut is kept: no copy, same rows
+    val det = FreshPlan.freshIfMaterialized(
+      base.select((col("id") * 2).as("id")), None)
+    assert(det.collect().map(_.getLong(0)).sorted.toSeq ==
+      (0L until 200L).map(_ * 2))
+  }
+
   test("local mode (None) is unchanged by the chain machinery") {
     val chain = FreshPlan.chain(None)
     val out = chain.cut(chain.invariant(spark.range(5).toDF("id")))

@@ -240,42 +240,14 @@ class FunctionsSpec extends SparkSpec {
     // session, so this is the testable surface of the config-injection
     // path.
     val registry = spark.sessionState.functionRegistry.clone()
-    for (fn <- Seq("cosine_similarity", "lsh_bucket", "seeded_md5"))
+    for (fn <- Seq("cosine_similarity", "lsh_bucket", "kgram_min_hash"))
       registry.dropFunction(FunctionIdentifier(fn))
     val m = classOf[SparkSessionExtensions].getDeclaredMethods
       .find(_.getName == "registerFunctions").get
     m.invoke(ext, registry)
-    for (fn <- Seq("cosine_similarity", "lsh_bucket", "seeded_md5"))
+    for (fn <- Seq("cosine_similarity", "lsh_bucket", "kgram_min_hash"))
       assert(registry.functionExists(FunctionIdentifier(fn)),
         s"$fn missing after extension injection")
-  }
-
-  test("seeded_md5 is bit-identical to the composed built-in form") {
-    val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    val composed = (0 until 8).map(i =>
-      substring(md5(concat(col("text"), lit(s"#$i"))), 1, 16).as(s"c$i"))
-    val diff = docs.select(
-      (GraftFunctions.seeded_md5(col("text"), 8).as("h") +: composed): _*)
-      .filter((0 until 8)
-        .map(i => element_at(col("h"), i + 1) =!= col(s"c$i"))
-        .reduce(_ || _))
-    assert(diff.count() == 0,
-      "seeded_md5 must equal substr(md5(s || '#i'), 1, 16) per seed")
-  }
-
-  test("seeded_md5: SQL call, null passthrough, type guard") {
-    GraftFunctions.registerAll(spark)
-    val r = spark.sql("SELECT seeded_md5('abc', 2) AS h").collect().head
-      .getSeq[String](0)
-    assert(r.length == 2 && r.forall(_.length == 16))
-    val n = spark.sql("SELECT seeded_md5(CAST(NULL AS STRING), 2) AS h")
-      .collect().head
-    assert(n.isNullAt(0), "NULL input must yield NULL, not an array")
-    val err = intercept[Exception] {
-      spark.sql("SELECT seeded_md5(42, 2)").collect()
-    }
-    assert(err.getMessage.contains("seeded_md5") ||
-      err.getMessage.contains("DATATYPE_MISMATCH"))
   }
 
   test("KgramMinHash is bit-identical to the HOF form (ASCII, multi-byte, short, empty, null)") {

@@ -357,12 +357,13 @@ class StreamingSpec extends SparkSpec {
     // c1..c5 mid-document; its near-dup 15 breaks the run, so 15 is
     // clean) — the fixture that catches decontaminating BEFORE dedup:
     // dropped early, 14 never indexes, 15 never pairs, and 15 wrongly
-    // survives. (Mid-position chosen so the pair survives the MinHash
-    // band lottery — verified against the seeded-md5 family directly.)
-    val d14 = "the a row " + (1 to 27).map(i => s"d$i").mkString(" ") +
-      " c1 c2 c3 c4 c5 " + (28 to 52).map(i => s"d$i").mkString(" ")
-    val d15 = "the a row " + (1 to 27).map(i => s"d$i").mkString(" ") +
-      " c1 c2 MUTC c4 c5 " + (28 to 52).map(i => s"d$i").mkString(" ")
+    // survives. (Insertion offset chosen so the pair survives the
+    // MinHash band lottery of the poly-hash family: at offsets 7, 15 and
+    // 35 the two docs share a band, at 27 they do not.)
+    val d14 = "the a row " + (1 to 15).map(i => s"d$i").mkString(" ") +
+      " c1 c2 c3 c4 c5 " + (16 to 52).map(i => s"d$i").mkString(" ")
+    val d15 = "the a row " + (1 to 15).map(i => s"d$i").mkString(" ") +
+      " c1 c2 MUTC c4 c5 " + (16 to 52).map(i => s"d$i").mkString(" ")
     mk((100L, "bq1 bq2 c1 c2 c3 c4 c5 bq3")).write.parquet(bench)
     def runIngest(cp: String): Unit = {
       val q = CorpusStream.corpusBuildIngestQuery(spark, src, bench, idx,

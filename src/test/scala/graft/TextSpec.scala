@@ -35,13 +35,13 @@ class TextSpec extends SparkSpec {
     assert(pairs == Set((1L, 2L)))
   }
 
-  test("fast (poly-hash) near-dup pipeline: same verify semantics as the md5 twin") {
+  test("identical texts always pair at jaccard 1.0; unrelated docs never pair") {
     val base = (1 to 60).map(i => s"tok$i").mkString(" ")
     val mutated = (1 to 60).map(i => if (i == 30) "CHANGED" else s"tok$i").mkString(" ")
     val other = (100 to 160).map(i => s"w$i").mkString(" ")
     val exactCopy = base
     val d = docs((1L, base), (2L, mutated), (3L, other), (4L, exactCopy))
-    val pairs = TextDedup.nearDupPairsFast(d, threshold = 0.5)
+    val pairs = TextDedup.nearDupPairs(d, threshold = 0.5)
       .select("doc_a", "doc_b", "jaccard").as[(Long, Long, Double)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
     // identical texts have identical signatures → ALWAYS candidates, j=1.0
@@ -51,13 +51,13 @@ class TextSpec extends SparkSpec {
     assert(pairs.keys.forall { case (a, b) => a < b && !Set(a, b).contains(3L) })
   }
 
-  test("fast signatures are deterministic BIGINTs with the m0..m7 shape") {
+  test("minhash signatures are deterministic BIGINTs with the m0..m7 shape") {
     val d = docs((1L, "a b c d e"), (2L, "f g h i j"))
     val sh = TextDedup.shingles(d)
-    val s1 = TextDedup.minhashSignaturesFast(sh).orderBy("doc_id").collect()
-    val s2 = TextDedup.minhashSignaturesFast(sh).orderBy("doc_id").collect()
+    val s1 = TextDedup.minhashSignatures(sh).orderBy("doc_id").collect()
+    val s2 = TextDedup.minhashSignatures(sh).orderBy("doc_id").collect()
     assert(s1.sameElements(s2), "poly-hash signatures must be deterministic")
-    val schema = TextDedup.minhashSignaturesFast(sh).schema
+    val schema = TextDedup.minhashSignatures(sh).schema
     assert(schema.fieldNames.toSeq == ("doc_id" +: (0 until 8).map(i => s"m$i")))
     assert(schema.fields.drop(1).forall(_.dataType ==
       org.apache.spark.sql.types.LongType))
@@ -222,12 +222,7 @@ class TextSpec extends SparkSpec {
       TextDedup.lshCandidates(TextDedup.minhashSignatures(sh)), sh)
       .filter(col("jaccard") >= 0.5).collect().map(key).toSet
     val fused = TextDedup.nearDupPairs(d, 0.5).collect().map(key).toSet
-    assert(fused == staged, "fused md5 pipeline must equal the staged form")
-    val stagedFast = TextDedup.jaccardVerify(
-      TextDedup.lshCandidates(TextDedup.minhashSignaturesFast(sh)), sh)
-      .filter(col("jaccard") >= 0.5).collect().map(key).toSet
-    val fusedFast = TextDedup.nearDupPairsFast(d, 0.5).collect().map(key).toSet
-    assert(fusedFast == stagedFast, "fused poly-hash pipeline must equal staged")
+    assert(fused == staged, "fused pipeline must equal the staged form")
     assert(fused.nonEmpty, "generator must actually produce near-dups")
   }
 
@@ -257,6 +252,23 @@ class TextSpec extends SparkSpec {
     assert(incr.nonEmpty, "generator must actually produce cross-side dups")
   }
 
+  test("nearDupAgainstIndex rejects an md5-era index (sh: array<string>)") {
+    val d = docs((1L, "a b c d e f"), (2L, "a b c d e f"))
+    val idx = TextDedup.signatureIndex(d)
+    // the retired format: md5-hex bands, raw n-gram strings in sh
+    val old = Seq((1L, 0, "0123456789abcdef", Seq("a b c", "b c d")))
+      .toDF("doc_id", "band_id", "band", "sh")
+    val err = intercept[IllegalArgumentException] {
+      TextDedup.nearDupAgainstIndex(old, idx, 0.5)
+    }
+    assert(err.getMessage.contains("index.sh must be array<bigint>") &&
+      err.getMessage.contains("array<string>") &&
+      err.getMessage.contains("md5"), err.getMessage)
+    // the current format probes without complaint (identical texts
+    // always share their bands)
+    assert(TextDedup.nearDupAgainstIndex(idx, idx, 0.5).count() == 2)
+  }
+
   test("signatureIndex built in appends equals the single full build") {
     val d = docs((1L, "a b c d e f"), (2L, "a b c d e g"), (3L, "x y z w v u"))
     val base = d.filter(col("doc_id") <= 2)
@@ -265,7 +277,7 @@ class TextSpec extends SparkSpec {
       .select(col("doc_id"), col("band_id"), col("band"),
         sort_array(col("sh")).as("sh"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2),
-        r.getSeq[String](3))).toSet
+        r.getSeq[Long](3))).toSet
     assert(rows(TextDedup.signatureIndex(d)) ==
       (rows(TextDedup.signatureIndex(base)) ++
         rows(TextDedup.signatureIndex(batch))),

@@ -11,6 +11,8 @@ Usage:
    SQL, and compares against the Spark parquet: row count, column names
    (sorted), and cell values (rows sorted by all columns, exact match; floats
    compared exactly first, then with 1e-9 rel tolerance reported separately).
+   Each PASS/FAIL line carries the oracle's DuckDB time; the five slowest
+   oracles are listed at the end.
 
 Exit 0 iff every query with an oracle matches exactly.
 """
@@ -19,6 +21,7 @@ import math
 import re
 import subprocess
 import sys
+import time
 from pathlib import Path
 
 import duckdb
@@ -103,24 +106,29 @@ def main():
 
     n_fail = 0
     results = {}
+    secs = {}
     for name in sorted(oracle):
         spark_path = Path(out_dir) / name
         if not spark_path.exists():
             print(f"FAIL {name}: no spark output")
             n_fail += 1
             continue
+        t0 = time.monotonic()
         try:
             want = con.execute(oracle[name]).fetch_arrow_table()
         except Exception as e:
-            print(f"FAIL {name}: oracle SQL error: {e}")
+            secs[name] = time.monotonic() - t0
+            print(f"FAIL {name} [duckdb {secs[name]:.2f}s]: oracle SQL error: {e}")
             n_fail += 1
             continue
+        secs[name] = time.monotonic() - t0
+        tag = f"{name} [duckdb {secs[name]:.2f}s]"
         got = con.execute(
             f"SELECT * FROM read_parquet('{spark_path}/*.parquet')").fetch_arrow_table()
 
         wcols, gcols = sorted(want.column_names), sorted(got.column_names)
         if wcols != gcols:
-            print(f"FAIL {name}: columns differ\n  oracle: {wcols}\n  spark:  {gcols}")
+            print(f"FAIL {tag}: columns differ\n  oracle: {wcols}\n  spark:  {gcols}")
             n_fail += 1
             continue
         type_bad = []
@@ -131,11 +139,11 @@ def main():
                 type_bad.append((c, gt, wt))
         if type_bad:
             for c, gt, wt in type_bad:
-                print(f"FAIL {name}: col {c} TYPE spark={gt} oracle={wt}")
+                print(f"FAIL {tag}: col {c} TYPE spark={gt} oracle={wt}")
             n_fail += 1
             continue
         if want.num_rows != got.num_rows:
-            print(f"FAIL {name}: rows oracle={want.num_rows} spark={got.num_rows}")
+            print(f"FAIL {tag}: rows oracle={want.num_rows} spark={got.num_rows}")
             n_fail += 1
             continue
 
@@ -163,13 +171,13 @@ def main():
         results[name] = status
         if status == "MISMATCH":
             i, c, a, b = bad
-            print(f"FAIL {name}: row {i} col {c}: spark={a!r} oracle={b!r}")
+            print(f"FAIL {tag}: row {i} col {c}: spark={a!r} oracle={b!r}")
             n_fail += 1
         elif status == "close":
             i, c, a, b = bad
-            print(f"WARN {name}: float-close-but-not-exact row {i} col {c}: spark={a!r} oracle={b!r}")
+            print(f"WARN {tag}: float-close-but-not-exact row {i} col {c}: spark={a!r} oracle={b!r}")
         else:
-            print(f"PASS {name}: {want.num_rows} rows exact")
+            print(f"PASS {tag}: {want.num_rows} rows exact")
 
     # queries without oracle: rows-only check
     for p in sorted(Path(out_dir).iterdir()):
@@ -177,7 +185,10 @@ def main():
             n = con.execute(f"SELECT count(*) FROM read_parquet('{p}/*.parquet')").fetchone()[0]
             print(f"INFO {p.name}: no oracle, {n} rows")
 
-    print(f"\n{len(results) - n_fail}/{len(results)} oracle queries pass")
+    slowest = sorted(secs.items(), key=lambda kv: -kv[1])[:5]
+    print("\nslowest oracles (duckdb s): " +
+          ", ".join(f"{n} {t:.2f}" for n, t in slowest))
+    print(f"{len(results) - n_fail}/{len(results)} oracle queries pass")
     sys.exit(1 if n_fail else 0)
 
 

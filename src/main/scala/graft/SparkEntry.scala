@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftplan.FreshPlan
 
 import graft.incr.Incremental
 import graft.multimodal.Multimodal
@@ -631,8 +632,10 @@ object SparkEntry {
       val isOld = (c: org.apache.spark.sql.Column) => pmod(c, lit(10)) < 8
       val oldPairs = allPairs.filter(isOld(col("doc_a")) && isOld(col("doc_b")))
       val newPairs = allPairs.filter(!(isOld(col("doc_a")) && isOld(col("doc_b"))))
-      TextDedup.dedupClustersResume(
+      val out = TextDedup.dedupClustersResume(
         TextDedup.dedupClusters(oldPairs), newPairs)
+      FreshPlan.release(allPairs) // the operators checkpointed all they read
+      out
     }),
     // A8 extended — the DELETE half of cluster maintenance (new r14):
     // a takedown set (doc_id % 7 == 3) is forgotten from the persisted
@@ -663,11 +666,13 @@ object SparkEntry {
           .join(ids.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"),
             "left_semi")
       }
-      TextDedup.dedupClustersForget(
+      val out = TextDedup.dedupClustersForget(
         TextDedup.dedupClusters(allPairs),
         docs,
         docs.filter(pmod(col("doc_id"), lit(7)) === 3).select(col("doc_id")),
         restrictTo)
+      FreshPlan.release(allPairs) // the operators checkpointed all they read
+      out
     }),
     // North star corpus prep: sequence packing — concatenate-then-chunk
     // token offsets and pack ids, windowed per hash shard.
@@ -2014,16 +2019,18 @@ object SparkEntry {
       // cross-run StateCache persistence reverted as precomputation).
       // Cosine pair generation — the dominant cost — runs once; history
       // and delta are filters of the one materialized pair set.
-      val pairs = Similarity.nearDupWithinLabel(t(s, dir, "embeddings"),
+      val allPairs = Similarity.nearDupWithinLabel(t(s, dir, "embeddings"),
         threshold = 0.3)
         .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
         .localCheckpoint()
       val isOld = (c: org.apache.spark.sql.Column) => pmod(c, lit(10)) < 8
-      val oldPairs = pairs.filter(isOld(col("doc_a")) && isOld(col("doc_b")))
-      val newPairs = pairs.filter(!(isOld(col("doc_a")) && isOld(col("doc_b"))))
-      TextDedup.dedupClustersResume(
+      val oldPairs = allPairs.filter(isOld(col("doc_a")) && isOld(col("doc_b")))
+      val newPairs = allPairs.filter(!(isOld(col("doc_a")) && isOld(col("doc_b"))))
+      val out = TextDedup.dedupClustersResume(
         TextDedup.dedupClusters(oldPairs), newPairs)
         .select(col("doc_id").as("vec_id"), col("cluster_id"))
+      FreshPlan.release(allPairs) // the operators checkpointed all they read
+      out
     }),
     // A8/J7 extended — the vector-family DELETE half (new r14): q201's
     // dedupClustersForget maintaining COSINE components; the pair
@@ -2053,13 +2060,15 @@ object SparkEntry {
           .join(ids.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"),
             "left_semi")
       }
-      TextDedup.dedupClustersForget(
+      val out = TextDedup.dedupClustersForget(
           TextDedup.dedupClusters(allPairs),
           corpus,
           corpus.filter(pmod(col("doc_id"), lit(9)) === 4)
             .select(col("doc_id")),
           restrictTo)
         .select(col("doc_id").as("vec_id"), col("cluster_id"))
+      FreshPlan.release(allPairs) // the operators checkpointed all they read
+      out
     }),
     // A8 north star: the surviving corpus after semantic dedup — one
     // representative (min vec_id) per cosine-component.

@@ -1,8 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftplan.FreshPlan
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Iterative graph analytics by joins — PageRank in FIXED-POINT integer
   * arithmetic (Page et al. 1999, the power method; Pregel-by-DataFrames).
@@ -71,6 +73,15 @@ object Graph {
     * the long-fixpoint 100 TB posture. Output is bit-identical either
     * way (GraphSpec-pinned): the recurrence is integer fixed-point, and
     * where the state lives cannot change what it is.
+    *
+    * Size rule: the degree-annotated edge table is sized as it lands
+    * (rows × the planner's row width, no extra job). At or under
+    * `spark.sql.autoBroadcastJoinThreshold` (10 MB by default, ~330k
+    * edges) and null-free, all `iters` rounds run in ONE task over its
+    * rows — the same integer recurrence, bit-identical ranks — and the
+    * result is checkpointed like the loop's last cut; a small graph
+    * otherwise pays the job floor of every round (q166: 27 jobs). Above
+    * the threshold or at `-1`, the distributed loop runs.
     */
   def pageRankFixed(edges: DataFrame, iters: Int,
                     scale: Long = 1000000000000L,
@@ -94,7 +105,9 @@ object Graph {
     *
     * `ranks0` must cover exactly the graph's nodes; missing nodes would
     * silently contribute zero mass, so coverage is validated (one
-    * anti-join count) and a mismatch fails loudly.
+    * anti-join count) and a mismatch fails loudly. The admission checks
+    * run before the size rule of [[pageRankFixed]] picks the one-task or
+    * the distributed path.
     */
   def pageRankResume(edges: DataFrame, ranks0: DataFrame, iters: Int,
                      scale: Long = 1000000000000L,
@@ -112,8 +125,6 @@ object Graph {
     // previous round's reliable files — only the RETURNED frame's
     // checkpoint outlives the call (see FreshPlan.CutChain).
     val chain = FreshPlan.chain(checkpointDir)
-    def mat(df: DataFrame): DataFrame = chain.invariant(df)
-    def cutFresh(df: DataFrame): DataFrame = chain.cut(df)
     require(iters >= 1, s"pageRankFixed: iters must be >= 1, got $iters")
     require(dampNum > 0 && dampNum < dampDen,
       s"pageRankFixed: need 0 < dampNum < dampDen, got $dampNum/$dampDen")
@@ -140,11 +151,153 @@ object Graph {
     // The two e-consumers inside withDeg's one plan share the distinct's
     // exchange (ReusedExchange — same canonical subtree).
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val withDeg = mat(e.join(deg, "src"))
-    val nodes = withDeg.select(col("src").as("node"))
+    val (withDeg, small) = chain.sizedInvariant(e.join(deg, "src"))
+    // materialized only where read: the loop and the resume checks
+    lazy val nodes = withDeg.select(col("src").as("node"))
       .unionByName(withDeg.select(col("dst").as("node")))
       .distinct()
-      .transform(mat)
+      .transform(chain.invariant(_))
+    // the final cut / the one-task result is materialized either way;
+    // loop invariants are dead
+    try {
+      if (small) {
+        // a resumed vector passes the same admission checks first
+        val r0 = ranks0.map(admitted(nodes, _, scale, chain))
+        FreshPlan.checkpointFresh(
+          ranksInOneTask(withDeg, r0, iters, scale, dampNum, dampDen),
+          checkpointDir)
+      } else ranksByRounds(withDeg, nodes, ranks0, iters, scale, dampNum,
+        dampDen, chain)
+    } finally chain.close()
+  }
+
+  /** `teleportScaled` = (scale·(dampDen−dampNum)) div dampDen without
+    * overflowing scale·(dampDen−dampNum): the quot/rem split is exact.
+    */
+  private def teleportScaled(scale: Long, dampNum: Int, dampDen: Int): Long =
+    scale / dampDen * (dampDen - dampNum) +
+      scale % dampDen * (dampDen - dampNum) / dampDen
+
+  /** The loop's small-input path: the same integer recurrence over
+    * `withDeg`'s rows in one task — same truncating divisions, teleport
+    * and dangling-mass terms and `n = 0` guard, so the ranks are
+    * bit-identical to [[ranksByRounds]]'. `r0` is an admitted resume
+    * vector (nodes outside the graph are dropped, as the loop's semi-join
+    * drops them; a null rank contributes nothing, as in the loop's sums).
+    */
+  private def ranksInOneTask(withDeg: DataFrame, r0: Option[DataFrame],
+                             iters: Int, scale: Long,
+                             dampNum: Int, dampDen: Int): DataFrame = {
+    val f = withDeg.schema
+    val (iSrc, iDst, iDeg) =
+      (f.fieldIndex("src"), f.fieldIndex("dst"), f.fieldIndex("deg"))
+    val teleport = teleportScaled(scale, dampNum, dampDen)
+    // the loop's schema: node is an endpoint, rank an arithmetic result
+    val schema = StructType(Seq(
+      StructField("node", LongType, f("src").nullable || f("dst").nullable),
+      StructField("rank", LongType, nullable = true)))
+    FreshPlan.inOneTask(schema, withDeg +: r0.toSeq: _*) { inputs =>
+      val src, dst, deg = Array.newBuilder[Long]
+      inputs.head.foreach { r =>
+        src += r.getLong(iSrc); dst += r.getLong(iDst); deg += r.getLong(iDeg)
+      }
+      val (s, d, dg) = (src.result(), dst.result(), deg.result())
+      val all = s ++ d
+      java.util.Arrays.sort(all)
+      val ids = all.distinct
+      val n = ids.length
+      def at(v: Long) = java.util.Arrays.binarySearch(ids, v)
+      val (si, di) = (s.map(at), d.map(at))
+      val sends = new Array[Boolean](n)
+      si.foreach(sends(_) = true)
+      var rank = inputs.drop(1).headOption match {
+        case None => Array.fill(n)(if (n == 0) 0L else scale / n)
+        case Some(rows) =>
+          val r = new Array[Long](n)
+          rows.foreach { row =>
+            if (!row.isNullAt(0) && !row.isNullAt(1)) {
+              val k = at(row.getLong(0))
+              if (k >= 0) r(k) = row.getLong(1)
+            }
+          }
+          r
+      }
+      val teleportPerNode = if (n == 0) 0L else teleport / n
+      for (_ <- 1 to iters) {
+        val sum = new Array[Long](n)
+        for (i <- si.indices) sum(di(i)) += rank(si(i)) / dg(i)
+        var dm = 0L // the danglers' mass
+        for (v <- 0 until n if !sends(v)) dm += rank(v)
+        val spread = dm * dampNum / dampDen / math.max(n, 1L)
+        rank = Array.tabulate(n)(v =>
+          teleportPerNode + sum(v) * dampNum / dampDen + spread)
+      }
+      ids.indices.iterator.map(v => InternalRow(ids(v), rank(v)))
+    }
+  }
+
+  /** `ranks0` checked against the graph's `nodes` — coverage, duplicates,
+    * mass envelope — and materialized as a loop invariant of `chain`.
+    */
+  private def admitted(nodes: DataFrame, ranks0: DataFrame, scale: Long,
+                       chain: FreshPlan.CutChain): DataFrame = {
+    val r = ranks0.select(col("node").cast("long").as("node"),
+      col("rank").cast("long").as("rank")).transform(chain.invariant(_))
+    // All three admission checks — coverage, duplication, mass
+    // envelope — from ONE action (round 20: they were three separate
+    // jobs; a full-outer join of the node set against the per-node
+    // rank aggregate carries every signal at once, and the resumed
+    // vector is validated on every execution, so the action count is
+    // per-run cost, not build cost).
+    val chk = nodes
+      .join(r.groupBy(col("node")).agg(count(lit(1)).as("_c"),
+          sum(col("rank")).as("_m")),
+        Seq("node"), "full_outer")
+      .agg(
+        coalesce(sum(when(col("_c").isNull, 1L).otherwise(0L)), lit(0L))
+          .as("missing"),
+        coalesce(sum(when(col("_c") > 1, 1L).otherwise(0L)), lit(0L))
+          .as("dups"),
+        coalesce(sum(col("_m")), lit(0L)).as("mass"))
+      .head()
+    val missing = chk.getLong(0)
+    require(missing == 0L,
+      s"pageRankResume: ranks0 is missing $missing graph node(s) — " +
+        "a resumed vector must cover the graph it is resumed on")
+    // a doubly-written vector (append instead of overwrite, retried
+    // job) would pass the coverage check and silently DOUBLE-count
+    // mass in the first contrib aggregate — refuse it
+    val dup = chk.getLong(1)
+    require(dup == 0L,
+      s"pageRankResume: ranks0 has $dup duplicated node(s) — a rank " +
+        "vector must be one row per node (was it appended twice?)")
+    // scale compatibility: a vector persisted under a DIFFERENT scale
+    // (or truncated mid-write with plausible per-node values) passes
+    // both checks above and silently resumes to wrong-magnitude
+    // ranks. Total mass is conserved by the recurrence up to
+    // truncation evaporation (and a changed-graph warm start extends
+    // with zero-mass rows), so the sum must sit near `scale` — a
+    // 1-row order-of-magnitude envelope. Mass counts EVERY r row,
+    // including persisted nodes no longer in the graph (they are
+    // dropped below, exactly as before).
+    val mass = chk.getLong(2)
+    require(mass > scale / 2 && mass <= scale + scale / 100,
+      s"pageRankResume: ranks0 total mass $mass is outside the " +
+        s"integer-truncation envelope of scale=$scale — was the " +
+        "vector persisted under a different scale, or half-written?")
+    r
+  }
+
+  /** The distributed loop: per round one join of the rank table onto the
+    * degree-annotated edges and one keyed SUM, lineage cut every
+    * `cutEvery` rounds through `chain`.
+    */
+  private def ranksByRounds(withDeg: DataFrame, nodes: DataFrame,
+                            ranks0: Option[DataFrame], iters: Int,
+                            scale: Long, dampNum: Int, dampDen: Int,
+                            chain: FreshPlan.CutChain): DataFrame = {
+    def mat(df: DataFrame): DataFrame = chain.invariant(df)
+    def cutFresh(df: DataFrame): DataFrame = chain.cut(df)
     // The node count is a LITERAL, not a broadcast 1-row frame (round
     // 21): every round cross-joined broadcast(nTotal) just to divide by
     // n — a per-round broadcast stage whose payload is one long. One
@@ -161,11 +314,7 @@ object Graph {
       .join(withDeg.select(col("src").as("node")), Seq("node"), "left_anti")
     val hasDanglers = !danglers0.isEmpty
     val danglers = if (hasDanglers) mat(danglers0) else danglers0
-    val teleportScaled = scale / dampDen * (dampDen - dampNum) +
-      scale % dampDen * (dampDen - dampNum) / dampDen
-    // teleportScaled must equal (scale·(dampDen−dampNum)) div dampDen
-    // without overflowing scale·(dampDen−dampNum); the split form above is
-    // exact for it (quot/rem decomposition of the division).
+    val teleport = teleportScaled(scale, dampNum, dampDen)
     // Lineage-cut stride: the per-round eager checkpoint exists ONLY to
     // stop the SPARK-39834 stat explosion and keep plans round-sized —
     // neither needs a cut EVERY round. A dangler-free graph references
@@ -190,7 +339,7 @@ object Graph {
     // n = 0 (empty graph) leaves every frame empty; guard the eager
     // literal divisions the old per-row div never evaluated on zero rows.
     val initRank = if (n == 0) 0L else scale / n
-    val teleportPerNode = if (n == 0) 0L else teleportScaled / n
+    val teleportPerNode = if (n == 0) 0L else teleport / n
     var ranks = ranks0 match {
       case None =>
         // the uniform start is one cheap projection over checkpointed
@@ -198,53 +347,10 @@ object Graph {
         val init = nodes.select(col("node"), lit(initRank).as("rank"))
         if (hasDanglers) cutFresh(init) else init
       case Some(r0) =>
-        val r = r0.select(col("node").cast("long").as("node"),
-          col("rank").cast("long").as("rank")).transform(mat)
-        // All three admission checks — coverage, duplication, mass
-        // envelope — from ONE action (round 20: they were three separate
-        // jobs; a full-outer join of the node set against the per-node
-        // rank aggregate carries every signal at once, and the resumed
-        // vector is validated on every execution, so the action count is
-        // per-run cost, not build cost).
-        val chk = nodes
-          .join(r.groupBy(col("node")).agg(count(lit(1)).as("_c"),
-              sum(col("rank")).as("_m")),
-            Seq("node"), "full_outer")
-          .agg(
-            coalesce(sum(when(col("_c").isNull, 1L).otherwise(0L)), lit(0L))
-              .as("missing"),
-            coalesce(sum(when(col("_c") > 1, 1L).otherwise(0L)), lit(0L))
-              .as("dups"),
-            coalesce(sum(col("_m")), lit(0L)).as("mass"))
-          .head()
-        val missing = chk.getLong(0)
-        require(missing == 0L,
-          s"pageRankResume: ranks0 is missing $missing graph node(s) — " +
-            "a resumed vector must cover the graph it is resumed on")
-        // a doubly-written vector (append instead of overwrite, retried
-        // job) would pass the coverage check and silently DOUBLE-count
-        // mass in the first contrib aggregate — refuse it
-        val dup = chk.getLong(1)
-        require(dup == 0L,
-          s"pageRankResume: ranks0 has $dup duplicated node(s) — a rank " +
-            "vector must be one row per node (was it appended twice?)")
-        // scale compatibility: a vector persisted under a DIFFERENT scale
-        // (or truncated mid-write with plausible per-node values) passes
-        // both checks above and silently resumes to wrong-magnitude
-        // ranks. Total mass is conserved by the recurrence up to
-        // truncation evaporation (and a changed-graph warm start extends
-        // with zero-mass rows), so the sum must sit near `scale` — a
-        // 1-row order-of-magnitude envelope. Mass counts EVERY r row,
-        // including persisted nodes no longer in the graph (they are
-        // dropped below, exactly as before).
-        val mass = chk.getLong(2)
-        require(mass > scale / 2 && mass <= scale + scale / 100,
-          s"pageRankResume: ranks0 total mass $mass is outside the " +
-            s"integer-truncation envelope of scale=$scale — was the " +
-            "vector persisted under a different scale, or half-written?")
         // extra persisted nodes no longer in the graph are dropped: they
         // can neither receive nor (having no out-edges here) send mass.
-        cutFresh(r.join(nodes, Seq("node"), "left_semi"))
+        cutFresh(admitted(nodes, r0, scale, chain)
+          .join(nodes, Seq("node"), "left_semi"))
     }
     for (i <- 1 to iters) {
       val contrib = ranks
@@ -275,7 +381,6 @@ object Graph {
         if (i == iters || i % cutEvery == 0) cutFresh(next)
         else next
     }
-    chain.close() // final cut is materialized; loop invariants are dead
     ranks
   }
 }

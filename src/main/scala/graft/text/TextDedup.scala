@@ -1,10 +1,12 @@
 package graft.text
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftplan.FreshPlan
-import org.apache.spark.sql.types.{ArrayType, LongType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType,
+  StructField, StructType}
 
 import graft.functions.PolyHashMath
 
@@ -322,7 +324,18 @@ object TextDedup {
     * (diameter ~20 measured on the sf0.1 testdata → 6 rounds under
     * doubling). maxIters = 20 therefore bounds components of diameter
     * ~2^20; the guard throws rather than returning silently-unmerged
-    * clusters.
+    * clusters. The guard belongs to the distributed loop only.
+    *
+    * Size rule: the materialized pair set is sized as it lands (rows ×
+    * the planner's row width, no extra job). At or under
+    * `spark.sql.autoBroadcastJoinThreshold` — the session's bound for
+    * "ship it whole to one task", 10 MB by default, ~430k long pairs —
+    * the whole fixpoint runs in ONE task instead: union-find with the
+    * minimum id as every root, which labels every endpoint with its
+    * component's minimum doc_id, exactly the loop's output. A small pair
+    * set otherwise pays the job floor of every round (q73's 159 pairs:
+    * 22 jobs). Above the threshold, at `-1`, or for ids that are not
+    * BIGINT/INT or hold a null, the distributed loop runs.
     */
   def dedupClusters(pairs: DataFrame, maxIters: Int = 20,
                     checkpointDir: Option[String] = None): DataFrame = {
@@ -332,8 +345,6 @@ object TextDedup {
     // posture for long fixpoints. Bit-identical output either way
     // (TextSpec-pinned) — where the state lives cannot change what it is.
     val chain = FreshPlan.chain(checkpointDir)
-    def mat(df: DataFrame): DataFrame = chain.invariant(df)
-    def cutFresh(df: DataFrame): DataFrame = chain.cut(df)
     // Materialize the pair plan BEFORE symmetrizing: `half` is consumed
     // twice by the union, and without the checkpoint the planner must
     // rediscover the shared subtree (exchange reuse saves the re-execution
@@ -343,9 +354,67 @@ object TextDedup {
     // half is a loop INVARIANT (every round's hook reads it through sym),
     // so it must not enter the cut chain — but its origin plan is the
     // whole pair pipeline, whose multiplied stats must still be stripped.
-    val half = chain.invariant(
+    val (half, small) = chain.sizedInvariant(
       pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")),
       fresh = true)
+    val idType = half.schema("src").dataType
+    // last cut / the one-task result is materialized either way;
+    // half/edges are dead
+    try {
+      if (small && half.schema("dst").dataType == idType &&
+          (idType == LongType || idType == IntegerType))
+        FreshPlan.checkpointFresh(componentsInOneTask(half), checkpointDir)
+      else componentsByRounds(half, chain, maxIters)
+    } finally chain.close()
+  }
+
+  /** [[dedupClusters]]' small-input path: union-find over `half`'s pairs
+    * in one task. Ids are sorted first, so uniting two roots under the
+    * smaller INDEX keeps every root at its component's minimum id.
+    */
+  private def componentsInOneTask(half: DataFrame): DataFrame = {
+    val idType = half.schema("src").dataType
+    val isLong = idType == LongType
+    // the loop's schema: doc_id is an endpoint, cluster_id a min()
+    val schema = StructType(Seq(
+      StructField("doc_id", idType,
+        half.schema("src").nullable || half.schema("dst").nullable),
+      StructField("cluster_id", idType, nullable = true)))
+    FreshPlan.inOneTask(schema, half) { inputs =>
+      val src, dst = Array.newBuilder[Long]
+      inputs.head.foreach { r =>
+        src += (if (isLong) r.getLong(0) else r.getInt(0).toLong)
+        dst += (if (isLong) r.getLong(1) else r.getInt(1).toLong)
+      }
+      val (a, b) = (src.result(), dst.result())
+      val all = a ++ b
+      java.util.Arrays.sort(all)
+      val ids = all.distinct
+      val parent = Array.range(0, ids.length)
+      def find(x: Int): Int = {
+        var root = x
+        while (parent(root) != root) root = parent(root)
+        var y = x
+        while (parent(y) != root) { val next = parent(y); parent(y) = root; y = next }
+        root
+      }
+      def at(v: Long) = java.util.Arrays.binarySearch(ids, v)
+      a.indices.foreach { i =>
+        val (ra, rb) = (find(at(a(i))), find(at(b(i))))
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      }
+      def box(v: Long): Any = if (isLong) v else v.toInt
+      ids.indices.iterator.map(i => InternalRow(box(ids(i)), box(ids(find(i)))))
+    }
+  }
+
+  /** [[dedupClusters]]' distributed loop: hook + compress rounds over the
+    * materialized pair set `half`, cutting each round through `chain`.
+    */
+  private def componentsByRounds(half: DataFrame, chain: FreshPlan.CutChain,
+                                 maxIters: Int): DataFrame = {
+    def mat(df: DataFrame): DataFrame = chain.invariant(df)
+    def cutFresh(df: DataFrame): DataFrame = chain.cut(df)
     val sym = half
       .unionByName(half.select(col("dst").as("src"), col("src").as("dst")))
     // Self-loops fold the "min of self and neighbors" into ONE join + one
@@ -427,7 +496,6 @@ object TextDedup {
       labels = next
       iters += 1
     }
-    chain.close() // last cut is materialized either way; half/edges are dead
     if (!converged) throw new IllegalStateException(
       s"dedupClusters did not converge in $maxIters rounds — component " +
         "diameter exceeds the bound; raise maxIters")
@@ -515,6 +583,7 @@ object TextDedup {
       FreshPlan.materialize(affectedClusterIds(state, np), checkpointDir)
     val relabeled = dedupClusters(subgraphOf(state, np, affectedClusters),
       maxIters, checkpointDir)
+    FreshPlan.release(np) // read only by the now-materialized frames above
     val untouched = state.join(affectedClusters, Seq("cluster_id"), "left_anti")
       .select(col("doc_id"), col("cluster_id"))
     (untouched, relabeled)
@@ -635,6 +704,7 @@ object TextDedup {
     val relabeled = dedupClusters(
       pairsOf(corpus.join(survivorIds, Seq("doc_id"), "left_semi")),
       maxIters, checkpointDir)
+    FreshPlan.release(dIds) // read only by the now-materialized frames above
     (untouched, relabeled, affectedState)
   }
 

@@ -1,6 +1,10 @@
 package org.apache.spark.sql.graftplan
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.types.StructType
 
 /** Plan hygiene for iterative fixpoints (lives under `org.apache.spark.sql`
   * solely for `private[sql]` access to `internalCreateDataFrame`).
@@ -124,10 +128,15 @@ object FreshPlan {
       scala.collection.mutable.ArrayBuffer[org.apache.spark.rdd.RDD[_]]()
     private var hconf: Option[org.apache.hadoop.conf.Configuration] = None
 
+    /** Materializes the next round. A superseded cut is UNREADABLE:
+      * once this cut lands, the previous one's blocks are dropped (local)
+      * or its files deleted (reliable), and a checkpoint has no lineage to
+      * recompute from — only the latest cut may be retained.
+      */
     def cut(df: DataFrame): DataFrame = checkpointDir match {
       case None =>
         val ck = df.localCheckpoint()
-        prevCutBlocks.foreach(_.unpersist(blocking = false))
+        prevCutBlocks.foreach(drop(_))
         prevCutBlocks = checkpointRddOf(ck)
         rewrap(ck)
       case Some(dir) =>
@@ -157,6 +166,31 @@ object FreshPlan {
           if (fresh) rewrap(ck) else ck
       }
 
+    /** [[invariant]] plus whether a fixpoint over it fits in ONE task: the
+      * rows are counted while they materialize (a CollectMetrics node on
+      * the materializing pass itself — no extra job, local or reliable)
+      * and sized at the planner's per-row width. `true` when that size is
+      * at or under `spark.sql.autoBroadcastJoinThreshold` — the session's
+      * existing bound for "small enough to ship whole to one task"; `-1`
+      * disables it — and no column holds a null. A missing metric (the
+      * optimizer pruned the node) reads as "does not fit".
+      */
+    def sizedInvariant(df: DataFrame, fresh: Boolean = false)
+        : (DataFrame, Boolean) = {
+      val name = s"graft_fixpoint_size_${sizeProbes.incrementAndGet()}"
+      val observed = df.observe(name, count(lit(1)),
+        df.columns.toSeq.map(c => count(col(s"`$c`"))): _*)
+      val ck = invariant(observed, fresh)
+      val fits = observed.queryExecution.observedMetrics.get(name).exists {
+        m =>
+          val rows = m.getLong(0)
+          (1 until m.length).forall(m.getLong(_) == rows) &&
+            fitsOneTask(df, rows * EstimationUtils.getSizePerRow(
+              observed.queryExecution.analyzed.output))
+      }
+      (ck, fits)
+    }
+
     /** Call after the FINAL cut is materialized (and only then): deletes
       * every invariant's files (reliable mode) / drops every invariant's
       * blocks (local mode). The last cut's files/blocks are intentionally
@@ -165,7 +199,7 @@ object FreshPlan {
     def close(): Unit = {
       invariants.foreach(delete)
       invariants.clear()
-      invariantBlocks.foreach(_.unpersist(blocking = false))
+      invariantBlocks.foreach(drop(_))
       invariantBlocks.clear()
     }
 
@@ -182,6 +216,67 @@ object FreshPlan {
   }
 
   def chain(checkpointDir: Option[String]): CutChain = new CutChain(checkpointDir)
+
+  private val sizeProbes = new java.util.concurrent.atomic.AtomicLong
+
+  private def fitsOneTask(df: DataFrame, bytes: BigInt): Boolean = {
+    val t = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+      .sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    t >= 0 && bytes <= t
+  }
+
+  /** Runs `body` in ONE task over the internal rows of each input (one
+    * iterator per input, in order; rows may be reused — read, don't
+    * keep) and returns its rows as an unmaterialized frame of `schema`.
+    * The fixpoints' small-input path: a loop whose state fits one task
+    * pays one job instead of a scheduling floor per round.
+    */
+  def inOneTask(schema: StructType, inputs: DataFrame*)(
+      body: Seq[Iterator[InternalRow]] => Iterator[InternalRow]): DataFrame = {
+    val session = inputs.head.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+      .sparkSession
+    val sc = session.sparkContext
+    // a 0-partition input (an empty local relation) still needs its one
+    // (empty) partition for the zip below
+    val one = inputs.map { df =>
+      val rdd = df.queryExecution.toRdd.coalesce(1)
+      if (rdd.partitions.isEmpty) sc.parallelize(Seq.empty[InternalRow], 1)
+      else rdd
+    }
+    val out = one match {
+      case Seq(a) => a.mapPartitions(it => body(Seq(it)))
+      case Seq(a, b) => a.zipPartitions(b)((x, y) => body(Seq(x, y)))
+      case _ => throw new IllegalArgumentException(
+        s"inOneTask takes one or two inputs, got ${one.size}")
+    }
+    session.internalCreateDataFrame(out, schema)
+  }
+
+  /** Drops the blocks behind a locally materialized frame (a plain
+    * `localCheckpoint`, or [[materialize]] / [[checkpointFresh]] with no
+    * directory) once nothing reads it any more. Only for state proven
+    * dead, and only for a materialized frame (a frame over an
+    * unmaterialized RDD could reach live blocks upstream): like a
+    * superseded cut, the frame is unreadable afterwards. No-op for
+    * reliable checkpoints (their files stay until the caller wipes the
+    * root) and for frames that are not a bare checkpoint.
+    */
+  def release(df: DataFrame): Unit = {
+    // a rewrapped frame's LogicalRDD holds the scan over the checkpointed
+    // RDD: walk down to the first persisted RDD, whose lineage the
+    // checkpoint has truncated — never past it
+    def blocks(r: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.rdd.RDD[_]] =
+      if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE) Seq(r)
+      else r.dependencies.flatMap(d => blocks(d.rdd))
+    checkpointRddOf(df).toSeq.flatMap(blocks).foreach(drop(_))
+  }
+
+  /** `RDD.unpersist` minus its WARN: on a locally checkpointed RDD it logs
+    * "cannot be recomputed after unpersisting" on every call, which is
+    * the point here (the blocks are proven dead), not news.
+    */
+  private def drop(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 
   /** The reliably-checkpointed RDD's file path — `Dataset.checkpoint`
     * wraps the materialized RDD in a LogicalRDD, so the path is one

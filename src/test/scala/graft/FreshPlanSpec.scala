@@ -57,7 +57,8 @@ class FreshPlanSpec extends SparkSpec {
   }
 
   test("concurrent reliable fixpoints with DIFFERENT roots both stay " +
-      "bit-correct and both write under their own root (the set-dir race)") {
+      "bit-correct and both write under their own root " +
+      "(the set-dir race)") { onBothFixpointPaths { threshold =>
     // sc.setCheckpointDir is context-global: without the serialization in
     // FreshPlan.reliable, thread B's re-point could land between thread
     // A's dir check and A's checkpoint write, silently sending A's state
@@ -83,12 +84,12 @@ class FreshPlanSpec extends SparkSpec {
     val fb = Future(lab(TextDedup.dedupClusters(pairs(100),
       checkpointDir = Some(dirB))))
     assert(Await.result(fa, 5.minutes) == expectA,
-      "concurrent reliable run A must match its local twin")
+      s"concurrent reliable run A must match its local twin ($threshold)")
     assert(Await.result(fb, 5.minutes) == expectB,
-      "concurrent reliable run B must match its local twin")
+      s"concurrent reliable run B must match its local twin ($threshold)")
     assert(rddDirs(dirA) >= 1, "root A must hold A's surviving cut")
     assert(rddDirs(dirB) >= 1, "root B must hold B's surviving cut")
-  }
+  }}
 
   test("freshIfMaterialized copies a non-deterministic projection over a " +
       "checkpoint") {
@@ -108,6 +109,46 @@ class FreshPlanSpec extends SparkSpec {
       base.select((col("id") * 2).as("id")), None)
     assert(det.collect().map(_.getLong(0)).sorted.toSeq ==
       (0L until 200L).map(_ * 2))
+  }
+
+  test("sizedInvariant sizes rows as they materialize: at-or-under the " +
+      "broadcast threshold, local and reliable, no extra job") {
+    // 1000 BIGINT rows at the planner's 8 + 8 bytes per row = 16000 bytes
+    val df = spark.range(1000).toDF("id")
+    val dir = java.nio.file.Files.createTempDirectory("graft-fps").toString
+    for (ck <- Seq(None, Some(dir))) {
+      def fits(threshold: String): Boolean = withBroadcastThreshold(threshold) {
+        val chain = FreshPlan.chain(ck)
+        var out: (org.apache.spark.sql.DataFrame, Boolean) = null
+        // the count rides the materializing job: one job, as invariant()
+        val jobs = jobsOf { out = chain.sizedInvariant(df) }
+        assert(jobs == 1, s"sizing must add no job ($ck: $jobs jobs)")
+        assert(out._1.count() == 1000)
+        chain.close()
+        out._2
+      }
+      assert(fits("16000"), s"16000 bytes fit a 16000-byte threshold ($ck)")
+      assert(!fits("15999"), s"16000 bytes do not fit 15999 ($ck)")
+      assert(!fits("-1"), s"-1 disables the one-task path ($ck)")
+    }
+    // a null anywhere keeps the input off the one-task path
+    val chain = FreshPlan.chain(None)
+    val withNull = spark.range(10).select(
+      when(col("id") === 3, lit(null)).otherwise(col("id")).as("id"))
+    assert(!chain.sizedInvariant(withNull)._2, "a null must not fit")
+    chain.close()
+  }
+
+  test("release drops a local checkpoint's blocks, plain or rewrapped") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val plain = spark.range(50).toDF("id").localCheckpoint()
+    val fresh = FreshPlan.checkpointFresh(spark.range(50).toDF("id"), None)
+    assert((sc.getPersistentRDDs.keySet -- before).size == 2)
+    FreshPlan.release(plain)
+    FreshPlan.release(fresh)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      "both blocksets must be gone after release")
   }
 
   test("local mode (None) is unchanged by the chain machinery") {

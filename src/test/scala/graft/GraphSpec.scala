@@ -63,7 +63,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("reliable checkpointDir is bit-identical to local cuts on the " +
-      "sf0.01 graph (and actually writes checkpoint files)") {
+      "sf0.01 graph (and actually writes checkpoint files)") { onBothFixpointPaths { threshold =>
     // The r16 verdict's one real 100 TB robustness gap: localCheckpoint
     // state dies with its executor, so long fixpoints on preemptible
     // nodes need a reliable-filesystem option. The knob must change WHERE
@@ -88,7 +88,7 @@ class GraphSpec extends SparkSpec {
     val (localR, tLocal) = run(None)
     val (relR, tRel) = run(Some(dir))
     assert(relR == localR,
-      "reliable checkpoints must not change a single rank bit")
+      s"reliable checkpoints must not change a single rank bit (threshold $threshold)")
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       .filter(java.nio.file.Files.isRegularFile(_)).count()
     assert(files > 0, "reliable mode must actually write checkpoint files")
@@ -102,9 +102,10 @@ class GraphSpec extends SparkSpec {
       finally s.close()
     }
     assert(rddDirs() == 1,
-      s"only the final cut may survive the run, found ${rddDirs()} rdd dirs")
+      s"only the final cut may survive the run, found ${rddDirs()} rdd dirs " +
+        s"(threshold $threshold)")
     info(f"pageRankFixed sf0.01 ×3 iters: local $tLocal%.2f s, " +
-      f"reliable $tRel%.2f s (${tRel / tLocal}%.2fx)")
+      f"reliable $tRel%.2f s (${tRel / tLocal}%.2fx, threshold $threshold)")
     // resume leg: the warm start through the same knob stays bit-exact too
     val resumed = Graph.pageRankResume(edges,
       Seq.empty[(Long, Long)].toDF("node", "rank")
@@ -115,7 +116,7 @@ class GraphSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(resumed == cold4,
       "reliable resume must equal the cold run of the combined depth")
-  }
+  }}
 
   test("resume(k) after pageRankFixed(m) == cold pageRankFixed(m+k), bit-exact") {
     // integer fixed-point means the rank vector IS the whole state: a
@@ -225,7 +226,8 @@ class GraphSpec extends SparkSpec {
     assert(Graph.pageRankFixed(empty, 2).count() == 0)
   }
 
-  test("fixpoint leaves exactly one persisted blockset (the returned cut)") {
+  test("fixpoint leaves exactly one persisted blockset " +
+      "(the returned cut)") { onBothFixpointPaths { threshold =>
     // Round-21 CutChain hygiene pin: superseded per-round cuts and dead
     // loop invariants must be UNPERSISTED when the loop closes, in local
     // mode exactly as their files are deleted in reliable mode — across a
@@ -246,10 +248,74 @@ class GraphSpec extends SparkSpec {
     // rest — anything beyond the final cut is a leak
     assert(leaked.size <= 1,
       s"fixpoint leaked ${leaked.size} persisted RDDs (expected <= 1: " +
-        "the returned cut): ids " + leaked.mkString(", "))
+        "the returned cut): ids " + leaked.mkString(", ") +
+        s" (threshold $threshold)")
     // the survivor must still be readable — close() must never have
     // unpersisted the returned frame's own blocks
     assert(ranks.count() == rows)
+  }}
+
+  test("pageRank: the one-task path equals the forced-distributed loop") {
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def same(run: () => org.apache.spark.sql.DataFrame, what: String,
+             empty: Boolean = false): Unit = {
+      var one, loop: org.apache.spark.sql.DataFrame = null
+      val jobsOne = jobsOf { one = run() }
+      val jobsLoop = withBroadcastThreshold("-1")(jobsOf { loop = run() })
+      // the one-task path is taken: fewer jobs than the loop (which
+      // plans an empty graph down to one job)
+      assert(jobsOne < jobsLoop || empty && jobsOne <= jobsLoop,
+        s"$what: $jobsOne vs $jobsLoop jobs")
+      assert(one.schema == loop.schema, s"$what: schemas differ")
+      assert(ranks(one) == ranks(loop), s"$what: ranks differ")
+    }
+    val rnd = new scala.util.Random(31)
+    val danglers = (Seq.fill(200)((rnd.nextInt(30).toLong,
+      rnd.nextInt(30).toLong)).filter(p => p._1 != p._2) :+ (98L, 99L))
+      .toDF("src", "dst")
+    val half = Seq.fill(120)((rnd.nextInt(20).toLong * 2,
+      rnd.nextInt(15).toLong * 2 + 1))
+    val symmetric = (half ++ half.map(_.swap)).toDF("src", "dst")
+    // 1 round, and 7 rounds (past the loop's 5-round cut stride)
+    for (iters <- Seq(1, 7)) {
+      same(() => Graph.pageRankFixed(danglers, iters), s"danglers x$iters")
+      same(() => Graph.pageRankFixed(symmetric, iters), s"symmetric x$iters")
+    }
+    same(() => Graph.pageRankFixed(Seq((1, 2), (2, 3)).toDF("src", "dst"), 3),
+      "int ids")
+    same(() => Graph.pageRankFixed(Seq.empty[(Long, Long)].toDF("src", "dst"),
+      2), "empty edge table", empty = true)
+    val dir = java.nio.file.Files.createTempDirectory("graft-pr-1t").toString
+    same(() => Graph.pageRankFixed(danglers, 3, checkpointDir = Some(dir)),
+      "reliable checkpointDir")
+    // resume: admitted vectors, including an extra node the graph lost
+    // and a null rank (both read as the loop reads them)
+    val r2 = Graph.pageRankFixed(danglers, 2).localCheckpoint()
+    same(() => Graph.pageRankResume(danglers, r2, 2), "resume")
+    val odd = r2.unionByName(Seq((12345L, 77L)).toDF("node", "rank"))
+      .withColumn("rank", when(col("node") === 99L, lit(null))
+        .otherwise(col("rank")))
+    same(() => Graph.pageRankResume(danglers, odd, 1), "resume, odd vector")
+    // the admission checks still run first on the one-task path
+    val e = intercept[IllegalArgumentException] {
+      Graph.pageRankResume(danglers, r2.filter(col("node") =!= 99L), 1)
+    }
+    assert(e.getMessage.contains("missing"))
+  }
+
+  test("pageRankFixed on a small graph runs in at most 6 jobs") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 1L), (6L, 6L),
+      (7L, 2L)).toDF("src", "dst")
+    var out: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsOf { out = Graph.pageRankFixed(edges, 10) }
+    // the degree-annotated edges' materialization plus the one-task
+    // fixpoint; the distributed loop launches 93 here (Spark 4.1.2,
+    // local[4])
+    assert(jobs <= 6, s"pageRankFixed launched $jobs jobs")
+    assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      refRanks(Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 1L), (6L, 6L),
+        (7L, 2L)), 10))
   }
 
   test("mass accounting: total rank <= scale, loss bounded by truncation") {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.graft.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.Medallion
@@ -118,22 +116,6 @@ class MedallionSpec extends SparkSpec {
 
     val gold2 = Medallion.refreshDailyAgg(spark, l)
     assert(gold2.count() == 3, "re-running the gold refresh must be idempotent")
-  }
-
-  /** Spark jobs `body` launches. */
-  private def jobsOf(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    ListenerDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try body
-    finally {
-      ListenerDrain(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(l)
-    }
-    n.get
   }
 
   test("re-running a silver refresh appends nothing; an incremental run keeps its job budget") {

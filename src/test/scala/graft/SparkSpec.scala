@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,6 +10,41 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Spark jobs `body` launches. */
+  def jobsOf(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try body
+    finally {
+      ListenerDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(l)
+    }
+    n.get
+  }
+
+  /** Runs `body` at `spark.sql.autoBroadcastJoinThreshold = value`,
+    * restoring the previous setting afterwards.
+    */
+  def withBroadcastThreshold[T](value: String)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try body finally spark.conf.set(key, prev)
+  }
+
+  /** Runs `body` on both fixpoint paths: at the session's threshold (a
+    * small input takes the one-task path) and at -1 (the distributed
+    * loop). `body` gets the threshold, for its messages.
+    */
+  def onBothFixpointPaths(body: String => Unit): Unit = {
+    body(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    withBroadcastThreshold("-1")(body("-1"))
+  }
 }
 
 object SparkSpec {

@@ -374,7 +374,7 @@ class TextSpec extends SparkSpec {
   }
 
   test("dedupClusters with a reliable checkpointDir is bit-identical to " +
-      "local cuts on the sf0.01 corpus (resume + forget legs too)") {
+      "local cuts on the sf0.01 corpus (resume + forget legs too)") { onBothFixpointPaths { threshold =>
     // Same contract as the GraphSpec leg: Some(dir) moves the fixpoint
     // state to a re-readable filesystem (preemptible-node posture);
     // labels are integer minima, so storage cannot change them.
@@ -391,7 +391,7 @@ class TextSpec extends SparkSpec {
     val relL = lab(TextDedup.dedupClusters(pairs, checkpointDir = Some(dir)))
     val t2 = System.nanoTime()
     assert(relL == localL,
-      "reliable checkpoints must not change a single label bit")
+      s"reliable checkpoints must not change a single label bit (threshold $threshold)")
     assert(java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       .filter(java.nio.file.Files.isRegularFile(_)).count() > 0,
       "reliable mode must actually write checkpoint files")
@@ -403,7 +403,8 @@ class TextSpec extends SparkSpec {
       val n = try s.filter(p => java.nio.file.Files.isDirectory(p) &&
         p.getFileName.toString.startsWith("rdd-")).count()
       finally s.close()
-      assert(n == 1, s"only the final cut may survive the cold run, found $n")
+      assert(n == 1, s"only the final cut may survive the cold run, found $n " +
+        s"(threshold $threshold)")
     }
     info(f"dedupClusters sf0.01: local ${(t1 - t0) / 1e9}%.2f s, " +
       f"reliable ${(t2 - t1) / 1e9}%.2f s " +
@@ -426,6 +427,76 @@ class TextSpec extends SparkSpec {
         TextDedup.dedupClusters(pairs), docs, doomed,
         d => TextDedup.nearDupPairs(d, 0.5))),
       "reliable forget must equal local forget bit-for-bit")
+  }}
+
+  test("dedupClusters: the one-task path equals the forced-distributed loop") {
+    def lab(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.get(0) -> r.get(1)).toMap
+    def same(ps: org.apache.spark.sql.DataFrame, what: String,
+             ck: () => Option[String] = () => None): Unit = {
+      var one, loop: org.apache.spark.sql.DataFrame = null
+      val jobsOne = jobsOf { one = TextDedup.dedupClusters(ps, checkpointDir = ck()) }
+      val jobsLoop = withBroadcastThreshold("-1")(jobsOf {
+        loop = TextDedup.dedupClusters(ps, checkpointDir = ck()) })
+      // the one-task path is taken: fewer jobs than the loop
+      assert(jobsOne < jobsLoop, s"$what: $jobsOne vs $jobsLoop jobs")
+      assert(one.schema == loop.schema, s"$what: schemas differ")
+      assert(lab(one) == lab(loop), s"$what: labels differ")
+    }
+    for (seed <- 1 to 4) {
+      val rnd = new scala.util.Random(seed)
+      val ps = Seq.fill(80)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+        .filter { case (a, b) => a != b }
+      same(ps.toDF("doc_a", "doc_b"), s"random graph $seed")
+    }
+    // a 150-vertex path in shuffled order: diameter 149, many loop rounds
+    val chain = new scala.util.Random(5).shuffle((1L until 150L).toList)
+      .map(i => (i + 1, i))
+    same(chain.toDF("doc_a", "doc_b"), "long chain")
+    same(Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"), "empty pair set")
+    // INT ids keep their type; nullable (null-free) ids keep nullability
+    same(Seq((3, 1), (2, 3), (7, 9)).toDF("doc_a", "doc_b"), "int ids")
+    same(Seq((Option(3L), Option(1L)), (Option(5L), Option(1L)))
+      .toDF("doc_a", "doc_b"), "nullable ids")
+    val dir = java.nio.file.Files.createTempDirectory("graft-cc-1t").toString
+    val rnd = new scala.util.Random(9)
+    same(Seq.fill(60)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
+      .filter { case (a, b) => a != b }.toDF("doc_a", "doc_b"),
+      "reliable checkpointDir", () => Some(dir))
+  }
+
+  test("dedupClusters on a small pair set runs in at most 4 jobs") {
+    val ps = Seq((4L, 5L), (3L, 4L), (2L, 3L), (1L, 2L), (8L, 9L), (9L, 7L))
+      .toDF("doc_a", "doc_b")
+    var out: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsOf { out = TextDedup.dedupClusters(ps) }
+    // the pair set's materialization plus the one-task fixpoint; the
+    // distributed loop launches 40 here (Spark 4.1.2, local[4])
+    assert(jobs <= 4, s"dedupClusters launched $jobs jobs")
+    assert(out.as[(Long, Long)].collect().toMap == Map(1L -> 1L, 2L -> 1L,
+      3L -> 1L, 4L -> 1L, 5L -> 1L, 7L -> 7L, 8L -> 7L, 9L -> 7L))
+  }
+
+  test("q188/q189/q201/q209 drop their pair set: the result still " +
+      "collects and only its own blocks stay persisted") {
+    val sc = spark.sparkContext
+    // every RDD the result's plan reads, through narrow lineage
+    def lineage(r: org.apache.spark.rdd.RDD[_]): Set[Int] =
+      r.dependencies.map(d => lineage(d.rdd)).foldLeft(Set(r.id))(_ ++ _)
+    for (q <- Seq("q188_cluster_resume", "q189_semantic_cluster_resume",
+                  "q201_cluster_forget", "q209_semantic_cluster_forget")) {
+      System.gc() // let the ContextCleaner drain earlier tests' orphans
+      Thread.sleep(200)
+      val before = sc.getPersistentRDDs.keySet
+      val out = graft.SparkEntry.queries(q)(spark, "/root/testdata/sf0.01")
+      val own = out.queryExecution.analyzed.collectLeaves().collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => lineage(l.rdd)
+      }.foldLeft(Set.empty[Int])(_ ++ _)
+      val leaked = sc.getPersistentRDDs.keySet -- before -- own
+      assert(leaked.isEmpty, s"$q left blocks its result never reads: " +
+        leaked.mkString(", "))
+      assert(out.collect().nonEmpty, s"$q must still collect")
+    }
   }
 
   test("dedupClustersResume ≡ cold recompute: merge, join, new cluster, passthrough") {

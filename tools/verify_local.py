@@ -81,9 +81,13 @@ def main():
     sf_dir = args[0] if len(args) > 0 else "/root/testdata/sf0.01"
     out_dir = args[1] if len(args) > 1 else "/tmp/verify_out"
     if "--skip-spark" not in sys.argv:
+        # --batch: a one-shot sbt JVM that exits with the run (--client
+        # would leave an sbt server of ~570 MB behind, and it does not
+        # forward this process's environment to the forked JVM)
         r = subprocess.run(
-            ["sbt", "--client", f'runMain graft.Verify {sf_dir} {out_dir}'],
-            cwd="/root/repo", capture_output=True, text=True, timeout=1800)
+            ["sbt", "--batch", f'runMain graft.Verify {sf_dir} {out_dir}'],
+            cwd=Path(__file__).resolve().parent.parent,
+            capture_output=True, text=True, timeout=1800)
         if r.returncode != 0:
             print(r.stdout[-4000:])
             print(r.stderr[-4000:])

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -309,133 +310,85 @@ object GraftFunctions {
     MultiMatchCounts(exprs(0), terms)
   }
 
-  /** Register custom functions on an EXISTING session (tests, notebooks). */
+  /** The engine's SQL functions by name. The builders are stable instances,
+    * so [[registerAll]] can tell a name this object bound from one bound by
+    * anyone else.
+    */
+  private val sqlFunctions
+      : Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "cosine_similarity" -> { exprs: Seq[Expression] =>
+      require(exprs.size == 2, "cosine_similarity(vec1, vec2)")
+      CosineSimilarity(exprs(0), exprs(1)) },
+    "lsh_bucket" -> lshBucketFromSql _,
+    "kgram_min_hash" -> kgramMinHashFromSql _,
+    "multi_match_counts" -> multiMatchFromSql _,
+    "poly_bloom_agg" -> { exprs: Seq[Expression] =>
+      require(exprs.size == 3, "poly_bloom_agg(key, numBits, k)")
+      PolyBloomAgg(exprs(0),
+        litInt(exprs(1), "poly_bloom_agg: numBits"),
+        litInt(exprs(2), "poly_bloom_agg: k")) },
+    "poly_bloom_contains" -> { exprs: Seq[Expression] =>
+      require(exprs.size == 4, "poly_bloom_contains(filter, key, numBits, k)")
+      PolyBloomContains(exprs(0), exprs(1),
+        litInt(exprs(2), "poly_bloom_contains: numBits"),
+        litInt(exprs(3), "poly_bloom_contains: k")) },
+    "kmv_sketch_agg" -> { exprs: Seq[Expression] =>
+      require(exprs.size == 2, "kmv_sketch_agg(key, k)")
+      KmvSketchAgg(exprs(0),
+        litInt(exprs(1), "kmv_sketch_agg: k")) },
+    "kmv_union_agg" -> { exprs: Seq[Expression] =>
+      require(exprs.size == 2, "kmv_union_agg(state, k)")
+      KmvUnionAgg(exprs(0),
+        litInt(exprs(1), "kmv_union_agg: k")) },
+    "word_ngram_hashes" -> wordNgramHashesFromSql _,
+    "bpe_merge_text" -> bpeMergeTextFromSql _,
+    "freq_sketch_agg" -> FreqSketch.freqSketchAggFromSql,
+    "freq_union_agg" -> FreqSketch.freqUnionAggFromSql,
+    "freq_sketch_items" -> FreqSketch.freqSketchItemsFromSql,
+    "freq_sketch_max_error" -> FreqSketch.freqSketchMaxErrorFromSql,
+    "kll_sketch_agg" -> { exprs: Seq[Expression] => KllSketchAgg(exprs(0),
+      if (exprs.size > 1) litInt(exprs(1), "kll_sketch_agg: k") else 200) },
+    "kll_union_agg" -> { exprs: Seq[Expression] => KllUnionAgg(exprs(0),
+      if (exprs.size > 1) litInt(exprs(1), "kll_union_agg: k") else 200) },
+    "kll_quantiles" -> { exprs: Seq[Expression] => KllQuantiles(exprs.head,
+      exprs.tail.map(e => litDouble(e, "kll_quantiles: rank"))) },
+    "kll_sketch_n" -> { exprs: Seq[Expression] => KllSketchN(exprs.head) },
+    "theta_sketch_agg" -> { exprs: Seq[Expression] => ThetaSketchAgg(exprs(0),
+      if (exprs.size > 1) litInt(exprs(1), "theta_sketch_agg: lgK")
+      else ThetaSketch.DefaultLgK) },
+    "theta_union_agg" -> { exprs: Seq[Expression] => ThetaUnionAgg(exprs(0),
+      if (exprs.size > 1) litInt(exprs(1), "theta_union_agg: lgK")
+      else ThetaSketch.DefaultLgK) },
+    "theta_estimate" -> { exprs: Seq[Expression] => ThetaEstimate(exprs.head) },
+    "theta_intersect" -> { exprs: Seq[Expression] =>
+      ThetaIntersect(exprs(0), exprs(1)) },
+    "theta_a_not_b" -> { exprs: Seq[Expression] => ThetaANotB(exprs(0), exprs(1)) },
+    "theta_lower_bound" -> { exprs: Seq[Expression] => ThetaBound(exprs(0),
+      if (exprs.size > 1) litInt(exprs(1), "theta_lower_bound: numStdDev")
+      else 2, lower = true) },
+    "theta_upper_bound" -> { exprs: Seq[Expression] => ThetaBound(exprs(0),
+      if (exprs.size > 1) litInt(exprs(1), "theta_upper_bound: numStdDev")
+      else 2, lower = false) },
+    "theta_intersect_estimate" -> { exprs: Seq[Expression] =>
+      ThetaIntersectEstimate(exprs(0), exprs(1)) },
+    "theta_a_not_b_estimate" -> { exprs: Seq[Expression] =>
+      ThetaANotBEstimate(exprs(0), exprs(1)) },
+    "jaro_winkler" -> { exprs: Seq[Expression] =>
+      JaroWinkler(exprs(0), exprs(1)) },
+    "sq8_encode" -> { exprs: Seq[Expression] => Sq8Encode(exprs.head) },
+    "sq8_cosine" -> { exprs: Seq[Expression] => Sq8Cosine(exprs(0), exprs(1)) }
+  )
+
+  /** Register custom functions on an EXISTING session (tests, notebooks).
+    * Names the session already binds to these builders are left alone, so a
+    * repeated call changes nothing and logs no "replaced a previously
+    * registered function" warning; a name bound to anything else (Spark
+    * 4.1's own `theta_sketch_agg`, say) is replaced.
+    */
   def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_similarity",
-      { exprs: Seq[Expression] =>
-        require(exprs.size == 2, "cosine_similarity(vec1, vec2)")
-        CosineSimilarity(exprs(0), exprs(1)) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_bucket", lshBucketFromSql, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kgram_min_hash", kgramMinHashFromSql, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "multi_match_counts", multiMatchFromSql, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "poly_bloom_agg",
-      { exprs: Seq[Expression] =>
-        require(exprs.size == 3, "poly_bloom_agg(key, numBits, k)")
-        PolyBloomAgg(exprs(0),
-          litInt(exprs(1), "poly_bloom_agg: numBits"),
-          litInt(exprs(2), "poly_bloom_agg: k")) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "poly_bloom_contains",
-      { exprs: Seq[Expression] =>
-        require(exprs.size == 4, "poly_bloom_contains(filter, key, numBits, k)")
-        PolyBloomContains(exprs(0), exprs(1),
-          litInt(exprs(2), "poly_bloom_contains: numBits"),
-          litInt(exprs(3), "poly_bloom_contains: k")) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_sketch_agg",
-      { exprs: Seq[Expression] =>
-        require(exprs.size == 2, "kmv_sketch_agg(key, k)")
-        KmvSketchAgg(exprs(0),
-          litInt(exprs(1), "kmv_sketch_agg: k")) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_union_agg",
-      { exprs: Seq[Expression] =>
-        require(exprs.size == 2, "kmv_union_agg(state, k)")
-        KmvUnionAgg(exprs(0),
-          litInt(exprs(1), "kmv_union_agg: k")) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_ngram_hashes", wordNgramHashesFromSql, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_merge_text", bpeMergeTextFromSql, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "freq_sketch_agg", FreqSketch.freqSketchAggFromSql, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "freq_union_agg", FreqSketch.freqUnionAggFromSql, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "freq_sketch_items", FreqSketch.freqSketchItemsFromSql, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "freq_sketch_max_error", FreqSketch.freqSketchMaxErrorFromSql, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kll_sketch_agg",
-      { exprs: Seq[Expression] => KllSketchAgg(exprs(0),
-        if (exprs.size > 1) litInt(exprs(1), "kll_sketch_agg: k") else 200) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kll_union_agg",
-      { exprs: Seq[Expression] => KllUnionAgg(exprs(0),
-        if (exprs.size > 1) litInt(exprs(1), "kll_union_agg: k") else 200) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kll_quantiles",
-      { exprs: Seq[Expression] => KllQuantiles(exprs.head,
-        exprs.tail.map(e => litDouble(e, "kll_quantiles: rank"))) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kll_sketch_n",
-      { exprs: Seq[Expression] => KllSketchN(exprs.head) }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_sketch_agg",
-      { exprs: Seq[Expression] => ThetaSketchAgg(exprs(0),
-        if (exprs.size > 1) litInt(exprs(1), "theta_sketch_agg: lgK")
-        else ThetaSketch.DefaultLgK) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_union_agg",
-      { exprs: Seq[Expression] => ThetaUnionAgg(exprs(0),
-        if (exprs.size > 1) litInt(exprs(1), "theta_union_agg: lgK")
-        else ThetaSketch.DefaultLgK) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_estimate",
-      { exprs: Seq[Expression] => ThetaEstimate(exprs.head) }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_intersect",
-      { exprs: Seq[Expression] => ThetaIntersect(exprs(0), exprs(1)) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_a_not_b",
-      { exprs: Seq[Expression] => ThetaANotB(exprs(0), exprs(1)) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_lower_bound",
-      { exprs: Seq[Expression] => ThetaBound(exprs(0),
-        if (exprs.size > 1) litInt(exprs(1), "theta_lower_bound: numStdDev")
-        else 2, lower = true) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_upper_bound",
-      { exprs: Seq[Expression] => ThetaBound(exprs(0),
-        if (exprs.size > 1) litInt(exprs(1), "theta_upper_bound: numStdDev")
-        else 2, lower = false) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_intersect_estimate",
-      { exprs: Seq[Expression] => ThetaIntersectEstimate(exprs(0), exprs(1)) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_a_not_b_estimate",
-      { exprs: Seq[Expression] => ThetaANotBEstimate(exprs(0), exprs(1)) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler",
-      { exprs: Seq[Expression] => JaroWinkler(exprs(0), exprs(1)) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sq8_encode", { exprs: Seq[Expression] => Sq8Encode(exprs.head) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sq8_cosine",
-      { exprs: Seq[Expression] => Sq8Cosine(exprs(0), exprs(1)) },
-      "built-in")
+    val registry = spark.sessionState.functionRegistry
+    for ((name, builder) <- sqlFunctions
+         if !registry.lookupFunctionBuilder(FunctionIdentifier(name)).contains(builder))
+      registry.createOrReplaceTempFunction(name, builder, "built-in")
   }
 }

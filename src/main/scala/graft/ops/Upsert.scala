@@ -85,12 +85,12 @@ object Upsert {
     * s3a://, … all go through the same API; `java.io`/`java.nio` would
     * silently see nothing on anything but the local disk.
     */
-  private def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {
+  private[graft] def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {
     val p = new Path(path)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  private def renameOrThrow(fs: FileSystem, from: Path, to: Path): Unit =
+  private[graft] def renameOrThrow(fs: FileSystem, from: Path, to: Path): Unit =
     if (!fs.rename(from, to))
       throw new java.io.IOException(s"rename failed: $from -> $to")
 

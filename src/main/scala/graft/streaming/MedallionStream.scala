@@ -172,10 +172,10 @@ object MedallionStream {
     * corrupt page genuinely re-occurring in a LATER trigger has a new
     * batch id and is kept.
     *
-    * The normalized good/quarantine frames are persisted for the sink's
-    * duration — the sink runs multiple actions (min, two writes, one
-    * isEmpty), and without the pin each would re-read and re-parse the
-    * bronze delta, forfeiting the single-read goal.
+    * The sink runs several actions (min, two writes, one isEmpty), so it
+    * pins the tagged pages ([[Flatten.tagPages]]) and the deduped rows for
+    * its duration: the fact and the quarantine frames both split the one
+    * pinned parse, and no action re-reads or re-parses the bronze delta.
     */
   def factEventsSinglePassQuery(spark: SparkSession, bronzeDir: String,
                                 factDir: String, quarantineDir: String,
@@ -238,10 +238,11 @@ object MedallionStream {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
       .exists(new org.apache.hadoop.fs.Path(dir))
     (batch: DataFrame, batchId: Long) => {
-        val (good, rawQuar) = Flatten.normalizePagesWithQuarantine(batch)
+        val tagged = Flatten.tagPages(batch).persist()
+        val (good, rawQuar) = Flatten.splitTagged(tagged)
         val flat = graft.ops.Dedup.firstWins(Flatten.factEvents(good),
           Seq("event_key"), Seq(col("received_at").desc)).persist()
-        val quar = rawQuar.withColumn("batch_id", lit(batchId)).persist()
+        val quar = rawQuar.withColumn("batch_id", lit(batchId))
         try {
           val fresh = if (!exists(factDir)) flat else {
             // The min probe is a driver-side action ON PURPOSE, and it is
@@ -286,7 +287,7 @@ object MedallionStream {
             freshQuar.write.mode("append").parquet(quarantineDir)
         } finally {
           flat.unpersist()
-          quar.unpersist()
+          tagged.unpersist()
         }
     }
   }

@@ -1,10 +1,17 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.pipeline.Medallion
 import graft.pipeline.Medallion.Layout
 import graft.sources.PagedSource.{Checkpoint, PullResult}
+import graft.streaming.MedallionStream
 
 /** Golden end-to-end: the full bronze → silver → gold lifecycle over a temp
   * table root, across three incremental runs exercising the reference's
@@ -140,8 +147,9 @@ class MedallionSpec extends SparkSpec {
       done, complete = true))
     val jobs = jobsOf(Medallion.refreshFactEvents(spark, l))
     // 11 measured on Spark 4.1.2 local[4] (19 when every consumer re-parsed
-    // the pages and each read inferred its schema); the headroom absorbs
-    // planner drift, not a re-parse or a schema-inference job
+    // the pages and each read inferred its schema; reading only the new
+    // bronze files shrinks what the jobs read, not how many run); the
+    // headroom absorbs planner drift, not a re-parse or a schema-inference job
     assert(jobs <= 13, s"incremental refreshFactEvents launched $jobs jobs")
 
     def snapshot() = (
@@ -154,4 +162,140 @@ class MedallionSpec extends SparkSpec {
     Medallion.refreshFactEvents(spark, l)
     assert(snapshot() == before, "re-running over unchanged bronze must append 0 rows")
   }
+
+  private val done = Checkpoint(1L, None)
+  private def tempRoot(): String = Files.createTempDirectory("graft-medallion").toString
+  private def land(l: Layout, media: String, dt: String, pages: String*): Unit =
+    Medallion.writeBronzePages(spark, l, media, dt, PullResult(pages, done, complete = true))
+
+  /** Visible files of a bronze partition directory, as Spark lists them. */
+  private def dataFiles(dir: Path): Seq[Path] =
+    Files.list(dir).iterator().asScala.toSeq
+      .filterNot(p => Seq("_", ".").exists(p.getFileName.toString.startsWith))
+
+  test("writeBronzePages lands a pull from the driver: no Spark job, nothing for an empty pull") {
+    val l = Layout(tempRoot())
+    val pages = Seq(page(ev("w1", "2025-05-01T10:00:00Z", "m1", 0.5)),
+      "<html>502 Bad Gateway</html>")
+    assert(jobsOf(land(l, "m1", "2025-05-01", pages: _*)) == 0)
+    assert(jobsOf(land(l, "m2", "2025-05-01")) == 0)
+    assert(!Files.exists(Paths.get(l.bronzeEvents, "media_id=m2")),
+      "an empty pull must write nothing")
+    val files = dataFiles(Paths.get(l.bronzeEvents, "media_id=m1", "dt=2025-05-01"))
+    assert(files.size == 1, files)
+    // JSON lines of {"payload": …}, one per page, in pull order
+    val json = new ObjectMapper()
+    val lines = Files.readAllLines(files.head).asScala.map(json.readTree)
+    assert(lines.map(_.fieldNames().asScala.toSeq) == Seq(Seq("payload"), Seq("payload")))
+    assert(lines.map(_.get("payload").asText()) == pages)
+  }
+
+  test("a driver-landed bronze file reads back as Spark's writer lays it out, " +
+       "through spark.read.json and the file stream, escaped partition values included") {
+    val root = tempRoot()
+    val l = Layout(root)
+    val media = "m/1 x:y=%" // '/', ':', '=' and '%' are escaped in a partition path
+    val dt = "2025-05-02"
+    val pages = Seq(page(ev("r1", "2025-05-02T10:00:00Z", media, 0.5)),
+      s"""[${ev("r2", "2025-05-02T11:00:00Z", media, 0.2)}]""")
+    assert(jobsOf(land(l, media, dt, pages: _*)) == 0)
+
+    // the partition directory is the one Spark's own writer makes
+    val ref = s"$root/spark-written"
+    pages.map(p => (p, media, dt)).toDF("payload", "media_id", "dt")
+      .write.partitionBy("media_id", "dt").json(ref)
+    def partitionDirs(base: String): Seq[String] = {
+      val b = Paths.get(base)
+      Files.walk(b).iterator().asScala.filter(Files.isDirectory(_))
+        .map(b.relativize).filter(_.getNameCount == 2).map(_.toString).toSeq
+    }
+    assert(partitionDirs(l.bronzeEvents) == partitionDirs(ref))
+    assert(partitionDirs(ref).size == 1)
+
+    // a landing that died before its rename leaves only a `_`-prefixed file
+    val partDir = Paths.get(l.bronzeEvents).resolve(partitionDirs(ref).head)
+    val ghost = s"[${ev("ghost", "2025-05-02T12:00:00Z", media, 0.1)}]"
+    Files.write(partDir.resolve("_part-died-before-rename.json"),
+      ("{\"payload\":" + new ObjectMapper().writeValueAsString(ghost) + "}\n")
+        .getBytes("UTF-8"))
+
+    val schema = "payload STRING, media_id STRING, dt STRING"
+    val expected = pages.map(p => (p, media, dt)).toSet
+    val batch = spark.read.schema(schema).option("basePath", l.bronzeEvents)
+      .json(l.bronzeEvents).as[(String, String, String)].collect().toSet
+    assert(batch == expected)
+    val q = spark.readStream.schema(schema).option("basePath", l.bronzeEvents)
+      .json(s"${l.bronzeEvents}/*/*")
+      .writeStream.format("memory").queryName("landed_bronze_pages")
+      .trigger(Trigger.AvailableNow()).start()
+    q.processAllAvailable(); q.stop()
+    assert(spark.table("landed_bronze_pages").as[(String, String, String)]
+      .collect().toSet == expected)
+    val fact = MedallionStream.runOnce(spark, l.bronzeEvents, s"$root/fact", s"$root/cp")
+    assert(fact.select("event_key").as[String].collect().sorted.toSeq == Seq("r1", "r2"))
+  }
+
+  // A page much larger than any other input of the specs below: a re-parse
+  // of it shows in the bytes a refresh reads.
+  private val pad = "x" * 1000000
+  private def paddedPage(events: String*): String =
+    s"""{"data":[${events.mkString(",")}],"pad":"$pad"}"""
+
+  test("an incremental refresh parses only the bronze files landed since the last run") {
+    val l = Layout(tempRoot())
+    land(l, "m1", "2025-03-01", paddedPage(ev("h1", "2025-03-01T10:00:00Z", "m1", 0.5)))
+    Medallion.refreshFactEvents(spark, l)
+    // the next pull lands in the watermark's own day, inside the listed window
+    land(l, "m1", "2025-03-01", page(ev("h1", "2025-03-01T10:00:00Z", "m1", 0.5),
+      ev("h2", "2025-03-01T12:00:00Z", "m1", 0.1)))
+    val read = inputBytesOf(Medallion.refreshFactEvents(spark, l))
+    assert(read < pad.length / 4, s"the refresh read $read bytes: it re-parsed an old file")
+    val keys = spark.read.parquet(l.factEvents).select("event_key").as[String].collect()
+    assert(keys.sorted.toSeq == Seq("h1", "h2"))
+  }
+
+  test("a crash after the fact append re-reads only that run's files and duplicates nothing; " +
+       "an unreadable manifest fails the run") {
+    val root = tempRoot()
+    val l = Layout(root)
+    land(l, "m1", "2025-03-01", paddedPage(ev("c1", "2025-03-01T10:00:00Z", "m1", 0.5)))
+    Medallion.refreshFactEvents(spark, l)
+    land(l, "m1", "2025-03-02", page(ev("c1", "2025-03-01T10:00:00Z", "m1", 0.5),
+      ev("c2", "2025-03-02T09:00:00Z", "m1", 0.7)), "<html>504 Gateway Timeout</html>")
+
+    // die after the fact append, before the manifest and watermark swaps:
+    // the control state the run started from comes back
+    val control = Seq(l.state, l.bronzeManifest).map(Paths.get(_))
+    val saved = Paths.get(root, "saved-control")
+    control.foreach(p => copyTree(p, saved.resolve(p.getFileName)))
+    Medallion.refreshFactEvents(spark, l)
+    val quarantined = spark.read.parquet(l.quarantine).count()
+    assert(quarantined == 1)
+    control.foreach { p => deleteTree(p); copyTree(saved.resolve(p.getFileName), p) }
+
+    val read = inputBytesOf(Medallion.refreshFactEvents(spark, l))
+    assert(read > 0 && read < pad.length / 4,
+      s"the re-run read $read bytes: it must re-parse the crashed run's files only")
+    val keys = spark.read.parquet(l.factEvents).select("event_key").as[String].collect()
+    assert(keys.sorted.toSeq == Seq("c1", "c2"), "0 duplicate event_keys")
+    assert(spark.read.parquet(l.quarantine).count() == quarantined,
+      "0 extra quarantine rows")
+
+    val manifests = dataFiles(Paths.get(l.bronzeManifest))
+    assert(manifests.size == 1, manifests)
+    Files.write(manifests.head, "not a manifest\n".getBytes("UTF-8"))
+    Files.deleteIfExists(manifests.head.resolveSibling(s".${manifests.head.getFileName}.crc"))
+    land(l, "m1", "2025-03-03", page(ev("c3", "2025-03-03T09:00:00Z", "m1", 0.3)))
+    val err = intercept[IllegalStateException](Medallion.refreshFactEvents(spark, l))
+    assert(err.getMessage.contains("unreadable bronze manifest"), err.getMessage)
+  }
+
+  private def copyTree(from: Path, to: Path): Unit =
+    if (Files.exists(from)) Files.walk(from).iterator().asScala.foreach { p =>
+      val target = to.resolve(from.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(target) else Files.copy(p, target)
+    }
+
+  private def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
 }

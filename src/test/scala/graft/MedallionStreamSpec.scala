@@ -1,9 +1,18 @@
 package graft
 
+import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.pipeline.Medallion
 import graft.pipeline.Medallion.Layout
+import graft.schema.Schemas
 import graft.sources.PagedSource.{Checkpoint, PullResult}
 import graft.streaming.MedallionStream
 
@@ -186,5 +195,56 @@ class MedallionStreamSpec extends SparkSpec {
     // keeps IsNull alongside the bound)
     assert(pushed.contains("IsNull(received_at"),
       s"null-event-time rows must survive the pushed slice, got: $pushed")
+  }
+
+  test("single-pass sink parses each micro-batch's page envelope once") {
+    val root = java.nio.file.Files.createTempDirectory("graft-mstream-parse").toString
+    val l = Layout(root)
+    val (fact, quar, cp) = (s"$root/fact", s"$root/quarantine", s"$root/cp")
+    Medallion.writeBronzePages(spark, l, "m1", "2025-04-01", PullResult(Seq(
+      s"""{"data":[${ev("p1", "2025-04-01T10:00:00Z", "m1")}]}"""),
+      Checkpoint(), complete = true))
+    MedallionStream.runOnceSinglePass(spark, l.bronzeEvents, fact, quar, cp)
+    // the measured micro-batch takes every branch: the min probe, the fact
+    // anti-join and append, the quarantine check and append
+    Medallion.writeBronzePages(spark, l, "m1", "2025-04-02", PullResult(Seq(
+      s"""{"events":[${ev("p2", "2025-04-02T10:00:00Z", "m1")}]}""",
+      "<html>502 Bad Gateway</html>"), Checkpoint(), complete = true))
+
+    val plans = scala.collection.mutable.ArrayBuffer.empty[LogicalPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized(plans += qe.optimizedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerDrain(spark.sparkContext) // no event of the first run may reach it
+    spark.listenerManager.register(listener)
+    try MedallionStream.runOnceSinglePass(spark, l.bronzeEvents, fact, quar, cp)
+    finally {
+      ListenerDrain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    assert(spark.read.parquet(quar).count() == 1)
+
+    // envelope parses the micro-batch runs: one per plan that parses
+    // outside a cache, plus one per cached relation whose body parses
+    // (each pinned frame is computed once, however many actions read it)
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
+    def inExprs(node: QueryPlan[_]): Int = node.expressions.map(_.collect {
+      case j: JsonToStructs if j.schema == Schemas.wistiaEventPage => j }.size).sum
+    def cached(r: InMemoryRelation): Int =
+      if (seen.add(r.cacheBuilder)) executed(r.cacheBuilder.cachedPlan) else 0
+    def executed(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => executed(a.executedPlan)
+      case s: QueryStageExec => executed(s.plan)
+      case m: InMemoryTableScanExec => cached(m.relation)
+      case node => inExprs(node) + node.children.map(executed).sum
+    }
+    def parses(plan: LogicalPlan): Int = plan.collect {
+      case r: InMemoryRelation => cached(r)
+      case node => inExprs(node)
+    }.sum
+    assert(plans.map(parses).sum == 1, plans.mkString("\n"))
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.graft.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,12 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 
-  /** Spark jobs `body` launches. */
-  def jobsOf(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
+  /** Runs `body` with `l` attached, seeing exactly the events it causes. */
+  private def listening(l: SparkListener)(body: => Unit): Unit = {
     ListenerDrain(spark.sparkContext)
     spark.sparkContext.addSparkListener(l)
     try body
@@ -24,6 +20,24 @@ trait SparkSpec extends AnyFunSuite {
       ListenerDrain(spark.sparkContext)
       spark.sparkContext.removeSparkListener(l)
     }
+  }
+
+  /** Spark jobs `body` launches. */
+  def jobsOf(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    })(body)
+    n.get
+  }
+
+  /** Bytes Spark tasks read from storage while `body` runs. */
+  def inputBytesOf(body: => Unit): Long = {
+    val n = new java.util.concurrent.atomic.AtomicLong
+    listening(new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => n.addAndGet(m.inputMetrics.bytesRead))
+    })(body)
     n.get
   }
 

@@ -2124,11 +2124,13 @@ object SparkEntry {
     // S1–S4 + P8 + T2/T4/T5 END TO END (round 16): the reference's whole
     // bronze→silver pipeline through the FIRST-CLASS DataSourceV2 paged
     // source — a deterministic API serves an events slice as Wistia
-    // JSON pages, MedallionStream.factEventsFromApiQuery drains it
-    // under Trigger.AvailableNow with Spark's offset log carrying the
-    // (media, page) checkpoint, and the landed fact parquet is the
-    // result. The oracle re-derives the same flatten straight from the
-    // events table, so the driver's hash certifies the
+    // JSON pages, MedallionStream.factEventsFromApiSinglePassQuery
+    // drains it under Trigger.AvailableNow with Spark's offset log
+    // carrying the (media, page) checkpoint and lands each micro-batch
+    // through the batch refresh's silver sink (dedup, event_key
+    // anti-join, dt-partitioned fact, quarantine); the landed fact
+    // parquet is the result. The oracle re-derives the same flatten
+    // straight from the events table, so the driver's hash certifies the
     // pull→normalize→flatten→dedup cycle is lossless and exactly-once.
     // event_id % 20 keeps the served slice API-response-sized (the
     // pull is driver-side BY DESIGN — see EventsPagedApi's scaladoc).

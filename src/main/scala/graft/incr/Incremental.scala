@@ -44,30 +44,33 @@ object Incremental {
     * identity dedup, or the boundary events are silently lost.
     */
   def newRows(batch: DataFrame, state: DataFrame, keyCol: String,
-              tsCol: String): DataFrame =
-    gated(batch, state, keyCol, tsCol, inclusive = false)
-
-  /** T1 inclusive variant: re-admits rows AT the watermark so same-
-    * timestamp events arriving in a later run are not dropped; the caller
-    * must dedup by event identity (the medallion path anti-joins on
-    * event_key against the existing fact table).
-    */
-  def newRowsInclusive(batch: DataFrame, state: DataFrame, keyCol: String,
-                       tsCol: String): DataFrame =
-    gated(batch, state, keyCol, tsCol, inclusive = true)
-
-  // State columns are renamed to reserved names before the join so a batch
-  // that itself carries a `source_key`/`high_water` column (e.g. advance()
-  // output piped back through) neither collides nor gets silently dropped.
-  private def gated(batch: DataFrame, state: DataFrame, keyCol: String,
-                    tsCol: String, inclusive: Boolean): DataFrame = {
+              tsCol: String): DataFrame = {
+    // State columns are renamed to reserved names before the join so a
+    // batch that itself carries a `source_key`/`high_water` column (e.g.
+    // advance() output piped back through) neither collides nor gets
+    // silently dropped.
     val s = state.select(col("source_key").as("__graft_sk"),
       col("high_water").as("__graft_hw"))
-    val bound = coalesce(col("__graft_hw"), epoch)
-    val cond = if (inclusive) col(tsCol) >= bound else col(tsCol) > bound
     batch.join(broadcast(s), batch(keyCol) === s("__graft_sk"), "left")
-      .filter(cond)
+      .filter(col(tsCol) > coalesce(col("__graft_hw"), epoch))
       .drop("__graft_sk", "__graft_hw")
+  }
+
+  /** T1 inclusive variant: re-admits rows AT the watermark so same-
+    * timestamp events arriving in a later run are not dropped, and keeps
+    * rows with a null `tsCol`, which no watermark proves old; the caller
+    * must dedup by event identity (the medallion path anti-joins on
+    * event_key against the existing fact table). The state is the
+    * per-key `highWater` map the caller already holds (one entry per
+    * source): the gate is a map lookup in the batch's own projection, with
+    * no join and no job.
+    */
+  def newRowsInclusive(batch: DataFrame,
+                       highWater: Map[String, java.sql.Timestamp],
+                       keyCol: String, tsCol: String): DataFrame = {
+    val hw = if (highWater.isEmpty) epoch
+      else coalesce(try_element_at(typedLit(highWater), col(keyCol)), epoch)
+    batch.filter(col(tsCol) >= hw || col(tsCol).isNull)
   }
 
   /** T3: advance the watermark to max(ts) per key seen in this batch, in

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{
   getPartitionPathString, unescapePathName}
 import org.apache.spark.sql.functions._
@@ -78,77 +78,150 @@ object Medallion {
   }
 
   /** Silver fact path (REF wistia_transform_silver.py:16-67): parse the
-    * bronze pages no earlier run parsed, normalize the dynamic envelope,
-    * flatten to 19 columns, dedup by event_key (deterministic total order),
-    * append only events not already in the fact table.
+    * bronze pages no earlier run parsed and land them through the silver
+    * sink ([[withSilverRows]], [[appendQuarantine]], [[appendFact]]), the
+    * same code the streaming path ([[graft.streaming.MedallionStream]]) runs
+    * per micro-batch.
     *
     * Each bronze file is parsed once. The run lists the data files of the
     * partitions at/after the oldest stored watermark day (a driver-side
     * listing of that window, no job) and subtracts the consumed-file
     * manifest under `control/`, so it reads only the files landed since the
     * last run, not the earlier pulls that share the watermark's day. A run
-    * with no new file changes nothing. Each run parses and dedups its delta
-    * once: the quarantine append, the fact append and the watermark advance
-    * read two pins, tagged pages and rows.
+    * with no new file changes nothing.
     *
     * Exactly-once without a transactional format:
     *  1. the watermark gate is INCLUSIVE (same-timestamp events arriving in
-    *     a later run are not lost) and only prunes work;
-    *  2. idempotence comes from an anti-join on event_key against the
-    *     existing fact table and, for quarantined pages, on the payload hash;
+    *     a later run are not lost) and keeps null-time rows, so it only
+    *     prunes work;
+    *  2. idempotence comes from the sink's anti-joins: on event_key for the
+    *     fact and on (raw_payload, batch id) for quarantined pages. The batch
+    *     id is the manifest version the run publishes;
     *  3. the manifest swap follows the fact append and the watermark swap
     *     comes last, as the reference persists its watermark only after a
     *     successful run (REF wistia_pull_wistia_api.py:267). A crash at any
-    *     point re-reads at most that one run's files, and the anti-joins
-    *     absorb them (a blind append would duplicate them forever).
+    *     point re-reads at most that one run's files under the same batch
+    *     id, and the anti-joins absorb them (a blind append would duplicate
+    *     them forever).
+    *
+    * A run that finds no manifest (the first run, or one after the control
+    * state was lost) cannot tell re-parsed pages from new ones: it takes the
+    * batch id after the highest one in the quarantine, publishes that as the
+    * manifest version, so no later run reuses an id, and absorbs pages
+    * against the whole quarantine. Only this path reads beyond one batch.
     */
   def refreshFactEvents(spark: SparkSession, layout: Layout): DataFrame = {
     val pinned = Incremental.pinnedState(spark, layout.state)
-    val minDt: Option[String] = {
-      val hw = pinned.collect().map(_.getTimestamp(1)).filter(_ != null)
-      if (hw.isEmpty) None
-      else Some(hw.min.toInstant.toString.take(10)) // min across sources
-    }
+    val watermarks = pinned.collect().filterNot(_.isNullAt(1))
+      .map(r => (Option(r.getString(0)), r.getTimestamp(1)))
+    val minDt = watermarks.map(_._2).minByOption(_.getTime)
+      .map(_.toInstant.toString.take(10)) // min across sources
+    // a null source_key matches no row, as in a join
+    val highWater = watermarks.collect { case (Some(k), hw) => k -> hw }.toMap
     val fs = fsOf(spark, layout)
     val window = bronzeWindow(fs, layout, minDt)
     val (version, consumed) = readManifest(fs, layout)
     val delta = window.filterNot { case (key, _) => consumed(key) }
     if (delta.nonEmpty) {
+      val batchId = 1 + (if (version > 0) version else lastQuarantineBatch(spark, layout))
       val pages = spark.read.schema("payload STRING")
         .json(delta.map(_._2.toString): _*)
-      // T6: unparseable pages isolate into the quarantine table (the
-      // reference's per-media try/except, REF wistia_pull_wistia_api.py:
-      // 261-267, generalized per page).
-      val tagged = Flatten.tagPages(pages).persist()
-      val (rows, quarantined) = Flatten.splitTagged(tagged)
-      val deduped = Dedup.firstWins(Flatten.factEvents(rows), Seq("event_key"),
-        Schemas.factEvents.fieldNames.filterNot(_ == "event_key").toSeq
-          .map(c => if (c == "received_at") col(c).desc else col(c).asc))
-        .persist()
-      try {
-        if (!quarantined.isEmpty) appendNewQuarantined(spark, layout, quarantined)
-        val candidates = Incremental.newRowsInclusive(
-          deduped, pinned, "media_id", "received_at")
-        val fresh =
-          if (!Tables.pathExists(spark, layout.factEvents)) candidates
-          else candidates.join(spark.read.schema("event_key STRING")
-            .parquet(layout.factEvents).select("event_key"), Seq("event_key"),
-            "left_anti")
-        // fact is dt-partitioned so downstream gold refreshes prune to the
-        // days a run actually touched.
-        fresh.withColumn("dt", to_date(col("received_at")))
-          .write.mode("append").partitionBy("dt").parquet(layout.factEvents)
-        writeManifest(fs, layout, version + 1, window.map(_._1))
+      withSilverRows(pages) { (rows, quarantined) =>
+        appendQuarantine(spark, quarantined, layout.quarantine, batchId,
+          sinceBatch = if (version > 0) batchId else 0L)
+        appendFact(spark, Incremental.newRowsInclusive(
+          rows, highWater, "media_id", "received_at"), layout.factEvents)
+        writeManifest(fs, layout, batchId, window.map(_._1))
         Upsert.atomicReplace(spark,
-          Incremental.advance(pinned, deduped, "media_id", "received_at"),
+          Incremental.advance(pinned, rows, "media_id", "received_at"),
           layout.state)
-      } finally {
-        deduped.unpersist()
-        tagged.unpersist()
       }
     }
-    readFact(spark, layout)
+    readFact(spark, layout.factEvents)
   }
+
+  /** The highest batch id in the quarantine, 0 when there is none. */
+  private def lastQuarantineBatch(spark: SparkSession, layout: Layout): Long =
+    if (!Tables.pathExists(spark, layout.quarantine)) 0L
+    else spark.read.schema(quarantineSchema).parquet(layout.quarantine)
+      .agg(coalesce(max("batch_id"), lit(0L))).first().getLong(0)
+
+  /** The silver sink's parse: pins [[Flatten.tagPages]] of `pages` (one
+    * `payload` column), splits it, pins the fact rows deduped by event_key
+    * under one total order (latest `received_at` first, then every other
+    * column ascending), and lends (rows, quarantined pages) to `body`. Both
+    * pins are dropped when `body` returns. The tagged pin keeps `payload`
+    * only for pages no envelope rule recognizes: the rest are never read
+    * again.
+    */
+  private[graft] def withSilverRows[T](pages: DataFrame)
+                                      (body: (DataFrame, DataFrame) => T): T = {
+    val tagged = Flatten.tagPages(pages)
+      .withColumn("payload", when(col("_rows").isNull, col("payload"))).persist()
+    val (rows, quarantined) = Flatten.splitTagged(tagged)
+    val deduped = Dedup.firstWins(Flatten.factEvents(rows), Seq("event_key"),
+      Schemas.factEvents.fieldNames.filterNot(_ == "event_key").toSeq
+        .map(c => if (c == "received_at") col(c).desc else col(c).asc))
+      .persist()
+    try body(deduped, quarantined)
+    finally {
+      deduped.unpersist()
+      tagged.unpersist()
+    }
+  }
+
+  /** The silver sink's fact append: appends the `rows` whose event_key
+    * (matched null-safely, so null keys are replay-idempotent too) is not
+    * yet in the fact at `factDir`, partitioned by `dt`, the day of
+    * `received_at`. A re-delivered event carries its original
+    * `received_at`, so its first copy lies at/after the earliest day among
+    * `rows`: only the fact slice `dt >= that day OR dt IS NULL` is read.
+    * The day is probed as a literal because a scalar-subquery bound does
+    * not reach the scan as a partition filter; when `rows` is a pin, the
+    * probe is the action that builds it, so it costs no extra pass. It is
+    * a top-1, one job, where a global `min` adds a shuffle stage, so a job,
+    * under AQE. Rows with no `received_at` need only the null partition.
+    * Before the first append there is nothing to probe or anti-join.
+    */
+  private[graft] def appendFact(spark: SparkSession, rows: DataFrame,
+                                factDir: String): Unit = {
+    val fresh = if (!Tables.pathExists(spark, factDir)) rows else {
+      val fromDay = rows.select(to_date(col("received_at")).as("d"))
+        .orderBy(col("d").asc_nulls_last).head(1).headOption
+        .flatMap(r => Option(r.getDate(0))).getOrElse(java.sql.Date.valueOf("9999-12-31"))
+      val prior = readFact(spark, factDir)
+        .filter(col("dt") >= lit(fromDay) || col("dt").isNull)
+        .select(col("event_key").as("_prior_key"))
+      rows.join(prior, rows("event_key") <=> prior("_prior_key"), "left_anti")
+    }
+    fresh.withColumn("dt", to_date(col("received_at")))
+      .write.mode("append").partitionBy("dt").parquet(factDir)
+  }
+
+  private val quarantineSchema = "raw_payload STRING, batch_id BIGINT"
+
+  /** The silver sink's quarantine append, keyed by (raw_payload, batch id):
+    * the pages of `quarantined` not yet in the quarantine under a batch id
+    * in [`sinceBatch`, `batchId`] are appended as batch `batchId`. A re-run
+    * of a batch reuses its id and is absorbed, reading only that id's rows
+    * when `sinceBatch` is `batchId`; a byte-identical corrupt page in a
+    * later batch is kept.
+    */
+  private[graft] def appendQuarantine(spark: SparkSession,
+                                      quarantined: DataFrame,
+                                      quarantineDir: String, batchId: Long,
+                                      sinceBatch: Long): Unit =
+    if (!quarantined.isEmpty) {
+      val keyed = quarantined.withColumn("batch_id", lit(batchId))
+      val fresh = if (!Tables.pathExists(spark, quarantineDir)) keyed else {
+        val prior = spark.read.schema(quarantineSchema).parquet(quarantineDir)
+          .filter(col("batch_id").between(sinceBatch, batchId))
+          .select(col("raw_payload").as("_prior_payload"))
+        keyed.join(prior, keyed("raw_payload") <=> prior("_prior_payload"),
+          "left_anti")
+      }
+      fresh.write.mode("append").parquet(quarantineDir)
+    }
 
   /** The bronze data files in the `dt` partitions at/after `minDt` (all of
     * them for None), keyed by their `media_id=…/dt=…/name` path under the
@@ -210,24 +283,13 @@ object Medallion {
       .foreach(fs.delete(_, false))
   }
 
-  // Known schemas: a schemaless parquet read runs a schema-inference job.
-  private def readFact(spark: SparkSession, layout: Layout): DataFrame =
-    spark.read.schema(Schemas.factEvents.add("dt", DateType))
-      .parquet(layout.factEvents)
-
-  /** Idempotent quarantine append: re-parsing old bronze must not re-add
-    * pages already quarantined (keyed by payload hash).
+  /** The fact at `factDir`, empty before its first append. The schema is
+    * given: a schemaless parquet read runs a schema-inference job.
     */
-  private def appendNewQuarantined(spark: SparkSession, layout: Layout,
-                                   quarantined: DataFrame): Unit = {
-    val keyed = quarantined.withColumn("payload_hash", md5(col("raw_payload")))
-    val fresh =
-      if (Tables.pathExists(spark, layout.quarantine)) {
-        val existing = spark.read.schema("payload_hash STRING")
-          .parquet(layout.quarantine)
-        keyed.join(existing, Seq("payload_hash"), "left_anti")
-      } else keyed
-    fresh.write.mode("append").parquet(layout.quarantine)
+  private[graft] def readFact(spark: SparkSession, factDir: String): DataFrame = {
+    val schema = Schemas.factEvents.add("dt", DateType)
+    if (Tables.pathExists(spark, factDir)) spark.read.schema(schema).parquet(factDir)
+    else spark.createDataFrame(java.util.List.of[Row](), schema)
   }
 
   /** Silver dim path (REF wistia_transform_silver.py:71-112): metadata JSON
@@ -255,10 +317,12 @@ object Medallion {
     * rewrites only the days present in the refresh: pass `onlyDays` (the
     * dt values a silver run touched) and both the fact SCAN (dt partition
     * pruning) and the gold WRITE stay O(delta); None rebuilds everything.
+    * Events with no `received_at` have no day: they stay in the fact's null
+    * `dt` partition and out of the rollup, so both forms agree.
     */
   def refreshDailyAgg(spark: SparkSession, layout: Layout,
                       onlyDays: Option[Seq[java.sql.Date]] = None): DataFrame = {
-    val allFact = readFact(spark, layout)
+    val allFact = readFact(spark, layout.factEvents).filter(col("dt").isNotNull)
     val fact = onlyDays.fold(allFact)(days =>
       allFact.filter(col("dt").isin(days.map(d => lit(d)): _*)))
     val daily = fact

@@ -172,7 +172,8 @@ object HttpPagedSource {
     * per-media loop), every fetch through ONE shared client and the
     * retry schedule. Register it under a key
     * (`PagedStream.register(key, this)`) and the whole api→fact
-    * pipeline ([[graft.streaming.MedallionStream.factEventsFromApiQuery]])
+    * pipeline
+    * ([[graft.streaming.MedallionStream.factEventsFromApiSinglePassQuery]])
     * runs over live HTTP.
     */
   def mediaApi(media: Seq[String], urlFor: (String, Long) => String,

@@ -2,18 +2,17 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.{PagedSource, PagedStream}
 
 /** The WHOLE reference pipeline — paginated API pull → page normalize →
-  * flatten → watermarked dedup → fact parquet (REF
+  * flatten → dedup → fact parquet (REF
   * glue_jobs/bronze/wistia_pull_wistia_api.py:109-232 →
   * glue_jobs/silver/wistia_transform_silver.py:29-67) — as ONE
   * oracle-checkable unit: a deterministic [[PagedStream.MediaPagedApi]]
   * whose feeds are the `events` table serialized into Wistia-shaped JSON
   * pages, drained end to end through the first-class DataSourceV2 source
-  * by [[MedallionStream.factEventsFromApiQuery]].
+  * by [[MedallionStream.factEventsFromApiSinglePassQuery]].
   *
   * Why the feed content is built with a driver `collect()`: this object
   * plays the REMOTE API SERVER. In this architecture the API client is
@@ -169,15 +168,13 @@ object EventsPagedApi {
 
   /** One full api→fact drain, returning the populated fact columns:
     * register the [[fromEvents]] feeds, run
-    * [[MedallionStream.factEventsFromApiQuery]] under
+    * [[MedallionStream.factEventsFromApiSinglePassQuery]] under
     * `Trigger.AvailableNow` (the T4 batch-incremental mode — the source
     * drains to pagination completion and the query terminates itself),
-    * read the fact back. The watermark delay is the BACKFILL setting —
-    * effectively unbounded — because a drain replays history in feed
-    * order, not event-time order: a steady-state "1 day" bar would
-    * discard genuinely-old events that arrive in a later micro-batch
-    * than a newer feed's pages. Dedup state is keyed by `event_key`,
-    * bounded by the drained slice. Fact/checkpoint dirs are fresh per
+    * read the fact back. The sink dedups each micro-batch and anti-joins
+    * it against the fact from its earliest day on, so an event of any
+    * age that arrives in a later micro-batch than a newer feed's pages
+    * still lands once. Fact/quarantine/checkpoint dirs are fresh per
     * call (a drain is one run of the reference job); the registry key is
     * derived from them so concurrent drains never collide.
     */
@@ -301,10 +298,8 @@ object EventsPagedApi {
     val key = s"events-api-${new java.io.File(root).getName}"
     PagedStream.register(key, api)
     try {
-      val q = MedallionStream.factEventsFromApiQuery(spark, key,
-        s"$root/fact", s"$root/cp", maxPagesPerTrigger,
-        watermarkDelay = "36500 days",
-        trigger = Some(Trigger.AvailableNow()))
+      val q = MedallionStream.factEventsFromApiSinglePassQuery(spark, key,
+        s"$root/fact", s"$root/quarantine", s"$root/cp", maxPagesPerTrigger)
       try require(q.awaitTermination(600000L),
         "factsViaApi: the AvailableNow drain did not terminate")
       // a timed-out (or otherwise failed) drain must not leave a zombie
@@ -313,25 +308,9 @@ object EventsPagedApi {
       // finally below pulls the registration
       finally if (q.isActive) q.stop()
     } finally PagedStream.unregister(key)
-    val factDir = s"$root/fact"
-    // an empty served slice commits zero batches and never creates the
-    // sink dir — that is an empty result, not a crash (the
-    // runOnceSinglePass convention)
-    if (graft.sources.Tables.pathExists(spark, factDir))
-      spark.read.parquet(factDir).select(
-        col("event_key"), col("received_at"), col("percent_viewed"),
-        col("visitor_key"), col("media_id"), col("media_name"))
-    else {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("event_key", StringType),
-          StructField("received_at", TimestampType),
-          StructField("percent_viewed", DoubleType),
-          StructField("visitor_key", StringType),
-          StructField("media_id", StringType),
-          StructField("media_name", StringType))))
-    }
+    // an empty served slice commits zero batches: an empty fact
+    graft.pipeline.Medallion.readFact(spark, s"$root/fact").select(
+      col("event_key"), col("received_at"), col("percent_viewed"),
+      col("visitor_key"), col("media_id"), col("media_name"))
   }
 }

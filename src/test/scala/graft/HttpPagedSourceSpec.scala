@@ -207,9 +207,8 @@ class HttpPagedSourceSpec extends SparkSpec {
         backoffMillis = Seq(1L, 2L), sleep = _ => ())
       PagedStream.register("http-spec", api)
       try {
-        val q = MedallionStream.factEventsFromApiQuery(spark, "http-spec",
-          s"$root/fact", s"$root/cp", maxPagesPerTrigger = 2,
-          trigger = Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
+        val q = MedallionStream.factEventsFromApiSinglePassQuery(spark, "http-spec",
+          s"$root/fact", s"$root/quarantine", s"$root/cp", maxPagesPerTrigger = 2)
         assert(q.awaitTermination(120000))
       } finally PagedStream.unregister("http-spec")
       val out = spark.read.parquet(s"$root/fact")

@@ -16,9 +16,10 @@ import graft.schema.Schemas
 import graft.sources.PagedSource.{Checkpoint, PullResult}
 import graft.streaming.MedallionStream
 
-/** The streaming silver path must reproduce the batch pipeline's fact
-  * table, absorb re-delivered duplicates via the watermarked dedup, and
-  * resume from its checkpoint without reprocessing.
+/** The streaming silver path lands bronze through the batch refresh's
+  * silver sink: it must reproduce the batch pipeline's fact table and
+  * quarantine, absorb re-delivered duplicates, and resume from its
+  * checkpoint without reprocessing.
   */
 class MedallionStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -27,50 +28,6 @@ class MedallionStreamSpec extends SparkSpec {
     s"""{"event_key":"$key","received_at":"$ts","percent_viewed":0.5,
        |"visitor_key":"v-$key","media_id":"$media","media_name":"vid"}"""
       .stripMargin.replaceAll("\n", "")
-
-  test("streaming silver path: ingest, dedup within watermark, checkpoint resume") {
-    val root = java.nio.file.Files.createTempDirectory("graft-mstream").toString
-    val l = Layout(root)
-    val fact = s"$root/stream/fact"
-    val cp = s"$root/stream/cp"
-    val done = Checkpoint()
-
-    // batch 1: two pages, one duplicate event across pages
-    Medallion.writeBronzePages(spark, l, "m1", "2025-04-01", PullResult(Seq(
-      s"""{"data":[${ev("s1", "2025-04-01T10:00:00Z", "m1")},
-         |${ev("s2", "2025-04-01T11:00:00Z", "m1")}]}"""
-        .stripMargin.replaceAll("\n", ""),
-      s"""[${ev("s2", "2025-04-01T11:00:00Z", "m1")},
-         |${ev("s3", "2025-04-01T12:00:00Z", "m1")}]"""
-        .stripMargin.replaceAll("\n", "")), done, complete = true))
-
-    val out1 = MedallionStream.runOnce(spark, l.bronzeEvents, fact, cp)
-    assert(out1.count() == 3, "duplicate s2 must be absorbed by the stream dedup")
-    assert(out1.select("event_key").distinct().count() == 3)
-
-    // batch 2: new bronze partition; restart from checkpoint
-    Medallion.writeBronzePages(spark, l, "m1", "2025-04-02", PullResult(Seq(
-      s"""{"data":[${ev("s4", "2025-04-02T09:00:00Z", "m1")}]}"""),
-      done, complete = true))
-    val out2 = MedallionStream.runOnce(spark, l.bronzeEvents, fact, cp)
-    assert(out2.count() == 4, "restart must process only the new file")
-    assert(out2.select("event_key").distinct().count() == 4)
-
-    // pure restart with nothing new: no growth
-    val out3 = MedallionStream.runOnce(spark, l.bronzeEvents, fact, cp)
-    assert(out3.count() == 4)
-
-    // streaming output must match the batch pipeline's view of event keys
-    val batchKeys = graft.ops.Dedup.firstWins(
-      graft.ops.Flatten.factEvents(graft.ops.Flatten.normalizePages(
-        spark.read.schema(new org.apache.spark.sql.types.StructType()
-          .add("payload", org.apache.spark.sql.types.StringType))
-          .json(s"${l.bronzeEvents}/*/*").select("payload"))),
-      Seq("event_key"), Seq(col("received_at").desc))
-      .select("event_key").as[String].collect().toSet
-    val streamKeys = out3.select("event_key").as[String].collect().toSet
-    assert(streamKeys == batchKeys)
-  }
 
   test("single-pass silver: one bronze read feeds fact + quarantine; " +
        "anti-join dedup absorbs cross-trigger re-deliveries") {
@@ -174,27 +131,65 @@ class MedallionStreamSpec extends SparkSpec {
     assert(out2.filter(col("received_at").isNull).count() == 1)
   }
 
-  test("horizon slice: the literal bound reaches the fact scan as a pushed filter") {
-    // The reason the min probe stays a driver-side action: a literal
-    // bound row-group-prunes the per-trigger fact read; a scalar-subquery
-    // bound (the "fold it into the write pass" alternative) measures as
-    // PushedFilters: [] on Spark 4.1. Pin the pushed literal so a future
-    // refactor can't silently regress the scan to full-table.
-    val dir = java.nio.file.Files.createTempDirectory("graft-slice").toString
-    spark.range(100)
-      .selectExpr("CAST(id AS STRING) AS event_key",
-        "timestamp_micros(id * 1000000) AS received_at")
-      .write.mode("overwrite").parquet(dir)
-    val plan = MedallionStream.priorFactSlice(spark, dir,
-      java.sql.Timestamp.valueOf("1970-01-01 00:00:50"), 10000L)
-      .queryExecution.executedPlan.toString
-    val pushed = "PushedFilters: \\[[^\\]]*\\]".r.findFirstIn(plan).getOrElse("")
-    assert(pushed.contains("GreaterThanOrEqual(received_at"),
-      s"horizon bound must be pushed into the parquet scan, got: $pushed")
-    // and the slice must still admit null-event-time rows (the pushed Or
-    // keeps IsNull alongside the bound)
-    assert(pushed.contains("IsNull(received_at"),
-      s"null-event-time rows must survive the pushed slice, got: $pushed")
+  test("stream sink: the anti-join reads the fact from the batch's earliest day on, " +
+       "as a partition filter that keeps the null partition") {
+    val root = java.nio.file.Files.createTempDirectory("graft-mstream-slice").toString
+    val l = Layout(root)
+    val (fact, quar, cp) = (s"$root/fact", s"$root/quarantine", s"$root/cp")
+    // trigger 1: five days of events and one with no received_at
+    Medallion.writeBronzePages(spark, l, "m1", "2025-04-05", PullResult(Seq(
+      s"""{"data":[${(1 to 5).map(d => ev(s"d$d", s"2025-04-0${d}T10:00:00Z", "m1"))
+        .mkString(",")},{"event_key":"u1","media_id":"m1"}]}"""), Checkpoint(), complete = true))
+    MedallionStream.runOnceSinglePass(spark, l.bronzeEvents, fact, quar, cp)
+    // trigger 2: a re-delivery from day 4 and a new event on day 5
+    Medallion.writeBronzePages(spark, l, "m1", "2025-04-06", PullResult(Seq(
+      s"""{"data":[${ev("d4", "2025-04-04T10:00:00Z", "m1")},
+         |${ev("d6", "2025-04-05T11:00:00Z", "m1")}]}""".stripMargin.replaceAll("\n", "")),
+      Checkpoint(), complete = true))
+    val scans = scansOf(fact)(MedallionStream.runOnceSinglePass(
+      spark, l.bronzeEvents, fact, quar, cp))
+    assert(scans.size == 1, scans)
+    val filters = scans.head.partitionFilters.mkString
+    assert(filters.contains("2025-04-04") && filters.contains("isnull(dt"),
+      s"the fact scan must be bounded at the batch's earliest day: $filters")
+    assert(scans.head.metrics("numPartitions").value == 3,
+      "days 4 and 5 plus the null partition, of 6")
+    assert(spark.read.parquet(fact).select("event_key").as[String].collect().sorted.toSeq ==
+      Seq("d1", "d2", "d3", "d4", "d5", "d6", "u1"))
+  }
+
+  test("batch refresh and stream sink land the same bronze as the same fact and quarantine") {
+    val root = java.nio.file.Files.createTempDirectory("graft-mstream-same").toString
+    val l = Layout(root)
+    val (fact, quar, cp) = (s"$root/stream/fact", s"$root/stream/quarantine", s"$root/stream/cp")
+    def pull(dt: String, pages: String*): Unit = {
+      Medallion.writeBronzePages(spark, l, "m1", dt, PullResult(pages, Checkpoint(), complete = true))
+      Medallion.refreshFactEvents(spark, l)
+      MedallionStream.runOnceSinglePass(spark, l.bronzeEvents, fact, quar, cp)
+    }
+    def twin(viewed: Double) = ev("k1", "2025-04-01T10:00:00Z", "m1").replace(
+      "\"percent_viewed\":0.5", s"\"percent_viewed\":$viewed")
+    // one pull: a same-key, same-received_at pair that differs in a non-key
+    // field, on two pages, a corrupt page and an event with no received_at
+    pull("2025-04-01", s"""{"data":[${twin(0.9)},${ev("k2", "2025-04-01T11:00:00Z", "m1")}]}""",
+      s"[${twin(0.2)}]", "<html>502 Bad Gateway</html>",
+      """{"data":[{"event_key":"k0","media_id":"m1"}]}""")
+    // the next pull re-delivers k2 (overlap) and adds k3
+    pull("2025-04-02", s"""{"items":[${ev("k2", "2025-04-01T11:00:00Z", "m1")},
+      |${ev("k3", "2025-04-02T09:00:00Z", "m1")}]}""".stripMargin.replaceAll("\n", ""))
+
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+    val batchFact = rows(Medallion.readFact(spark, l.factEvents))
+    assert(batchFact.size == 4, batchFact)
+    assert(batchFact.exists(_.startsWith("k0|")), "the null-time event lands")
+    assert(batchFact.exists(_.startsWith("k1|2025-04-01 10:00:00.0|0.2|")),
+      "the twin with the lower percent_viewed wins the total order")
+    assert(rows(Medallion.readFact(spark, fact)) == batchFact)
+    def payloads(dir: String) =
+      spark.read.parquet(dir).select("raw_payload").as[String].collect().sorted.toSeq
+    assert(payloads(l.quarantine) == Seq("<html>502 Bad Gateway</html>"))
+    assert(payloads(quar) == payloads(l.quarantine))
   }
 
   test("single-pass sink parses each micro-batch's page envelope once") {

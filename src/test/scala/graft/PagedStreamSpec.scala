@@ -46,16 +46,15 @@ class PagedStreamSpec extends SparkSpec {
   test("api-driven silver: budgeted drain, exactly-once pages, " +
       "checkpoint resume admits only the late media") {
     val root = java.nio.file.Files.createTempDirectory("graft-pstream").toString
-    val fact = s"$root/fact"
-    val cp = s"$root/cp"
+    val (fact, quar, cp) = (s"$root/fact", s"$root/quarantine", s"$root/cp")
     val api = new FakeApi
     api.feeds("m1") = feed("m1", 4) // 5 pages, 9 events
     api.feeds("m2") = feed("m2", 1) // 2 pages, 3 events
     PagedStream.register("spec-api", api)
     try {
-      val q = MedallionStream.factEventsFromApiQuery(spark, "spec-api",
-        fact, cp, maxPagesPerTrigger = 2)
-      q.processAllAvailable(); q.stop()
+      val q = MedallionStream.factEventsFromApiSinglePassQuery(spark, "spec-api",
+        fact, quar, cp, maxPagesPerTrigger = 2)
+      assert(q.awaitTermination(120000))
       val out1 = spark.read.parquet(fact)
       assert(out1.count() == 12, "every event from every page, exactly once")
       assert(out1.select("event_key").distinct().count() == 12)
@@ -68,9 +67,9 @@ class PagedStreamSpec extends SparkSpec {
       // checkpoint must pull only m3 — completed media are terminal and
       // emitted pages never re-fetch
       api.feeds("m3") = feed("m3", 1) // 3 events
-      val q2 = MedallionStream.factEventsFromApiQuery(spark, "spec-api",
-        fact, cp, maxPagesPerTrigger = 2)
-      q2.processAllAvailable(); q2.stop()
+      val q2 = MedallionStream.factEventsFromApiSinglePassQuery(spark, "spec-api",
+        fact, quar, cp, maxPagesPerTrigger = 2)
+      assert(q2.awaitTermination(120000))
       val out2 = spark.read.parquet(fact)
       assert(out2.count() == 15, "resume adds exactly the new media's events")
       assert(out2.select("event_key").distinct().count() == 15)
@@ -79,9 +78,9 @@ class PagedStreamSpec extends SparkSpec {
 
       // idle restart: nothing new, nothing fetched
       val before = api.fetches.toMap
-      val q3 = MedallionStream.factEventsFromApiQuery(spark, "spec-api",
-        fact, cp, maxPagesPerTrigger = 2)
-      q3.processAllAvailable(); q3.stop()
+      val q3 = MedallionStream.factEventsFromApiSinglePassQuery(spark, "spec-api",
+        fact, quar, cp, maxPagesPerTrigger = 2)
+      assert(q3.awaitTermination(120000))
       assert(spark.read.parquet(fact).count() == 15)
       assert(api.fetches.toMap == before,
         "all media complete: an idle restart fetches nothing")
@@ -187,9 +186,8 @@ class PagedStreamSpec extends SparkSpec {
     api.feeds("m1") = feed("m1", 4) // 5 pages > the 2-page budget
     PagedStream.register("avail-api", api)
     try {
-      val q = MedallionStream.factEventsFromApiQuery(spark, "avail-api",
-        s"$root/fact", s"$root/cp", maxPagesPerTrigger = 2,
-        trigger = Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
+      val q = MedallionStream.factEventsFromApiSinglePassQuery(spark, "avail-api",
+        s"$root/fact", s"$root/quarantine", s"$root/cp", maxPagesPerTrigger = 2)
       assert(q.awaitTermination(120000),
         "AvailableNow must terminate on its own at drain")
       assert(spark.read.parquet(s"$root/fact").count() == 9,

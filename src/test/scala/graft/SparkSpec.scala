@@ -3,6 +3,9 @@ package graft
 import org.apache.spark.graft.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs — one JVM-wide session, UTC, small
@@ -39,6 +42,34 @@ trait SparkSpec extends AnyFunSuite {
         Option(e.taskMetrics).foreach(m => n.addAndGet(m.inputMetrics.bytesRead))
     })(body)
     n.get
+  }
+
+  /** The parquet/JSON file scans over the table at `dir` that `body`'s
+    * queries executed, looked up inside adaptive query stages.
+    */
+  def scansOf(dir: String)(body: => Unit): Seq[FileSourceScanExec] = {
+    val plans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized(plans += qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerDrain(spark.sparkContext)
+    spark.listenerManager.register(l)
+    try body
+    finally {
+      ListenerDrain(spark.sparkContext)
+      spark.listenerManager.unregister(l)
+    }
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case s: QueryStageExec => scans(s.plan)
+      case f: FileSourceScanExec => Seq(f)
+      case n => n.children.flatMap(scans)
+    }
+    val table = new java.io.File(dir).getAbsolutePath
+    plans.toSeq.flatMap(scans).filter(_.relation.location.rootPaths
+      .exists(_.toUri.getPath.stripSuffix("/") == table))
   }
 
   /** Runs `body` at `spark.sql.autoBroadcastJoinThreshold = value`,

@@ -1,10 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":"total","value":N,"unit":"sec",
-  * "queries":{...},"sf":...}.
+  * "queries":{...},"sf":...}. The session is `GraftSession.fromEnv`, the
+  * one Verify certifies (SPARK_GRAFT_CPUS, SPARK_GRAFT_MASTER,
+  * SPARK_GRAFT_EXTRA_CONF).
   *
   * A warm-up pass (untimed) runs first so JIT/codegen/classloading and the
   * first parquet-footer reads don't get attributed to whichever query runs
@@ -14,42 +19,18 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Same override as Verify: SPARK_GRAFT_MASTER="local-cluster[2,16,4096]"
-    // benches with real separate executor JVMs (set SPARK_HOME +
-    // SPARK_SCALA_VERSION; executor classpath added below when used).
-    val master = GraftSession.envMaster(s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Respect the AQE advisory target size when coalescing shuffle
-      // partitions instead of maximizing parallelism: the bench queries
-      // shuffle kilobytes, and 32 near-empty reducers per stage is pure
-      // scheduling overhead (this is also the setting Spark's own AQE
-      // docs recommend for production).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    GraftSession.withExecutorClasses(builder, master)
-    // Config experiments without recompiling: "k=v;k=v".
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k, v)
+    // Focus filter for local iteration: SPARK_GRAFT_ONLY="q73_,q30_" times
+    // just those queries. Unset (the driver's invocation) = all.
+    val queries = SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY"))
+    val spark = GraftSession.fromEnv("graft-bench")
+    // Spark jobs per query run, drained before every read: under AQE each
+    // materialized shuffle stage is a job, so a slow entry with many jobs
+    // is paying the local scheduling floor, not data cost.
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
     })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Optional focus filter for local iteration: SPARK_GRAFT_ONLY="q73,q30"
-    // times just those queries. Unset (the driver's invocation) = all.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val queries = only match {
-      case Some(names) => SparkEntry.queries.filter { case (k, _) =>
-        names.exists(k.startsWith) }
-      case None => SparkEntry.queries
-    }
 
     // Force FULL-RESULT materialization: every output row with every
     // output column, straight off the optimized plan. A `count()` on top
@@ -98,22 +79,26 @@ object Bench {
     // with a shared cache q103 timed 0.24 s against 1.05 s honest. Each
     // query pays its own cache fills; sharing WITHIN one query (the q86
     // multi-consumer lesson) is still measured, as it should be.
-    def timedPass(): Seq[(String, Double, Boolean)] =
+    def timedPass(): Seq[(String, Double, Boolean, Int)] =
       queries.toSeq.sortBy(_._1).map { case (name, fn) =>
         spark.catalog.clearCache()
+        ListenerDrain(sc)
+        jobs.set(0)
         val t0 = System.nanoTime()
         val ok = try { force(fn(spark, sfDir)); true } catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             false
         }
-        (name, if (ok) (System.nanoTime() - t0) / 1e9 else -1.0, ok)
+        val secs = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+        ListenerDrain(sc)
+        (name, secs, ok, jobs.get)
       }
     val p1 = timedPass()
     spark.catalog.clearCache()
     System.gc()
     val p2 = timedPass()
-    val min2 = p1.zip(p2).map { case ((name, t1, ok1), (_, t2, ok2)) =>
+    val min2 = p1.zip(p2).map { case ((name, t1, ok1, _), (_, t2, ok2, _)) =>
       // Both passes must succeed for the query to count as ok.
       (name, if (ok1 && ok2) math.min(t1, t2) else -1.0, ok1 && ok2)
     }
@@ -179,7 +164,7 @@ object Bench {
       System.err.println(s"[bench] prev-round guard armed: " +
         s"${prevTimes.size} query baselines")
     val fnByName = queries
-    val rawPasses = p1.zip(p2).map { case ((name, t1, _), (_, t2, _)) =>
+    val rawPasses = p1.zip(p2).map { case ((name, t1, _, _), (_, t2, _, _)) =>
       name -> List(t1, t2) }.toMap
     val retimed = scala.collection.mutable.LinkedHashMap[String, List[Double]]()
     val results = min2.map { case (name, t, ok) =>
@@ -231,9 +216,12 @@ object Bench {
     // Per-pass per-query times, as bare arrays in the same sorted-key order
     // as "queries" (compact — the driver JSON-parses a bounded stdout
     // tail). "retimed" maps qNN -> extra-run times for outlier candidates;
-    // an empty object means no query tripped the guard.
+    // an empty object means no query tripped the guard. "pass_jobs" (in
+    // bench_full.json only) holds the Spark job counts in pass_q's layout.
     val passQ = List(p1, p2).map(p =>
       p.map(r => fmt(r._2)).mkString("[", ",", "]")).mkString("[", ",", "]")
+    val passJobs = List(p1, p2).map(p =>
+      p.map(_._4).mkString("[", ",", "]")).mkString("[", ",", "]")
     val retimedJson = retimed.map { case (k, vs) =>
       "\"" + k.takeWhile(_ != '_') + "\":" + vs.map(fmt).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
@@ -248,7 +236,7 @@ object Bench {
     // written to bench_full.json in cwd for file-based consumers.
     try {
       val out = new java.io.PrintWriter("bench_full.json")
-      try out.println(s"""{"value":${fmt(total)},"pass_totals":[${fmt(passTotal1)},${fmt(passTotal2)}],"pass_q":$passQ,"retimed":$retimedJson,"queries":$qs,"errors":$errs,"sf":"$sfDir"}""")
+      try out.println(s"""{"value":${fmt(total)},"pass_totals":[${fmt(passTotal1)},${fmt(passTotal2)}],"pass_q":$passQ,"pass_jobs":$passJobs,"retimed":$retimedJson,"queries":$qs,"errors":$errs,"sf":"$sfDir"}""")
       finally out.close()
     } catch { case _: Throwable => () } // diagnostics must not fail the run
     def fmt2(v: Double): String = if (v < 0) "-1" else f"$v%.2f"

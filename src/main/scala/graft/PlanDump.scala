@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan of named SparkEntry
-  * queries against SPARK_GRAFT_SF_DIR (default sf0.001).
+  * queries against SPARK_GRAFT_SF_DIR (default sf0.001), on the
+  * `GraftSession.fromEnv` session the other mains use.
   *
   *   sbt "runMain graft.PlanDump q106_scd2_history"
   *
@@ -20,14 +19,7 @@ object PlanDump {
       return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv("graft-plandump")
     args.toSeq.foreach { n =>
       SparkEntry.queries.get(n) match {
         case Some(q) =>

@@ -121,6 +121,24 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Agg.dailyEngagement(t(spark, "/root/testdata/sf0.001", "events"))
 
+  /** The mains' `SPARK_GRAFT_ONLY` focus filter: comma-separated name
+    * prefixes (`"q73_,q30_"`) select the queries they start; unset selects
+    * all. A prefix that matches no query fails, so a typo cannot time or
+    * dump an empty set as a success.
+    */
+  def selected(only: Option[String])
+      : Map[String, (SparkSession, String) => DataFrame] = {
+    val all = queries
+    only.fold(all) { spec =>
+      val prefixes = spec.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+      val unmatched = prefixes.filterNot(p => all.keys.exists(_.startsWith(p)))
+      require(prefixes.nonEmpty && unmatched.isEmpty,
+        s"SPARK_GRAFT_ONLY='$spec' " + (if (prefixes.isEmpty) "names no prefix"
+          else s"prefix(es) ${unmatched.mkString(", ")} match no query"))
+      all.filter { case (k, _) => prefixes.exists(k.startsWith) }
+    }
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // A3–A6: partial+final hash agg, decimal-exact measures (TPC-H Q1 shape).

@@ -1,42 +1,35 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Runs on the
+  * session Bench times (`GraftSession.fromEnv`: SPARK_GRAFT_CPUS,
+  * SPARK_GRAFT_MASTER — `local-cluster[2,2,2048]` runs the whole oracle
+  * gate with real separate executor JVMs — and SPARK_GRAFT_EXTRA_CONF).
+  */
 object Verify {
+  /** The session writes TimestampType as INT64 micros adjusted to UTC,
+    * which parquet readers surface as a zoned type; the oracles' TIMESTAMP
+    * is naive. Result files carry the same UTC wall clock as naive
+    * TIMESTAMP_NTZ micros, so both sides read back as one type.
+    */
+  private[graft] def naiveTimestamps(df: DataFrame): DataFrame =
+    df.select(df.schema.fields.toSeq.map { f =>
+      val c = df.col(s"`${f.name}`")
+      if (f.dataType == TimestampType) c.cast(TimestampNTZType).as(f.name) else c
+    }: _*)
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Multi-JVM smoke (round-17 verdict item 2): SPARK_GRAFT_MASTER=
-    // "local-cluster[2,16,4096]" runs the WHOLE oracle gate with real
-    // separate executor JVMs (needs SPARK_HOME=/opt/spark for the worker
-    // launcher), flushing JVM-local assumptions local[n] can't see —
-    // executors then need the graft classes on their own classpath.
-    val master = GraftSession.envMaster(s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    val spark =
-      GraftSession.withExecutorClasses(builder, master).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_ONLY="q153_,q154_" dumps just those queries.
+    val queries = SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY"))
+    val spark = GraftSession.fromEnv("graft-verify")
     val outFs = new Path(outDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     outFs.mkdirs(new Path(outDir))
-    // Optional focus filter for local iteration (same contract as Bench):
-    // SPARK_GRAFT_ONLY="q153,q154" dumps just those queries. Unset (the
-    // driver's invocation) = all.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val queries = only match {
-      case Some(names) => SparkEntry.queries.filter { case (k, _) =>
-        names.exists(k.startsWith) }
-      case None => SparkEntry.queries
-    }
     queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+      try naiveTimestamps(fn(spark, sfDir)).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

@@ -5,12 +5,11 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session-extension entry point (SURVEY.md §4.3's "keep an extension
-  * point"): installs the engine's custom expressions into every session
-  * built with
-  *
-  *   SparkSession.builder()
-  *     .withExtensions(new GraftExtensions)            // programmatic, or
-  *     .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+  * point"): installs the engine's custom expressions into a session whose
+  * builder was handed `.withExtensions(new GraftExtensions)` or
+  * `spark.sql.extensions=graft.functions.GraftExtensions` (a session not
+  * started through graft.GraftSession, which registers the functions
+  * itself),
   *
   * so `SELECT cosine_similarity(a, b)` works in plain SQL, plus one
   * optimizer rule: [[RewriteHofCosine]] turns the hand-written HOF

@@ -67,11 +67,8 @@ object Flatten {
     * Input: one string column `payload` per page. The coalesce order
     * resolves the variant per row with no driver-side branching (the
     * reference's `_page_shape` control flow becomes data).
-    */
-  def normalizePages(pages: DataFrame, payloadCol: String = "payload"): DataFrame =
-    normalizePagesWithQuarantine(pages, payloadCol)._1
-
-  /** Adds `_rows`: the page's events, or null for a page no envelope rule
+    *
+    * Adds `_rows`: the page's events, or null for a page no envelope rule
     * recognizes. The envelope struct is its own column, parsed once: Catalyst
     * splits `from_json(p).getField(f)` into one parse per field, but does not
     * inline a non-cheap column that its consumer references four times. The
@@ -88,20 +85,12 @@ object Flatten {
       .drop("_env")
   }
 
-  /** P8 + T6 hardened: corrupt or unrecognized pages don't vanish (plain
-    * [[normalizePages]] silently drops them) and don't
-    * fail the run (the reference isolates failures per media and proceeds,
-    * REF wistia_pull_wistia_api.py:261-267) — they land in a quarantine
-    * frame carrying the raw payload for replay after a parser fix.
-    * Returns (good rows, quarantined pages).
-    */
-  def normalizePagesWithQuarantine(pages: DataFrame,
-                                   payloadCol: String = "payload")
-      : (DataFrame, DataFrame) =
-    splitTagged(tagPages(pages, payloadCol), payloadCol)
-
-  /** Splits [[tagPages]] output into (good rows, quarantined pages); a
-    * caller that pins the tagged pages parses each page once for both. No
+  /** Splits [[tagPages]] output into (good rows, quarantined pages). P8 + T6
+    * hardened: corrupt or unrecognized pages don't vanish and don't fail the
+    * run (the reference isolates failures per media and proceeds, REF
+    * wistia_pull_wistia_api.py:261-267) — they land in a quarantine frame
+    * carrying the raw payload for replay after a parser fix. A caller that
+    * pins the tagged pages parses each page once for both sides. No
     * side filters on `_rows`, not even the filter `explode` infers: Catalyst
     * pushes it below the parse, which re-parses per envelope field.
     * `posexplode_outer` infers none; its `pos` is null where `explode` drops.

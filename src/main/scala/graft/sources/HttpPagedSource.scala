@@ -19,7 +19,7 @@ import java.time.Duration
   *    table on top (5xx retry with backoff, 4xx fatal, transport retry);
   *  - envelope hints (`size`, `total`, `per_page`) parse driver-side
   *    from the payload with the SAME data|events|items|results
-  *    coalesce order as [[graft.ops.Flatten.normalizePages]] (REF
+  *    coalesce order as [[graft.ops.Flatten.tagPages]] (REF
   *    `:135-146`), feeding [[PagedSource.isLastPage]]'s last-page
   *    algebra unchanged.
   *

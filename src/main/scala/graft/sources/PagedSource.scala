@@ -10,7 +10,7 @@ import scala.collection.mutable.ArrayBuffer
   * 109-115,181-232). HTTP itself is a connector concern (non-goal, SURVEY.md
   * §7) — what the ENGINE owns is the control algebra, reproduced here
   * exactly and driven by any [[PagedApi]] implementation (tests use a
-  * deterministic fake). Page payloads feed `Flatten.normalizePages`, which
+  * deterministic fake). Page payloads feed `Flatten.tagPages`, which
   * turns the envelope variants into rows.
   */
 object PagedSource {

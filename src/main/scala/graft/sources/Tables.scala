@@ -136,9 +136,10 @@ object Tables {
 
   /** The NANOS leg needs `spark.sql.legacy.parquet.nanosAsLong=true` SET AT
     * SESSION BUILD TIME (it is read by the parquet converter before any
-    * per-query conf is consulted). GraftSession/Bench/Verify all set it; an
-    * externally-built session that didn't gets this actionable error
-    * instead of Spark's "Illegal Parquet type: INT64 (TIMESTAMP(NANOS,...))".
+    * per-query conf is consulted). GraftSession sets it for every engine
+    * session; an externally-built session that didn't gets this actionable
+    * error instead of Spark's "Illegal Parquet type: INT64
+    * (TIMESTAMP(NANOS,...))".
     */
   private def requireNanosConf(spark: SparkSession): Unit =
     require(

@@ -57,7 +57,7 @@ class FlattenSpec extends SparkSpec {
     assert(out(1).getAs[String]("subfolder_name") == null)
   }
 
-  test("normalizePages handles every envelope variant and the bare array (P8)") {
+  test("tagPages + splitTagged handle every envelope variant and the bare array (P8)") {
     val ev = eventJson("e1", "2025-05-01T00:00:00Z", false)
     val pages = Seq(
       s"""{"data":[$ev],"total":1,"per_page":50}""",
@@ -66,8 +66,9 @@ class FlattenSpec extends SparkSpec {
       s"""{"results":[$ev]}""",
       s"""[$ev,$ev,$ev]""")
     val df = pages.toDF("payload")
-    val out = Flatten.normalizePages(df)
+    val (out, quarantined) = Flatten.splitTagged(Flatten.tagPages(df))
     assert(out.count() == 8)
+    assert(quarantined.count() == 0)
     assert(out.schema.fieldNames.contains("event_key"))
     assert(out.select("event_key").distinct().as[String].collect().toSeq == Seq("e1"))
   }
@@ -83,7 +84,7 @@ class FlattenSpec extends SparkSpec {
       when(ltrim(col("payload")).startsWith("["), bare)))
   }
 
-  test("normalizePagesWithQuarantine parses each page once; every shape splits as before") {
+  test("tagPages parses each page once; every shape splits as before") {
     val ev = eventJson("e1", "2025-05-01T00:00:00Z", false)
     val pages = Seq(
       s"""{"data":[$ev],"total":1,"per_page":50}""",
@@ -98,7 +99,7 @@ class FlattenSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-pages").toString
     pages.toDF("payload").write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)
-    val (good, quarantined) = Flatten.normalizePagesWithQuarantine(df)
+    val (good, quarantined) = Flatten.splitTagged(Flatten.tagPages(df))
 
     for (side <- Seq(good, quarantined)) {
       val plan = side.queryExecution.optimizedPlan

@@ -21,16 +21,18 @@ class HardeningSpec extends SparkSpec {
     val corrupt = """{"totally": "unrecognized"}"""
     val garbage = """not json at all {{{"""
     val (good, quarantined) =
-      Flatten.normalizePagesWithQuarantine(Seq(ok, corrupt, garbage).toDF("payload"))
+      Flatten.splitTagged(Flatten.tagPages(Seq(ok, corrupt, garbage).toDF("payload")))
     assert(good.count() == 1)
     assert(good.select("event_key").as[String].head() == "e1")
     val q = quarantined.select("raw_payload").as[String].collect().toSet
     assert(q == Set(corrupt, garbage), "corrupt pages must be preserved for replay")
   }
 
-  test("plain normalizePages drops corrupt pages silently (documented contrast)") {
-    val out = Flatten.normalizePages(Seq("""{"x": 1}""").toDF("payload"))
+  test("an unrecognized page yields no event rows, only its quarantine row") {
+    val (out, quarantined) =
+      Flatten.splitTagged(Flatten.tagPages(Seq("""{"x": 1}""").toDF("payload")))
     assert(out.count() == 0)
+    assert(quarantined.select("raw_payload").as[String].collect().toSeq == Seq("""{"x": 1}"""))
   }
 
   test("filesFor sizes compaction output from partition bytes") {

@@ -91,10 +91,10 @@ class MedallionStreamSpec extends SparkSpec {
 
     // parity with the batch pipeline's view of event keys
     val batchKeys = graft.ops.Dedup.firstWins(
-      graft.ops.Flatten.factEvents(graft.ops.Flatten.normalizePages(
+      graft.ops.Flatten.factEvents(graft.ops.Flatten.splitTagged(graft.ops.Flatten.tagPages(
         spark.read.schema(new org.apache.spark.sql.types.StructType()
           .add("payload", org.apache.spark.sql.types.StringType))
-          .json(s"${l.bronzeEvents}/*/*").select("payload"))),
+          .json(s"${l.bronzeEvents}/*/*").select("payload")))._1),
       Seq("event_key"), Seq(col("received_at").desc))
       .select("event_key").as[String].collect().toSet
     assert(out4.select("event_key").as[String].collect().toSet == batchKeys)

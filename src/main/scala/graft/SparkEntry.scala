@@ -431,10 +431,11 @@ object SparkEntry {
     // stream, the window ranks DAYS, never events.
     "q145_cumulative_reach" -> ((s, dir) =>
       Agg.cumulativeReach(t(s, dir, "events"))),
-    // A4 reach from theta STATE (rows-only: sketch binaries are
-    // engine-internal; q145 is the exact twin, SketchSpec pins the
-    // estimates): prefix self-join over the daily state — days² rows per
-    // type, calendar-bounded, no event rescan at any history length.
+    // A4 reach from theta STATE (Spark's theta_sketch_agg /
+    // theta_union_agg; rows-only: DuckDB has no theta sketch; q145 is the
+    // exact twin, SketchSpec pins the estimates): prefix self-join over
+    // the daily state — days² rows per type, calendar-bounded, no event
+    // rescan at any history length.
     "q146_reach_theta" -> ((s, dir) =>
       Agg.reachFromThetaState(Agg.dailyThetaSketches(t(s, dir, "events")))),
     // Data-quality discovery: one-declared-pass exact profile (null /
@@ -898,10 +899,12 @@ object SparkEntry {
     // rows-only; q02/q27 are the exact oracle-checked twins).
     "q84_sketch_rollup" -> ((s, dir) =>
       Agg.sketchRollup(Agg.dailySketches(t(s, dir, "events")))),
-    // A4 mergeable-quantile state: per-day KLL value sketches rolled up
-    // per type (rows-only — KLL compaction is randomized so values vary
-    // run to run within the PROVEN rank-error bound, which SketchSpec
-    // pins; q130 is the exact oracle-checked twin).
+    // A4 mergeable-quantile state: per-day KLL value sketches (Spark's
+    // kll_sketch_agg_double) merged per type by kll_merge_agg_double and
+    // read by kll_sketch_get_quantile_double (rows-only — KLL compaction
+    // is randomized so values vary run to run within the PROVEN
+    // rank-error bound, which SketchSpec pins; q130 is the exact
+    // oracle-checked twin).
     "q129_kll_quantile_rollup" -> ((s, dir) =>
       Agg.quantileSketchRollup(Agg.dailyQuantileSketches(t(s, dir, "events")))),
     // A4 exact twin: interpolated per-type percentiles.
@@ -1258,7 +1261,8 @@ object SparkEntry {
     // error bound run to run and DuckDB has no KLL): the 100 TB path —
     // each side reduces to ONE mergeable sketch map-side (zero rows
     // shuffled, vs the exact form's full range shuffle), sup over a
-    // bounded quantile grid via kll_cdf. Exact twin q190 is the
+    // bounded quantile grid read back by Spark's
+    // kll_sketch_get_rank_double. Exact twin q190 is the
     // oracle-checked form; |d_est − d_exact| tolerance ProfileSpec-pinned
     // at large k.
     "q194_ks_sketch" -> ((s, dir) => {
@@ -1721,11 +1725,12 @@ object SparkEntry {
     // derived — the oracle twin of the theta-state path q139.
     "q138_type_set_exact" -> ((s, dir) =>
       Agg.typeSetAlgebraExact(t(s, dir, "events"))),
-    // A4 set algebra from theta STATE (rows-only: Datasketches binaries
-    // are engine-internal; q138 is the exact twin and SketchSpec pins
-    // the bounds): |A|, |B|, |A∩B|, |A\B|, |B\A| per type pair, each a
-    // DIRECT single-operation estimate — the set operations HLL state
-    // can't answer — with no event rescan.
+    // A4 set algebra from theta STATE (Spark's theta_union_agg,
+    // theta_intersection, theta_difference and theta_sketch_estimate;
+    // rows-only: DuckDB has no theta sketch; q138 is the exact twin and
+    // SketchSpec pins the bounds): |A|, |B|, |A∩B|, |A\B|, |B\A| per
+    // type pair, each a DIRECT single-operation estimate — the set
+    // operations HLL state can't answer — with no event rescan.
     "q139_theta_set_algebra" -> ((s, dir) =>
       Agg.typeSetAlgebra(Agg.dailyThetaSketches(t(s, dir, "events")))),
     // J6 interval self-join: ALL view→purchase pairs of the same user

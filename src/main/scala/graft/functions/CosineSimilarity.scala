@@ -263,21 +263,6 @@ object GraftFunctions {
     }
   }
 
-  /** Foldable numeric literal as Double — for SQL-surface rank args. */
-  private[functions] def litDouble(e: Expression, name: String): Double = {
-    require(e.foldable, s"$name must be a literal, got ${e.sql}")
-    e.eval() match {
-      case d: java.lang.Double => d
-      case f: java.lang.Float => f.toDouble
-      case i: java.lang.Integer => i.toDouble
-      case l: java.lang.Long => l.toDouble
-      case dec: org.apache.spark.sql.types.Decimal => dec.toDouble
-      case other => throw new IllegalArgumentException(
-        s"$name must be a non-null numeric literal, got " +
-          s"${if (other == null) "NULL" else other.getClass.getSimpleName}")
-    }
-  }
-
   private[functions] def bpeMergeTextFromSql(exprs: Seq[Expression]): Expression = {
     require(exprs.size >= 3 && exprs.size <= 4,
       "bpe_merge_text(text, a, b[, joiner])")
@@ -310,11 +295,14 @@ object GraftFunctions {
     MultiMatchCounts(exprs(0), terms)
   }
 
-  /** The engine's SQL functions by name. The builders are stable instances,
-    * so [[registerAll]] can tell a name this object bound from one bound by
+  /** The engine's SQL functions by name — the one table both registration
+    * paths read ([[registerAll]] and [[GraftExtensions]]). No name here is
+    * a Spark built-in (FunctionsSpec pins it): a sketch Spark ships is
+    * called by Spark's own name. The builders are stable instances, so
+    * [[registerAll]] can tell a name this object bound from one bound by
     * anyone else.
     */
-  private val sqlFunctions
+  private[graft] val sqlFunctions
       : Seq[(String, Seq[Expression] => Expression)] = Seq(
     "cosine_similarity" -> { exprs: Seq[Expression] =>
       require(exprs.size == 2, "cosine_similarity(vec1, vec2)")
@@ -346,33 +334,12 @@ object GraftFunctions {
     "freq_union_agg" -> FreqSketch.freqUnionAggFromSql,
     "freq_sketch_items" -> FreqSketch.freqSketchItemsFromSql,
     "freq_sketch_max_error" -> FreqSketch.freqSketchMaxErrorFromSql,
-    "kll_sketch_agg" -> { exprs: Seq[Expression] => KllSketchAgg(exprs(0),
-      if (exprs.size > 1) litInt(exprs(1), "kll_sketch_agg: k") else 200) },
-    "kll_union_agg" -> { exprs: Seq[Expression] => KllUnionAgg(exprs(0),
-      if (exprs.size > 1) litInt(exprs(1), "kll_union_agg: k") else 200) },
-    "kll_quantiles" -> { exprs: Seq[Expression] => KllQuantiles(exprs.head,
-      exprs.tail.map(e => litDouble(e, "kll_quantiles: rank"))) },
-    "kll_sketch_n" -> { exprs: Seq[Expression] => KllSketchN(exprs.head) },
-    "theta_sketch_agg" -> { exprs: Seq[Expression] => ThetaSketchAgg(exprs(0),
-      if (exprs.size > 1) litInt(exprs(1), "theta_sketch_agg: lgK")
-      else ThetaSketch.DefaultLgK) },
-    "theta_union_agg" -> { exprs: Seq[Expression] => ThetaUnionAgg(exprs(0),
-      if (exprs.size > 1) litInt(exprs(1), "theta_union_agg: lgK")
-      else ThetaSketch.DefaultLgK) },
-    "theta_estimate" -> { exprs: Seq[Expression] => ThetaEstimate(exprs.head) },
-    "theta_intersect" -> { exprs: Seq[Expression] =>
-      ThetaIntersect(exprs(0), exprs(1)) },
-    "theta_a_not_b" -> { exprs: Seq[Expression] => ThetaANotB(exprs(0), exprs(1)) },
     "theta_lower_bound" -> { exprs: Seq[Expression] => ThetaBound(exprs(0),
       if (exprs.size > 1) litInt(exprs(1), "theta_lower_bound: numStdDev")
       else 2, lower = true) },
     "theta_upper_bound" -> { exprs: Seq[Expression] => ThetaBound(exprs(0),
       if (exprs.size > 1) litInt(exprs(1), "theta_upper_bound: numStdDev")
       else 2, lower = false) },
-    "theta_intersect_estimate" -> { exprs: Seq[Expression] =>
-      ThetaIntersectEstimate(exprs(0), exprs(1)) },
-    "theta_a_not_b_estimate" -> { exprs: Seq[Expression] =>
-      ThetaANotBEstimate(exprs(0), exprs(1)) },
     "jaro_winkler" -> { exprs: Seq[Expression] =>
       JaroWinkler(exprs(0), exprs(1)) },
     "sq8_encode" -> { exprs: Seq[Expression] => Sq8Encode(exprs.head) },
@@ -382,8 +349,8 @@ object GraftFunctions {
   /** Register custom functions on an EXISTING session (tests, notebooks).
     * Names the session already binds to these builders are left alone, so a
     * repeated call changes nothing and logs no "replaced a previously
-    * registered function" warning; a name bound to anything else (Spark
-    * 4.1's own `theta_sketch_agg`, say) is replaced.
+    * registered function" warning; a name bound to anything else (a
+    * session's temporary function of the same name, say) is replaced.
     */
   def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry

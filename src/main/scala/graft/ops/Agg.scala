@@ -258,32 +258,34 @@ object Agg {
   def dailyQuantileSketches(events: DataFrame, k: Int = 200): DataFrame =
     events
       .groupBy(col("event_type"), to_date(col("ts")).as("dt"))
-      .agg(graft.functions.KllSketch.kll_sketch_agg(col("value"), k)
-        .as("value_sketch"),
+      .agg(kll_sketch_agg_double(col("value"), k).as("value_sketch"),
         count(lit(1)).as("n_events"))
 
   /** Roll persisted daily KLL sketches up to per-type quantile estimates
     * — the consume side of [[dailyQuantileSketches]]: sketches merge
     * associatively map-side (one partial per key per partition,
     * independent of history length), and the quantile extraction runs
-    * once per type row.
+    * once per type row. An all-NULL group merges to an EMPTY sketch,
+    * which Spark's quantile read refuses: its quantiles are NULL and its
+    * `n_sketch` 0.
     */
   def quantileSketchRollup(daily: DataFrame,
                            ranks: Seq[Double] = Seq(0.1, 0.5, 0.9),
                            k: Int = 200): DataFrame = {
     val merged = daily
       .groupBy(col("event_type"))
-      .agg(graft.functions.KllSketch.kll_union_agg(col("value_sketch"), k)
-        .as("_sk"),
+      .agg(kll_merge_agg_double(col("value_sketch"), k).as("_sk"),
         sum(col("n_events")).as("n_events"),
         count(lit(1)).as("n_days"))
-    val qs = graft.functions.KllSketch.kll_quantiles(col("_sk"), ranks)
+    val n = kll_sketch_get_n_double(col("_sk"))
+    val qs = when(n > 0,
+      kll_sketch_get_quantile_double(col("_sk"), array(ranks.map(lit): _*)))
     merged.select(
       (Seq(col("event_type")) ++
         ranks.zipWithIndex.map { case (r, i) =>
           element_at(qs, i + 1).as(s"p${(r * 100).round}")
         } ++
-        Seq(graft.functions.KllSketch.kll_sketch_n(col("_sk")).as("n_sketch"),
+        Seq(n.as("n_sketch"),
           col("n_events"), col("n_days"))): _*)
   }
 
@@ -367,8 +369,7 @@ object Agg {
     : DataFrame =
     events
       .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-      .agg(graft.functions.ThetaSketch
-        .theta_sketch_agg(col("user_id"), lgK).as("visitor_theta"))
+      .agg(theta_sketch_agg(col("user_id"), lgK).as("visitor_theta"))
 
   /** Full pairwise set algebra over event types from [[dailyThetaSketches]]
     * STATE alone — |A|, |B|, |A∩B|, |A\B|, |B\A| per type pair, no event
@@ -381,20 +382,27 @@ object Agg {
   def typeSetAlgebra(daily: DataFrame,
                      lgK: Int = graft.functions.ThetaSketch.DefaultLgK)
     : DataFrame = {
-    import graft.functions.ThetaSketch._
     // No persist — same leak argument as typeOverlapSketch.
     val merged = daily.groupBy(col("event_type"))
       .agg(theta_union_agg(col("visitor_theta"), lgK).as("_sk"))
     val a = merged.select(col("event_type").as("type_a"), col("_sk").as("_sk_a"))
     val b = merged.select(col("event_type").as("type_b"), col("_sk").as("_sk_b"))
+    val (skA, skB) = (col("_sk_a"), col("_sk_b"))
     a.crossJoin(b).filter(col("type_a") < col("type_b"))
       .select(col("type_a"), col("type_b"),
-        theta_estimate(col("_sk_a")).as("est_a"),
-        theta_estimate(col("_sk_b")).as("est_b"),
-        theta_intersect_estimate(col("_sk_a"), col("_sk_b")).as("est_both"),
-        theta_a_not_b_estimate(col("_sk_a"), col("_sk_b")).as("est_only_a"),
-        theta_a_not_b_estimate(col("_sk_b"), col("_sk_a")).as("est_only_b"))
+        thetaEstimate(skA).as("est_a"),
+        thetaEstimate(skB).as("est_b"),
+        thetaEstimate(theta_intersection(skA, skB)).as("est_both"),
+        thetaEstimate(theta_difference(skA, skB)).as("est_only_a"),
+        thetaEstimate(theta_difference(skB, skA)).as("est_only_b"))
   }
+
+  /** Spark's `theta_sketch_estimate` is the estimate rounded to BIGINT;
+    * the theta outputs (q139, q146) publish it as DOUBLE, the type their
+    * output schemas declare.
+    */
+  private def thetaEstimate(sketch: Column): Column =
+    theta_sketch_estimate(sketch).cast("double")
 
   /** Exact twin of [[typeSetAlgebra]]: the [[typeOverlapExact]] counts
     * with both set differences derived (n_only_a = n_a − n_both — exact
@@ -447,11 +455,9 @@ object Agg {
       // lgK must match the state's build precision (as typeSetAlgebra
       // plumbs it) — a default union over high-lgK state would silently
       // downsample every estimate to the default's variance
-      .agg(graft.functions.ThetaSketch
-        .theta_union_agg(col("visitor_theta"), lgK).as("_sk"))
+      .agg(theta_union_agg(col("visitor_theta"), lgK).as("_sk"))
       .select(col("event_type"), col("d"),
-        graft.functions.ThetaSketch.theta_estimate(col("_sk"))
-          .as("est_reach"))
+        thetaEstimate(col("_sk")).as("est_reach"))
   }
 
   /** Weekly retention cohorts: users grouped by first-activity week, the

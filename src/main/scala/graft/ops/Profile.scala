@@ -425,45 +425,48 @@ object Profile {
     * each side folds to ONE KLL sketch in a map-side-combined aggregate
     * (two full scans, zero data shuffled — the sketch IS the reduction),
     * and the sup runs over a bounded candidate grid: both sketches'
-    * quantiles at `grid`+1 evenly-spaced ranks, CDFs read back from each
-    * sketch via [[graft.functions.KllSketchAgg]]'s `kll_cdf`
-    * (value→rank, the quantile family's inverse). All 1-row arithmetic
-    * after the aggregates — `zip_with`/`aggregate` HOFs, nothing touches
+    * quantiles at `grid`+1 evenly-spaced ranks. Each side's CDF at a
+    * candidate is read off its OWN quantile grid — the largest grid rank
+    * whose quantile is ≤ the point, which lies within 1/grid below the
+    * sketch's rank there (Spark's `kll_sketch_get_rank_double` reads
+    * ranks only at constant points). All 1-row arithmetic after the
+    * aggregates — `transform`/`filter`/`aggregate` HOFs, nothing touches
     * the driver.
     *
-    * Error: `|d_est − d_exact| ≤ 2ε_k + 1/grid` whp (ε ≈ 1.65% at the
+    * Error: `|d_est − d_exact| ≤ 2ε_k + 2/grid` whp (ε ≈ 1.65% at the
     * default k = 200; the KS sup between grid points moves at most the
-    * rank mass a grid step spans). KLL compaction is randomized, so the
-    * ESTIMATE varies run to run within the bound — the exact twin q190
-    * stays the oracle-checked form (spec pins the tolerance at large k).
+    * rank mass a grid step spans, and the grid CDF reads add at most one
+    * more step). KLL compaction is randomized, so the ESTIMATE varies run
+    * to run within the bound — the exact twin q190 stays the
+    * oracle-checked form (spec pins the tolerance at large k).
     * Output: `(d_est, n_ref, n_cur)`.
     */
   def ksDriftSketch(ref: DataFrame, cur: DataFrame, valueCol: String,
                     k: Int = 200, grid: Int = 256): DataFrame = {
-    import graft.functions.KllSketch._
     require(grid >= 2, s"ksDriftSketch: grid >= 2, got $grid")
     def side(df: DataFrame, sk: String, n: String) =
       df.select(col(valueCol).cast("double").as("v"))
         .filter(col("v").isNotNull)
-        .agg(kll_sketch_agg(col("v"), k).as(sk), count(lit(1)).as(n))
-    val ranks = (0 to grid).map(_.toDouble / grid)
-    val pts = array_union(kll_quantiles(col("ska"), ranks),
-      kll_quantiles(col("skb"), ranks))
+        .agg(kll_sketch_agg_double(col("v"), k).as(sk), count(lit(1)).as(n))
+    val ranks = array((0 to grid).map(i => lit(i.toDouble / grid)): _*)
+    // an empty side would propagate a NULL d_est a threshold monitor
+    // silently passes (review finding) — refuse like every sibling, but
+    // with zero extra scans: the guard rides the 1-row result, ahead of
+    // the quantile read, which fails on an empty sketch
+    def quantiles(sk: String): Column =
+      when(col("n_ref") === 0 || col("n_cur") === 0,
+        raise_error(lit("ksDriftSketch: both snapshots must have " +
+          "non-null rows")).cast("array<double>"))
+        .otherwise(kll_sketch_get_quantile_double(col(sk), ranks))
+    def cdf(qs: Column, x: Column): Column =
+      greatest(size(filter(qs, q => q <= x)) - 1, lit(0)) / grid
     side(ref, "ska", "n_ref").crossJoin(side(cur, "skb", "n_cur"))
       .select(col("n_ref"), col("n_cur"),
-        kll_cdf(col("ska"), pts).as("fa"),
-        kll_cdf(col("skb"), pts).as("fb"))
+        quantiles("ska").as("qa"), quantiles("skb").as("qb"))
       .select(
-        // an empty side would propagate a NULL d_est a threshold monitor
-        // silently passes (review finding) — refuse like every sibling,
-        // but with zero extra scans: the guard rides the 1-row result
-        when(col("n_ref") === 0 || col("n_cur") === 0,
-          raise_error(lit("ksDriftSketch: both snapshots must have " +
-            "non-null rows")).cast("double"))
-          .otherwise(
-            aggregate(zip_with(col("fa"), col("fb"),
-                (a, b) => abs(a - b)), lit(0.0),
-              (acc, x) => greatest(acc, x))).as("d_est"),
+        aggregate(transform(array_union(col("qa"), col("qb")),
+            x => abs(cdf(col("qa"), x) - cdf(col("qb"), x))), lit(0.0),
+          (acc, d) => greatest(acc, d)).as("d_est"),
         col("n_ref"), col("n_cur"))
   }
 }

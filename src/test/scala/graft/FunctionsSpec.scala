@@ -56,14 +56,14 @@ class FunctionsSpec extends SparkSpec {
     assert(r.map(_.getLong(1)).sum == 1000L)
   }
 
-  test("kll sketch family is callable from SQL after registration") {
-    GraftFunctions.registerAll(spark)
+  test("kll sketch family is callable from SQL by Spark's names") {
     Tables.load(spark, "/root/testdata/sf0.001", "events")
       .createOrReplaceTempView("ev_kll_test")
     val r = spark.sql(
-      """SELECT kll_quantiles(sk, 0.1, 0.5, 0.9) AS qs, kll_sketch_n(sk) AS n
-        |FROM (SELECT kll_union_agg(sk, 200) AS sk
-        |      FROM (SELECT kll_sketch_agg(value, 200) AS sk
+      """SELECT kll_sketch_get_quantile_double(sk, array(0.1, 0.5, 0.9)) AS qs,
+        |  kll_sketch_get_n_double(sk) AS n
+        |FROM (SELECT kll_merge_agg_double(sk, 200) AS sk
+        |      FROM (SELECT kll_sketch_agg_double(value, 200) AS sk
         |            FROM ev_kll_test GROUP BY event_type))""".stripMargin)
       .collect()
     assert(r.length == 1)
@@ -229,7 +229,7 @@ class FunctionsSpec extends SparkSpec {
       s"bucketed join must not shuffle either side:\n${plan.take(3000)}")
   }
 
-  test("GraftExtensions injects all three SQL functions") {
+  test("GraftExtensions injects every SQL function of the one table") {
     import org.apache.spark.sql.SparkSessionExtensions
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     val ext = new SparkSessionExtensions
@@ -240,14 +240,28 @@ class FunctionsSpec extends SparkSpec {
     // session, so this is the testable surface of the config-injection
     // path.
     val registry = spark.sessionState.functionRegistry.clone()
-    for (fn <- Seq("cosine_similarity", "lsh_bucket", "kgram_min_hash"))
-      registry.dropFunction(FunctionIdentifier(fn))
+    val names = GraftFunctions.sqlFunctions.map(_._1)
+    assert(names.nonEmpty && names.distinct == names)
+    for (fn <- names) registry.dropFunction(FunctionIdentifier(fn))
     val m = classOf[SparkSessionExtensions].getDeclaredMethods
       .find(_.getName == "registerFunctions").get
     m.invoke(ext, registry)
-    for (fn <- Seq("cosine_similarity", "lsh_bucket", "kgram_min_hash"))
+    for (fn <- names)
       assert(registry.functionExists(FunctionIdentifier(fn)),
         s"$fn missing after extension injection")
+  }
+
+  test("no engine SQL function shadows a Spark built-in") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    val shadowing = GraftFunctions.sqlFunctions.map(_._1)
+      .filter(n => FunctionRegistry.builtin.functionExists(FunctionIdentifier(n)))
+    assert(shadowing.isEmpty, s"engine names replace Spark built-ins: $shadowing")
+    // Spark's own theta sketch, not a BIGINT-only replacement, answers in
+    // a session that registered the engine's functions
+    GraftFunctions.registerAll(spark)
+    assert(spark.sql("SELECT theta_sketch_estimate(theta_sketch_agg(" +
+      "CAST(id AS STRING))) FROM range(1000)").head().getLong(0) == 1000L)
   }
 
   test("KgramMinHash is bit-identical to the HOF form (ASCII, multi-byte, short, empty, null)") {

@@ -304,25 +304,20 @@ class SketchSpec extends SparkSpec {
     import graft.functions.ThetaSketch._
     val ev = Tables.load(spark, sf, "events")
     val merged = Agg.dailyThetaSketches(ev).groupBy(col("event_type"))
-      .agg(graft.functions.ThetaSketch
-        .theta_union_agg(col("visitor_theta")).as("_sk"))
+      .agg(theta_union_agg(col("visitor_theta")).as("_sk"))
     val a = merged.select(col("event_type").as("type_a"), col("_sk").as("_a"))
     val b = merged.select(col("event_type").as("type_b"), col("_sk").as("_b"))
     val pairs = a.crossJoin(b).filter(col("type_a") < col("type_b"))
       .select(col("type_a"), col("type_b"),
-        theta_estimate(theta_intersect(col("_a"), col("_b"))).as("est_both"),
-        theta_intersect_estimate(col("_a"), col("_b")).as("est_both_sugar"),
-        theta_lower_bound(theta_intersect(col("_a"), col("_b"))).as("lb_both"),
-        theta_upper_bound(theta_intersect(col("_a"), col("_b"))).as("ub_both"),
-        theta_lower_bound(theta_a_not_b(col("_a"), col("_b"))).as("lb_only_a"),
-        theta_upper_bound(theta_a_not_b(col("_a"), col("_b"))).as("ub_only_a"))
+        theta_lower_bound(theta_intersection(col("_a"), col("_b"))).as("lb_both"),
+        theta_upper_bound(theta_intersection(col("_a"), col("_b"))).as("ub_both"),
+        theta_lower_bound(theta_difference(col("_a"), col("_b"))).as("lb_only_a"),
+        theta_upper_bound(theta_difference(col("_a"), col("_b"))).as("ub_only_a"))
       .collect().map(r => (r.getString(0), r.getString(1)) -> r).toMap
     val exact = Agg.typeSetAlgebraExact(ev)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r).toMap
     exact.foreach { case (k, ex) =>
       val p = pairs(k)
-      // closure: estimate-of-composed-bytes == the fused sugar form
-      assert(p.getAs[Double]("est_both") === p.getAs[Double]("est_both_sugar"))
       // 2-stddev bounds bracket the exact counts, intersection AND diff
       val both = ex.getAs[Long]("n_both").toDouble
       assert(p.getAs[Double]("lb_both") <= both &&
@@ -517,17 +512,53 @@ class SketchSpec extends SparkSpec {
     graft.functions.GraftFunctions.registerAll(spark)
     val ev = Tables.load(spark, sf, "events")
     ev.createOrReplaceTempView("ev_theta_sql")
+    // Spark's set algebra, the engine's bounds over Spark's images
     val row = spark.sql(
-      """SELECT theta_estimate(s1) AS e1,
-        |  theta_intersect_estimate(s1, s2) AS eb,
-        |  theta_a_not_b_estimate(s1, s2) AS ea
+      """SELECT theta_sketch_estimate(s1) AS e1,
+        |  theta_sketch_estimate(theta_intersection(s1, s2)) AS eb,
+        |  theta_sketch_estimate(theta_difference(s1, s2)) AS ea,
+        |  theta_lower_bound(s1) AS lb, theta_upper_bound(s1, 3) AS ub
         |FROM (SELECT
         |  theta_sketch_agg(CASE WHEN event_type = 'view' THEN user_id END) AS s1,
         |  theta_sketch_agg(CASE WHEN event_type = 'click' THEN user_id END) AS s2
         |FROM ev_theta_sql)""".stripMargin).collect().head
     val exact = ev.filter(col("event_type") === "view")
       .select(countDistinct(col("user_id"))).as[Long].collect().head
-    assert(math.abs(row.getDouble(0) - exact) <= math.max(5.0, 0.05 * exact))
-    assert(row.getDouble(1) >= 0.0 && row.getDouble(2) >= 0.0)
+    assert(math.abs(row.getLong(0) - exact) <= math.max(5.0, 0.05 * exact))
+    assert(row.getLong(1) >= 0L && row.getLong(2) >= 0L)
+    assert(row.getDouble(3) <= exact && exact <= row.getDouble(4), s"$row")
+  }
+
+  test("empty sketches: an all-NULL group reads NULL quantiles and zero estimates") {
+    val day = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
+    val ev = Seq[(String, java.sql.Timestamp, Option[Double], Option[Long])](
+      ("view", day, Some(1.0), Some(1L)), ("view", day, Some(2.0), Some(2L)),
+      ("click", day, None, None), ("click", day, None, None))
+      .toDF("event_type", "ts", "value", "user_id")
+    // Spark's KLL quantile read fails on an empty sketch; the rollup's
+    // n > 0 guard turns that group into NULL quantiles instead
+    val q = Agg.quantileSketchRollup(Agg.dailyQuantileSketches(ev))
+      .collect().map(r => r.getAs[String]("event_type") -> r).toMap
+    Seq("p10", "p50", "p90").foreach { c =>
+      assert(q("click").isNullAt(q("click").fieldIndex(c)), s"click $c")
+      assert(!q("view").isNullAt(q("view").fieldIndex(c)), s"view $c")
+    }
+    assert(q("click").getAs[Long]("n_sketch") == 0L)
+    assert(q("click").getAs[Long]("n_events") == 2L)
+    assert(q("view").getAs[Long]("n_sketch") == 2L)
+    // an empty theta sketch estimates 0 through every set operation
+    val daily = Agg.dailyThetaSketches(ev)
+    val alg = Agg.typeSetAlgebra(daily).collect()
+    assert(alg.length == 1)
+    val r = alg.head
+    assert((r.getString(0), r.getString(1)) == (("click", "view")))
+    assert(Seq("est_a", "est_both", "est_only_a").map(r.getAs[Double]) ==
+      Seq(0.0, 0.0, 0.0), s"$r")
+    assert(Seq("est_b", "est_only_b").map(r.getAs[Double]) == Seq(2.0, 2.0),
+      s"$r")
+    val reach = Agg.reachFromThetaState(daily)
+      .select(col("event_type"), col("est_reach"))
+      .as[(String, Double)].collect().toMap
+    assert(reach == Map("click" -> 0.0, "view" -> 2.0))
   }
 }

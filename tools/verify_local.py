@@ -109,7 +109,6 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
     n_fail = 0
-    results = {}
     secs = {}
     for name in sorted(oracle):
         spark_path = Path(out_dir) / name
@@ -172,7 +171,6 @@ def main():
                     bad = (i, wcols[j], a, b)
             if status == "MISMATCH":
                 break
-        results[name] = status
         if status == "MISMATCH":
             i, c, a, b = bad
             print(f"FAIL {tag}: row {i} col {c}: spark={a!r} oracle={b!r}")
@@ -192,7 +190,8 @@ def main():
     slowest = sorted(secs.items(), key=lambda kv: -kv[1])[:5]
     print("\nslowest oracles (duckdb s): " +
           ", ".join(f"{n} {t:.2f}" for n, t in slowest))
-    print(f"{len(results) - n_fail}/{len(results)} oracle queries pass")
+    # every oracle query fails at most once above, wherever it stops
+    print(f"{len(oracle) - n_fail}/{len(oracle)} oracle queries pass")
     sys.exit(1 if n_fail else 0)
 
 

@@ -109,7 +109,7 @@ object SparkEntry {
     }
     s"""WITH m0 AS (
        |  SELECT doc_id,
-       |    ' ' || array_to_string(string_split_regex(text, '\\s+'), ' ')
+       |    ' ' || array_to_string(${OracleGen.words}, ' ')
        |        || ' ' AS s
        |  FROM documents),
        |${steps.mkString(",\n")}
@@ -2026,7 +2026,7 @@ object SparkEntry {
     "q40_vector_norms" -> ((s, dir) => Similarity.norms(t(s, dir, "embeddings"))),
     // A8 north star: semantic dedup clusters — connected components of
     // the embedding-cosine pair graph (q73's component walk over vector
-    // pairs; oracle = the same recursive CTE over list_dot_product).
+    // pairs; oracle = the same recursive CTE over OracleGen.cosine).
     "q89_semantic_clusters" -> ((s, dir) =>
       Similarity.semanticClusters(
         Similarity.nearDupWithinLabel(t(s, dir, "embeddings"),
@@ -2595,55 +2595,171 @@ object SparkEntry {
     * clustering over a reduced corpus, certifying forget ≡ never-ingested.
     */
   private def dedupClustersSqlOver(docsFilter: String): String =
-    s"""WITH RECURSIVE ${OracleGen.clusterCtes(OracleGen.trigramShingles(docsFilter))}
+    s"""WITH RECURSIVE ${OracleGen.clusterCtes(
+      OracleGen.trigramShingles(s"(${OracleGen.wordTokens(docsFilter)})"))}
       |SELECT doc_id, cluster_id FROM clusters""".stripMargin
 
   private val dedupClustersSql: String = dedupClustersSqlOver("TRUE")
 
-  /** The q166 fixed-point recurrence unrolled (3 iterations, integer //
-    * throughout) — shared by q166 and its reliable-checkpoint twin q215
-    * (same computation, different state durability, same hash).
+  /** The q166 fixed-point recurrence unrolled ([[OracleGen.pagerankCtes]],
+    * 3 iterations, integer // throughout) — shared by q166, its resume
+    * twin q172 and its reliable-checkpoint twin q215 (same computation,
+    * different state durability, same hash).
     */
   private val pagerank3Sql: String =
-      """WITH e0 AS (SELECT DISTINCT o_custkey*2 AS src, l_suppkey*2+1 AS dst
-        |            FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-        |e AS (SELECT src, dst FROM e0
-        |      UNION SELECT dst AS src, src AS dst FROM e0),
-        |deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
-        |nodes AS (SELECT src AS node FROM e
-        |          UNION SELECT dst AS node FROM e),
-        |nn AS (SELECT COUNT(*) AS n FROM nodes),
-        |r0 AS (SELECT node, 1000000000000 // n AS rank
-        |       FROM nodes CROSS JOIN nn),
-        |r1 AS (SELECT nd.node,
-        |         (150000000000 // nn.n) + (17*COALESCE(c.s,0)) // 20 AS rank
-        |       FROM nodes nd CROSS JOIN nn
-        |       LEFT JOIN (SELECT e.dst AS node, SUM(r.rank // d.deg) AS s
-        |                  FROM r0 r JOIN e ON e.src = r.node
-        |                  JOIN deg d ON d.src = r.node
-        |                  GROUP BY e.dst) c ON c.node = nd.node),
-        |r2 AS (SELECT nd.node,
-        |         (150000000000 // nn.n) + (17*COALESCE(c.s,0)) // 20 AS rank
-        |       FROM nodes nd CROSS JOIN nn
-        |       LEFT JOIN (SELECT e.dst AS node, SUM(r.rank // d.deg) AS s
-        |                  FROM r1 r JOIN e ON e.src = r.node
-        |                  JOIN deg d ON d.src = r.node
-        |                  GROUP BY e.dst) c ON c.node = nd.node),
-        |r3 AS (SELECT nd.node,
-        |         (150000000000 // nn.n) + (17*COALESCE(c.s,0)) // 20 AS rank
-        |       FROM nodes nd CROSS JOIN nn
-        |       LEFT JOIN (SELECT e.dst AS node, SUM(r.rank // d.deg) AS s
-        |                  FROM r2 r JOIN e ON e.src = r.node
-        |                  JOIN deg d ON d.src = r.node
-        |                  GROUP BY e.dst) c ON c.node = nd.node)
-        |SELECT node, CAST(rank AS BIGINT) AS rank FROM r3""".stripMargin
+    s"""WITH ${OracleGen.pagerankCtes}
+       |SELECT node, CAST(rank AS BIGINT) AS rank FROM r3""".stripMargin
 
-  /** Exact label-blocked cosine pairs + the recursive component walk.
-    * Shared verbatim by q89 (cold semantic clustering) and q189
-    * (incremental resume) — the hash gate certifies resume ≡ cold.
+  /** Eval-vs-train trigram contamination per eval doc: shared by q68
+    * and its broadcast-plan twin q79 (same rows, same SQL truth).
     */
-  /** Shared by q89 (cold), q189 (resume) and — over a reduced corpus —
-    * q209 (forget ≡ never-ingested, the vector-family twin of q201).
+  private val decontaminateSql: String =
+    s"""WITH ${OracleGen.shingleCtes()},
+      |evsh AS (SELECT * FROM sh WHERE doc_id % 10 = 0),
+      |trsh AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 10 != 0),
+      |sizes AS (SELECT doc_id, COUNT(*) AS n_shingles FROM evsh GROUP BY doc_id),
+      |hits AS (
+      |  SELECT doc_id, COUNT(*) AS n_contaminated
+      |  FROM evsh WHERE shingle IN (SELECT shingle FROM trsh)
+      |  GROUP BY doc_id)
+      |SELECT s.doc_id, s.n_shingles,
+      |  COALESCE(h.n_contaminated, 0) AS n_contaminated,
+      |  CAST(COALESCE(h.n_contaminated, 0) AS DOUBLE) / s.n_shingles AS contamination
+      |FROM sizes s LEFT JOIN hits h ON h.doc_id = s.doc_id""".stripMargin
+
+  /** Directed trigram containment >= 0.8: shared by q156 and its at-rest
+    * bucketed form q211 (one oracle text, two physical plans).
+    */
+  private val containmentSql: String =
+    s"""WITH ${OracleGen.shingleCtes()},
+      |sizes AS (SELECT doc_id, COUNT(*) AS n_a FROM sh GROUP BY doc_id),
+      |inter AS (
+      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
+      |  FROM sh a JOIN sh b
+      |    ON a.shingle = b.shingle AND a.doc_id <> b.doc_id
+      |  GROUP BY 1, 2)
+      |SELECT i.doc_a, i.doc_b, z.n_a, i.n_inter
+      |FROM inter i JOIN sizes z ON z.doc_id = i.doc_a
+      |WHERE i.n_inter * 5 >= z.n_a * 4""".stripMargin
+
+  /** Per batch doc (doc_id % 5 = 4): trigram shingles and how many of them
+    * the `corpus` docs never hold. q161 and its bucketed twin q193 share
+    * the plain corpus; q198 drops the forgotten docs from it.
+    */
+  private def noveltySqlOver(corpus: String): String =
+    s"""WITH ${OracleGen.shingleCtes()},
+      |corpus AS (SELECT DISTINCT shingle FROM sh WHERE $corpus)
+      |SELECT b.doc_id, COUNT(*) AS n_shingles,
+      |  CAST(SUM(CASE WHEN c.shingle IS NULL THEN 1 ELSE 0 END)
+      |    AS BIGINT) AS n_novel
+      |FROM sh b LEFT JOIN corpus c ON c.shingle = b.shingle
+      |WHERE b.doc_id % 5 = 4
+      |GROUP BY b.doc_id""".stripMargin
+
+  /** Decile-edge bucket counts, reference (even doc_id) vs current (odd):
+    * shared by q163 and its persisted-reference twin q173.
+    */
+  private val driftBucketsSql: String =
+    """WITH ref AS (SELECT n_chars FROM documents WHERE doc_id % 2 = 0),
+      |cur AS (SELECT n_chars FROM documents WHERE doc_id % 2 = 1),
+      |e AS (SELECT quantile_cont(n_chars,
+      |        [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS edges
+      |      FROM ref),
+      |rb AS (
+      |  SELECT CAST(len(list_filter(e.edges,
+      |      x -> CAST(r.n_chars AS DOUBLE) > x)) AS INT) AS bucket,
+      |    COUNT(*) AS n_ref
+      |  FROM ref r CROSS JOIN e GROUP BY 1),
+      |cb AS (
+      |  SELECT CAST(len(list_filter(e.edges,
+      |      x -> CAST(c.n_chars AS DOUBLE) > x)) AS INT) AS bucket,
+      |    COUNT(*) AS n_cur
+      |  FROM cur c CROSS JOIN e GROUP BY 1)
+      |SELECT COALESCE(rb.bucket, cb.bucket) AS bucket,
+      |  COALESCE(rb.n_ref, 0) AS n_ref,
+      |  COALESCE(cb.n_cur, 0) AS n_cur
+      |FROM rb FULL OUTER JOIN cb ON cb.bucket = rb.bucket""".stripMargin
+
+  /** Exact two-sample KS of n_chars, even vs odd doc_id: shared by q190 and
+    * its persisted-reference twin q195 (the shared text is the
+    * equivalence proof).
+    */
+  private val ksDriftSql: String =
+    """WITH ref AS (SELECT n_chars AS v FROM documents
+      |             WHERE doc_id % 2 = 0 AND n_chars IS NOT NULL),
+      |cur AS (SELECT n_chars AS v FROM documents
+      |        WHERE doc_id % 2 = 1 AND n_chars IS NOT NULL),
+      |u AS (
+      |  SELECT v,
+      |    SUM(CASE WHEN side = 0 THEN 1 ELSE 0 END) AS ca,
+      |    SUM(CASE WHEN side = 1 THEN 1 ELSE 0 END) AS cb
+      |  FROM (SELECT v, 0 AS side FROM ref
+      |        UNION ALL SELECT v, 1 AS side FROM cur)
+      |  GROUP BY v),
+      |c AS (
+      |  SELECT SUM(ca) OVER (ORDER BY v) AS fa,
+      |         SUM(cb) OVER (ORDER BY v) AS fb
+      |  FROM u),
+      |n AS (SELECT (SELECT COUNT(*) FROM ref) AS na,
+      |             (SELECT COUNT(*) FROM cur) AS nb),
+      |d AS (SELECT MAX(ABS(CAST(fa AS HUGEINT) * nb
+      |                   - CAST(fb AS HUGEINT) * na)) AS d_num
+      |      FROM c, n)
+      |SELECT CAST(d.d_num AS BIGINT) AS d_num,
+      |  CAST(d.d_num AS DOUBLE)
+      |    / (CAST(n.na AS DOUBLE) * CAST(n.nb AS DOUBLE)) AS d_stat,
+      |  n.na AS n_ref, n.nb AS n_cur
+      |FROM d, n""".stripMargin
+
+  /** The user/time slice of `events`: q92 (z-ordered copy) and q94
+    * (manifest-pruned read) must both return exactly these rows.
+    */
+  private val eventSliceSql: String =
+    """SELECT event_id, ts, user_id, event_type, value, props
+      |FROM events
+      |WHERE user_id BETWEEN 10 AND 19
+      |  AND ts BETWEEN TIMESTAMP '2024-01-10 00:00:00'
+      |             AND TIMESTAMP '2024-01-15 00:00:00'""".stripMargin
+
+  /** Names within edit distance 1, `corpus` customers vs the
+    * c_custkey % 4 = 1 batch: q144 and its bucketed twin q185 probe the
+    * full corpus, q202 the corpus after the delete.
+    */
+  private def fuzzyDeltaSqlOver(corpus: String): String =
+    s"""WITH a AS (SELECT DISTINCT c_name AS t FROM customer
+      |           WHERE $corpus),
+      |b AS (SELECT DISTINCT c_name AS t FROM customer
+      |      WHERE c_custkey % 4 = 1)
+      |SELECT a.t AS name_a, b.t AS name_b,
+      |  CAST(levenshtein(a.t, b.t) AS INT) AS dist
+      |FROM a JOIN b ON levenshtein(a.t, b.t) <= 1""".stripMargin
+
+  /** Video frame-hash overlap of the delta (asset_id % 6 = 5) against the
+    * `corpus` frames: q132 over the whole corpus, q203 after the delete.
+    */
+  private def frameDeltaSqlOver(corpus: String): String =
+    s"""WITH ${OracleGen.frameHashCtes},
+      |corpus AS (SELECT * FROM hashes WHERE $corpus),
+      |delta AS (SELECT * FROM hashes WHERE asset_id % 6 = 5),
+      |stop AS (SELECT fhash FROM corpus GROUP BY fhash HAVING COUNT(*) > 64),
+      |prunedc AS (SELECT * FROM corpus
+      |            WHERE fhash NOT IN (SELECT fhash FROM stop)),
+      |pairs AS (SELECT c.asset_id AS asset_a, d.asset_id AS asset_b,
+      |    COUNT(*) AS n_matched
+      |  FROM prunedc c JOIN delta d USING (fhash) GROUP BY 1, 2)
+      |SELECT p.asset_a, p.asset_b, p.n_matched,
+      |  CAST(p.n_matched AS DOUBLE) / CAST(least(na.n, nb.n) AS DOUBLE)
+      |    AS overlap
+      |FROM pairs p JOIN pa na ON p.asset_a = na.asset_id
+      |JOIN pa nb ON p.asset_b = nb.asset_id
+      |WHERE CAST(p.n_matched AS DOUBLE) / CAST(least(na.n, nb.n) AS DOUBLE)
+      |  >= 0.3""".stripMargin
+
+  /** Exact label-blocked cosine pairs + the recursive component walk over
+    * the `embeddings` rows matching `vecsFilter`. Shared verbatim by q89
+    * (cold semantic clustering) and q189 (incremental resume) — the hash
+    * gate certifies resume ≡ cold — and, over a reduced corpus, by q209
+    * (forget ≡ never-ingested, the vector-family twin of q201).
     */
   private def semanticClustersSqlOver(vecsFilter: String): String =
     s"""WITH RECURSIVE emb AS (
@@ -2652,9 +2768,7 @@ object SparkEntry {
       |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
       |  FROM emb a JOIN emb b
       |    ON a.label = b.label AND a.vec_id < b.vec_id
-      |  WHERE list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-      |    / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-      |       * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))))
+      |  WHERE ${OracleGen.cosine("a.embedding", "b.embedding")}
       |    >= 0.3),
       |edges AS (
       |  SELECT vec_a AS src, vec_b AS dst FROM pairs
@@ -2699,123 +2813,45 @@ object SparkEntry {
         |WHERE '0' || substr(md5(CAST(d.doc_id AS VARCHAR) || ':graft'), 1, 4)
         |      < t.thr""".stripMargin,
     "q153_lm_bigrams" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents),
+      s"""WITH toks AS (
+        |  ${OracleGen.wordTokens()}),
         |bg AS (
-        |  SELECT doc_id, t[i] AS w1, t[i+1] AS w2
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t))) AS i
-        |        FROM toks WHERE len(t) >= 2)),
+        |  ${OracleGen.bigrams()}),
         |c AS (SELECT w1, w2, COUNT(*) AS c12 FROM bg GROUP BY 1, 2)
         |SELECT w1, w2, c12,
         |  CAST(SUM(c12) OVER (PARTITION BY w1) AS BIGINT) AS c1
         |FROM c""".stripMargin,
     "q154_lm_score" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents),
+      s"""WITH toks AS (
+        |  ${OracleGen.wordTokens()}),
         |bg AS (
-        |  SELECT doc_id, t[i] AS w1, t[i+1] AS w2
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t))) AS i
-        |        FROM toks WHERE len(t) >= 2)),
-        |c AS (SELECT w1, w2, COUNT(*) AS c12 FROM bg GROUP BY 1, 2),
-        |u AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1 FROM c GROUP BY 1)
-        |SELECT b.doc_id, COUNT(*) AS n_bigrams, COUNT(c.c12) AS n_known,
-        |  CAST(SUM(COALESCE(c.c12, 0)) AS BIGINT) AS sum_c12,
-        |  CAST(SUM(COALESCE(u.c1, 0)) AS BIGINT) AS sum_c1
-        |FROM bg b
-        |LEFT JOIN c ON b.w1 = c.w1 AND b.w2 = c.w2
-        |LEFT JOIN u ON b.w1 = u.w1
-        |GROUP BY b.doc_id""".stripMargin,
+        |  ${OracleGen.bigrams()}),
+        |${OracleGen.bigramCounts("bg")}
+        |${OracleGen.bigramStats}""".stripMargin,
     "q155_ppl_filter" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents),
+      s"""WITH toks AS (
+        |  ${OracleGen.wordTokens()}),
         |bg AS (
-        |  SELECT doc_id, t[i] AS w1, t[i+1] AS w2
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t))) AS i
-        |        FROM toks WHERE len(t) >= 2)),
-        |c AS (SELECT w1, w2, COUNT(*) AS c12 FROM bg GROUP BY 1, 2),
-        |u AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1 FROM c GROUP BY 1),
-        |v AS (SELECT COUNT(DISTINCT tok) AS v
-        |      FROM (SELECT unnest(t) AS tok FROM toks)),
-        |sc AS (
-        |  SELECT b.doc_id, COUNT(*) AS n_bigrams,
-        |    exp(-SUM(ln(CAST(COALESCE(c.c12, 0) + 1 AS DOUBLE) /
-        |                 CAST(COALESCE(u.c1, 0) + v.v AS DOUBLE)))
-        |        / COUNT(*)) AS ppl
-        |  FROM bg b
-        |  LEFT JOIN c ON b.w1 = c.w1 AND b.w2 = c.w2
-        |  LEFT JOIN u ON b.w1 = u.w1
-        |  CROSS JOIN v
-        |  GROUP BY b.doc_id)
-        |SELECT s.doc_id, d.lang, s.n_bigrams
-        |FROM sc s JOIN documents d ON d.doc_id = s.doc_id
-        |WHERE s.ppl <= 30.9497""".stripMargin,
+        |  ${OracleGen.bigrams()}),
+        |${OracleGen.bigramCounts("bg")},
+        |${OracleGen.vocabSize()},
+        |${OracleGen.pplGate("30.9497")}""".stripMargin,
     // the q155 algebra with the LM trained on src0 and V frozen to the
     // TRAIN stratum's vocabulary (the stored-artifact convention)
     "q205_ppl_gate_stored" ->
-      """WITH toks AS (
-        |  SELECT doc_id, source, string_split_regex(text, '\s+') AS t
-        |  FROM documents),
+      s"""WITH toks AS (
+        |  ${OracleGen.wordTokens(cols = "doc_id, source")}),
         |tbg AS (
-        |  SELECT t[i] AS w1, t[i+1] AS w2
-        |  FROM (SELECT t, unnest(range(1, len(t))) AS i
-        |        FROM toks WHERE source = 'src0' AND len(t) >= 2)),
-        |c AS (SELECT w1, w2, COUNT(*) AS c12 FROM tbg GROUP BY 1, 2),
-        |u AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1 FROM c GROUP BY 1),
-        |v AS (SELECT COUNT(DISTINCT tok) AS v
-        |      FROM (SELECT unnest(t) AS tok FROM toks WHERE source = 'src0')),
+        |  ${OracleGen.bigrams("source = 'src0'", docIds = false)}),
+        |${OracleGen.bigramCounts("tbg")},
+        |${OracleGen.vocabSize("source = 'src0'")},
         |bg AS (
-        |  SELECT doc_id, t[i] AS w1, t[i+1] AS w2
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t))) AS i
-        |        FROM toks WHERE source <> 'src0' AND len(t) >= 2)),
-        |sc AS (
-        |  SELECT b.doc_id, COUNT(*) AS n_bigrams,
-        |    exp(-SUM(ln(CAST(COALESCE(c.c12, 0) + 1 AS DOUBLE) /
-        |                 CAST(COALESCE(u.c1, 0) + v.v AS DOUBLE)))
-        |        / COUNT(*)) AS ppl
-        |  FROM bg b
-        |  LEFT JOIN c ON b.w1 = c.w1 AND b.w2 = c.w2
-        |  LEFT JOIN u ON b.w1 = u.w1
-        |  CROSS JOIN v
-        |  GROUP BY b.doc_id)
-        |SELECT s.doc_id, d.lang, s.n_bigrams
-        |FROM sc s JOIN documents d ON d.doc_id = s.doc_id
-        |WHERE s.ppl <= 44.0""".stripMargin,
-    "q156_containment" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        |        FROM toks WHERE len(t) >= 3)),
-        |sizes AS (SELECT doc_id, COUNT(*) AS n_a FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-        |  FROM sh a JOIN sh b
-        |    ON a.shingle = b.shingle AND a.doc_id <> b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT i.doc_a, i.doc_b, z.n_a, i.n_inter
-        |FROM inter i JOIN sizes z ON z.doc_id = i.doc_a
-        |WHERE i.n_inter * 5 >= z.n_a * 4""".stripMargin,
+        |  ${OracleGen.bigrams("source <> 'src0'")}),
+        |${OracleGen.pplGate("44.0")}""".stripMargin,
+    "q156_containment" -> containmentSql,
     // the at-rest bucketed form computes the identical algebra — one
     // oracle text, two physical plans
-    "q211_containment_bucketed" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        |        FROM toks WHERE len(t) >= 3)),
-        |sizes AS (SELECT doc_id, COUNT(*) AS n_a FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-        |  FROM sh a JOIN sh b
-        |    ON a.shingle = b.shingle AND a.doc_id <> b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT i.doc_a, i.doc_b, z.n_a, i.n_inter
-        |FROM inter i JOIN sizes z ON z.doc_id = i.doc_a
-        |WHERE i.n_inter * 5 >= z.n_a * 4""".stripMargin,
+    "q211_containment_bucketed" -> containmentSql,
     "q157_weighted_sample" ->
       """SELECT doc_id, lang, source, n_chars FROM (
         |  SELECT doc_id, lang, source, n_chars,
@@ -2835,13 +2871,7 @@ object SparkEntry {
         |    AS clamped
         |FROM documents d JOIN b ON b.lang = d.lang""".stripMargin,
     "q159_ngram_novelty" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        |        FROM toks WHERE len(t) >= 3)),
+      s"""WITH ${OracleGen.shingleCtes()},
         |fs AS (SELECT shingle, MIN(doc_id) AS first_doc FROM sh GROUP BY 1)
         |SELECT s.doc_id, COUNT(*) AS n_shingles,
         |  CAST(SUM(CASE WHEN f.first_doc = s.doc_id THEN 1 ELSE 0 END)
@@ -2849,27 +2879,13 @@ object SparkEntry {
         |FROM sh s JOIN fs f ON f.shingle = s.shingle
         |GROUP BY s.doc_id""".stripMargin,
     "q160_hybrid_rrf" ->
-      """WITH cand AS (
+      s"""WITH cand AS (
         |  SELECT p.vec_id AS probe_id, c.vec_id AS doc_id,
-        |    list_dot_product(CAST(p.embedding AS DOUBLE[]),
-        |                     CAST(c.embedding AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(p.embedding AS DOUBLE[]),
-        |                               CAST(p.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]),
-        |                                 CAST(c.embedding AS DOUBLE[]))))
+        |    ${OracleGen.cosine("p.embedding", "c.embedding")}
         |      AS cosine
         |  FROM embeddings p JOIN embeddings c ON c.vec_id != p.vec_id
         |  WHERE p.vec_id < 3),
-        |tok AS (
-        |  SELECT DISTINCT doc_id,
-        |    unnest(string_split_regex(text, '\s+')) AS token
-        |  FROM documents),
-        |ov AS (
-        |  SELECT pt.doc_id AS probe_id, ct.doc_id AS doc_id,
-        |    COUNT(*) AS kw_overlap
-        |  FROM tok pt JOIN tok ct
-        |    ON pt.token = ct.token AND ct.doc_id != pt.doc_id
-        |  WHERE pt.doc_id < 3 GROUP BY 1, 2),
+        |${OracleGen.keywordOverlapCtes},
         |g AS (
         |  SELECT c.probe_id, c.doc_id, c.cosine,
         |    COALESCE(o.kw_overlap, 0) AS kw_overlap
@@ -2888,57 +2904,14 @@ object SparkEntry {
         |    ORDER BY 1.0/(60 + rank_vec) + 1.0/(60 + rank_kw) DESC, doc_id)
         |    AS INT) AS rank_rrf
         |FROM r QUALIFY rank_rrf <= 10""".stripMargin,
-    "q161_novelty_delta" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        |        FROM toks WHERE len(t) >= 3)),
-        |corpus AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 5 <> 4)
-        |SELECT b.doc_id, COUNT(*) AS n_shingles,
-        |  CAST(SUM(CASE WHEN c.shingle IS NULL THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_novel
-        |FROM sh b LEFT JOIN corpus c ON c.shingle = b.shingle
-        |WHERE b.doc_id % 5 = 4
-        |GROUP BY b.doc_id""".stripMargin,
+    "q161_novelty_delta" -> noveltySqlOver("doc_id % 5 <> 4"),
     // forget ∘ append ≡ never-ingested: the oracle's corpus is simply
     // corpus-minus-forgotten — if the ledger cycle (append, negative
     // append, compact) left any residue, the hash gate would see it
-    "q198_novelty_forget" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        |        FROM toks WHERE len(t) >= 3)),
-        |corpus AS (SELECT DISTINCT shingle FROM sh
-        |           WHERE doc_id % 5 <> 4 AND doc_id % 10 <> 1)
-        |SELECT b.doc_id, COUNT(*) AS n_shingles,
-        |  CAST(SUM(CASE WHEN c.shingle IS NULL THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_novel
-        |FROM sh b LEFT JOIN corpus c ON c.shingle = b.shingle
-        |WHERE b.doc_id % 5 = 4
-        |GROUP BY b.doc_id""".stripMargin,
+    "q198_novelty_forget" -> noveltySqlOver("doc_id % 5 <> 4 AND doc_id % 10 <> 1"),
     // the bucketed-table layout answers with exactly the q161 rows —
     // the layout is physical, the algebra identical
-    "q193_novelty_bucketed" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        |        FROM toks WHERE len(t) >= 3)),
-        |corpus AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 5 <> 4)
-        |SELECT b.doc_id, COUNT(*) AS n_shingles,
-        |  CAST(SUM(CASE WHEN c.shingle IS NULL THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_novel
-        |FROM sh b LEFT JOIN corpus c ON c.shingle = b.shingle
-        |WHERE b.doc_id % 5 = 4
-        |GROUP BY b.doc_id""".stripMargin,
+    "q193_novelty_bucketed" -> noveltySqlOver("doc_id % 5 <> 4"),
     "q162_percentile_rank" ->
       """SELECT doc_id, lang, n_chars,
         |  percent_rank() OVER (PARTITION BY lang ORDER BY n_chars) AS pr
@@ -2989,60 +2962,10 @@ object SparkEntry {
     // exact two-sample KS: per-value counts, windowed CDFs (RANGE frame
     // = ties share a value, same as the Spark side), integer
     // cross-multiplied sup, one final IEEE divide
-    "q190_ks_drift" ->
-      """WITH ref AS (SELECT n_chars AS v FROM documents
-        |             WHERE doc_id % 2 = 0 AND n_chars IS NOT NULL),
-        |cur AS (SELECT n_chars AS v FROM documents
-        |        WHERE doc_id % 2 = 1 AND n_chars IS NOT NULL),
-        |u AS (
-        |  SELECT v,
-        |    SUM(CASE WHEN side = 0 THEN 1 ELSE 0 END) AS ca,
-        |    SUM(CASE WHEN side = 1 THEN 1 ELSE 0 END) AS cb
-        |  FROM (SELECT v, 0 AS side FROM ref
-        |        UNION ALL SELECT v, 1 AS side FROM cur)
-        |  GROUP BY v),
-        |c AS (
-        |  SELECT SUM(ca) OVER (ORDER BY v) AS fa,
-        |         SUM(cb) OVER (ORDER BY v) AS fb
-        |  FROM u),
-        |n AS (SELECT (SELECT COUNT(*) FROM ref) AS na,
-        |             (SELECT COUNT(*) FROM cur) AS nb),
-        |d AS (SELECT MAX(ABS(CAST(fa AS HUGEINT) * nb
-        |                   - CAST(fb AS HUGEINT) * na)) AS d_num
-        |      FROM c, n)
-        |SELECT CAST(d.d_num AS BIGINT) AS d_num,
-        |  CAST(d.d_num AS DOUBLE)
-        |    / (CAST(n.na AS DOUBLE) * CAST(n.nb AS DOUBLE)) AS d_stat,
-        |  n.na AS n_ref, n.nb AS n_cur
-        |FROM d, n""".stripMargin,
+    "q190_ks_drift" -> ksDriftSql,
     // persisted-reference KS reproduces the one-shot q190 statistic on
     // the same splits — shared oracle text is the equivalence proof
-    "q195_ks_reference" ->
-      """WITH ref AS (SELECT n_chars AS v FROM documents
-        |             WHERE doc_id % 2 = 0 AND n_chars IS NOT NULL),
-        |cur AS (SELECT n_chars AS v FROM documents
-        |        WHERE doc_id % 2 = 1 AND n_chars IS NOT NULL),
-        |u AS (
-        |  SELECT v,
-        |    SUM(CASE WHEN side = 0 THEN 1 ELSE 0 END) AS ca,
-        |    SUM(CASE WHEN side = 1 THEN 1 ELSE 0 END) AS cb
-        |  FROM (SELECT v, 0 AS side FROM ref
-        |        UNION ALL SELECT v, 1 AS side FROM cur)
-        |  GROUP BY v),
-        |c AS (
-        |  SELECT SUM(ca) OVER (ORDER BY v) AS fa,
-        |         SUM(cb) OVER (ORDER BY v) AS fb
-        |  FROM u),
-        |n AS (SELECT (SELECT COUNT(*) FROM ref) AS na,
-        |             (SELECT COUNT(*) FROM cur) AS nb),
-        |d AS (SELECT MAX(ABS(CAST(fa AS HUGEINT) * nb
-        |                   - CAST(fb AS HUGEINT) * na)) AS d_num
-        |      FROM c, n)
-        |SELECT CAST(d.d_num AS BIGINT) AS d_num,
-        |  CAST(d.d_num AS DOUBLE)
-        |    / (CAST(n.na AS DOUBLE) * CAST(n.nb AS DOUBLE)) AS d_stat,
-        |  n.na AS n_ref, n.nb AS n_cur
-        |FROM d, n""".stripMargin,
+    "q195_ks_reference" -> ksDriftSql,
     // per-stratum KS: the q190 algebra keyed by lang — windows
     // PARTITION BY lang, totals per lang cast back to BIGINT
     "q196_ks_by_lang" ->
@@ -3117,46 +3040,8 @@ object SparkEntry {
         |    / (CAST(n.na AS DOUBLE) * CAST(n.nb AS DOUBLE)) AS d_stat,
         |  n.na AS n_ref, n.nb AS n_cur
         |FROM d JOIN n ON n.c = d.c""".stripMargin,
-    "q163_drift_buckets" ->
-      """WITH ref AS (SELECT n_chars FROM documents WHERE doc_id % 2 = 0),
-        |cur AS (SELECT n_chars FROM documents WHERE doc_id % 2 = 1),
-        |e AS (SELECT quantile_cont(n_chars,
-        |        [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS edges
-        |      FROM ref),
-        |rb AS (
-        |  SELECT CAST(len(list_filter(e.edges,
-        |      x -> CAST(r.n_chars AS DOUBLE) > x)) AS INT) AS bucket,
-        |    COUNT(*) AS n_ref
-        |  FROM ref r CROSS JOIN e GROUP BY 1),
-        |cb AS (
-        |  SELECT CAST(len(list_filter(e.edges,
-        |      x -> CAST(c.n_chars AS DOUBLE) > x)) AS INT) AS bucket,
-        |    COUNT(*) AS n_cur
-        |  FROM cur c CROSS JOIN e GROUP BY 1)
-        |SELECT COALESCE(rb.bucket, cb.bucket) AS bucket,
-        |  COALESCE(rb.n_ref, 0) AS n_ref,
-        |  COALESCE(cb.n_cur, 0) AS n_cur
-        |FROM rb FULL OUTER JOIN cb ON cb.bucket = rb.bucket""".stripMargin,
-    "q173_drift_reference" ->
-      """WITH ref AS (SELECT n_chars FROM documents WHERE doc_id % 2 = 0),
-        |cur AS (SELECT n_chars FROM documents WHERE doc_id % 2 = 1),
-        |e AS (SELECT quantile_cont(n_chars,
-        |        [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS edges
-        |      FROM ref),
-        |rb AS (
-        |  SELECT CAST(len(list_filter(e.edges,
-        |      x -> CAST(r.n_chars AS DOUBLE) > x)) AS INT) AS bucket,
-        |    COUNT(*) AS n_ref
-        |  FROM ref r CROSS JOIN e GROUP BY 1),
-        |cb AS (
-        |  SELECT CAST(len(list_filter(e.edges,
-        |      x -> CAST(c.n_chars AS DOUBLE) > x)) AS INT) AS bucket,
-        |    COUNT(*) AS n_cur
-        |  FROM cur c CROSS JOIN e GROUP BY 1)
-        |SELECT COALESCE(rb.bucket, cb.bucket) AS bucket,
-        |  COALESCE(rb.n_ref, 0) AS n_ref,
-        |  COALESCE(cb.n_cur, 0) AS n_cur
-        |FROM rb FULL OUTER JOIN cb ON cb.bucket = rb.bucket""".stripMargin,
+    "q163_drift_buckets" -> driftBucketsSql,
+    "q173_drift_reference" -> driftBucketsSql,
     // two reference versions (doc_id%4=0 and %4=2), one batch (%2=1):
     // the q173 algebra per version, unioned under reference_version
     "q186_drift_rotation" ->
@@ -3317,43 +3202,11 @@ object SparkEntry {
         |  ON a.t < b.t AND levenshtein(a.t, b.t) <= 1
         |WHERE jaro_winkler_similarity(a.t, b.t) >= 0.9""".stripMargin,
     // The engine's fixed-point recurrence, unrolled: every term is
-    // integer (// is DuckDB's integral divide, div on the Spark side), so
-    // the three iterations hash-match exactly. 150000000000 =
-    // (10^12 * 3) // 20, the teleport term at damping 17/20.
+    // integer, so the three iterations hash-match exactly.
     "q166_pagerank" -> pagerank3Sql,
     "q215_pagerank_reliable" -> pagerank3Sql,
     "q167_pagerank_top" ->
-      """WITH e0 AS (SELECT DISTINCT o_custkey*2 AS src, l_suppkey*2+1 AS dst
-        |            FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-        |e AS (SELECT src, dst FROM e0
-        |      UNION SELECT dst AS src, src AS dst FROM e0),
-        |deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
-        |nodes AS (SELECT src AS node FROM e
-        |          UNION SELECT dst AS node FROM e),
-        |nn AS (SELECT COUNT(*) AS n FROM nodes),
-        |r0 AS (SELECT node, 1000000000000 // n AS rank
-        |       FROM nodes CROSS JOIN nn),
-        |r1 AS (SELECT nd.node,
-        |         (150000000000 // nn.n) + (17*COALESCE(c.s,0)) // 20 AS rank
-        |       FROM nodes nd CROSS JOIN nn
-        |       LEFT JOIN (SELECT e.dst AS node, SUM(r.rank // d.deg) AS s
-        |                  FROM r0 r JOIN e ON e.src = r.node
-        |                  JOIN deg d ON d.src = r.node
-        |                  GROUP BY e.dst) c ON c.node = nd.node),
-        |r2 AS (SELECT nd.node,
-        |         (150000000000 // nn.n) + (17*COALESCE(c.s,0)) // 20 AS rank
-        |       FROM nodes nd CROSS JOIN nn
-        |       LEFT JOIN (SELECT e.dst AS node, SUM(r.rank // d.deg) AS s
-        |                  FROM r1 r JOIN e ON e.src = r.node
-        |                  JOIN deg d ON d.src = r.node
-        |                  GROUP BY e.dst) c ON c.node = nd.node),
-        |r3 AS (SELECT nd.node,
-        |         (150000000000 // nn.n) + (17*COALESCE(c.s,0)) // 20 AS rank
-        |       FROM nodes nd CROSS JOIN nn
-        |       LEFT JOIN (SELECT e.dst AS node, SUM(r.rank // d.deg) AS s
-        |                  FROM r2 r JOIN e ON e.src = r.node
-        |                  JOIN deg d ON d.src = r.node
-        |                  GROUP BY e.dst) c ON c.node = nd.node)
+      s"""WITH ${OracleGen.pagerankCtes}
         |SELECT s.s_name, CAST(r.rank AS BIGINT) AS rank
         |FROM r3 r JOIN supplier s ON s.s_suppkey = (r.node - 1) // 2
         |WHERE r.node % 2 = 1
@@ -3370,39 +3223,7 @@ object SparkEntry {
         |JOIN part p ON p.p_partkey = l.l_partkey
         |WHERE 5*CAST(floor(l.l_quantity) AS BIGINT)*s.cnt < s.sq
         |GROUP BY p.p_brand""".stripMargin,
-    "q172_pagerank_resume" ->
-      """WITH e0 AS (SELECT DISTINCT o_custkey*2 AS src, l_suppkey*2+1 AS dst
-        |            FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-        |e AS (SELECT src, dst FROM e0
-        |      UNION SELECT dst AS src, src AS dst FROM e0),
-        |deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
-        |nodes AS (SELECT src AS node FROM e
-        |          UNION SELECT dst AS node FROM e),
-        |nn AS (SELECT COUNT(*) AS n FROM nodes),
-        |r0 AS (SELECT node, 1000000000000 // n AS rank
-        |       FROM nodes CROSS JOIN nn),
-        |r1 AS (SELECT nd.node,
-        |         (150000000000 // nn.n) + (17*COALESCE(c.s,0)) // 20 AS rank
-        |       FROM nodes nd CROSS JOIN nn
-        |       LEFT JOIN (SELECT e.dst AS node, SUM(r.rank // d.deg) AS s
-        |                  FROM r0 r JOIN e ON e.src = r.node
-        |                  JOIN deg d ON d.src = r.node
-        |                  GROUP BY e.dst) c ON c.node = nd.node),
-        |r2 AS (SELECT nd.node,
-        |         (150000000000 // nn.n) + (17*COALESCE(c.s,0)) // 20 AS rank
-        |       FROM nodes nd CROSS JOIN nn
-        |       LEFT JOIN (SELECT e.dst AS node, SUM(r.rank // d.deg) AS s
-        |                  FROM r1 r JOIN e ON e.src = r.node
-        |                  JOIN deg d ON d.src = r.node
-        |                  GROUP BY e.dst) c ON c.node = nd.node),
-        |r3 AS (SELECT nd.node,
-        |         (150000000000 // nn.n) + (17*COALESCE(c.s,0)) // 20 AS rank
-        |       FROM nodes nd CROSS JOIN nn
-        |       LEFT JOIN (SELECT e.dst AS node, SUM(r.rank // d.deg) AS s
-        |                  FROM r2 r JOIN e ON e.src = r.node
-        |                  JOIN deg d ON d.src = r.node
-        |                  GROUP BY e.dst) c ON c.node = nd.node)
-        |SELECT node, CAST(rank AS BIGINT) AS rank FROM r3""".stripMargin,
+    "q172_pagerank_resume" -> pagerank3Sql,
     "q182_forecast_revenue" ->
       """SELECT
         |  CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
@@ -3521,53 +3342,8 @@ object SparkEntry {
         |                    AND o.o_orderdate >= TIMESTAMP '2001-01-01')
         |GROUP BY c.c_nationkey""".stripMargin,
     "q169_rrf_fused" ->
-      """WITH centroids AS (
-        |  SELECT vec_id AS c_id, embedding AS c_emb
-        |  FROM embeddings ORDER BY vec_id LIMIT 16),
-        |ccos AS (
-        |  SELECT e.vec_id, c.c_id,
-        |    list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(c.c_emb AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))))
-        |      AS ccos
-        |  FROM embeddings e CROSS JOIN centroids c),
-        |assign AS (
-        |  SELECT vec_id AS neighbor_id, c_id AS list_id FROM ccos
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, c_id) = 1),
-        |plists AS (
-        |  SELECT vec_id AS probe_id, c_id AS list_id FROM ccos
-        |  WHERE vec_id < 3
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, c_id) <= 4),
-        |cand AS (
-        |  SELECT pl.probe_id, a.neighbor_id,
-        |    list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(n.embedding AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(p.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(n.embedding AS DOUBLE[]), CAST(n.embedding AS DOUBLE[]))))
-        |      AS cosine
-        |  FROM plists pl
-        |  JOIN assign a ON a.list_id = pl.list_id AND a.neighbor_id != pl.probe_id
-        |  JOIN embeddings p ON p.vec_id = pl.probe_id
-        |  JOIN embeddings n ON n.vec_id = a.neighbor_id),
-        |dense AS (
-        |  SELECT probe_id, neighbor_id AS doc_id,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY probe_id
-        |      ORDER BY cosine DESC, neighbor_id) AS INT) AS rank_vec
-        |  FROM cand QUALIFY rank_vec <= 20),
-        |tok AS (
-        |  SELECT DISTINCT doc_id,
-        |    unnest(string_split_regex(text, '\s+')) AS token
-        |  FROM documents),
-        |ov AS (
-        |  SELECT pt.doc_id AS probe_id, ct.doc_id AS doc_id,
-        |    COUNT(*) AS kw_overlap
-        |  FROM tok pt JOIN tok ct
-        |    ON pt.token = ct.token AND ct.doc_id != pt.doc_id
-        |  WHERE pt.doc_id < 3 GROUP BY 1, 2),
-        |sparse AS (
-        |  SELECT probe_id, doc_id,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY probe_id
-        |      ORDER BY kw_overlap DESC, doc_id) AS INT) AS rank_kw
-        |  FROM ov QUALIFY rank_kw <= 20),
+      s"""WITH ${OracleGen.ivfProbeCtes("vec_id < 3")},
+        |${OracleGen.hybridRankCtes},
         |f AS (
         |  SELECT COALESCE(d.probe_id, sp.probe_id) AS probe_id,
         |    COALESCE(d.doc_id, sp.doc_id) AS doc_id,
@@ -3583,53 +3359,8 @@ object SparkEntry {
     // q169's retrieval replayed to a top-20 pool, then the rerank stage:
     // pair-joint cosine + token-Jaccard blend, ranked per probe.
     "q222_rerank" ->
-      """WITH centroids AS (
-        |  SELECT vec_id AS c_id, embedding AS c_emb
-        |  FROM embeddings ORDER BY vec_id LIMIT 16),
-        |ccos AS (
-        |  SELECT e.vec_id, c.c_id,
-        |    list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(c.c_emb AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))))
-        |      AS ccos
-        |  FROM embeddings e CROSS JOIN centroids c),
-        |assign AS (
-        |  SELECT vec_id AS neighbor_id, c_id AS list_id FROM ccos
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, c_id) = 1),
-        |plists AS (
-        |  SELECT vec_id AS probe_id, c_id AS list_id FROM ccos
-        |  WHERE vec_id < 3
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, c_id) <= 4),
-        |cand AS (
-        |  SELECT pl.probe_id, a.neighbor_id,
-        |    list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(n.embedding AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(p.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(n.embedding AS DOUBLE[]), CAST(n.embedding AS DOUBLE[]))))
-        |      AS cosine
-        |  FROM plists pl
-        |  JOIN assign a ON a.list_id = pl.list_id AND a.neighbor_id != pl.probe_id
-        |  JOIN embeddings p ON p.vec_id = pl.probe_id
-        |  JOIN embeddings n ON n.vec_id = a.neighbor_id),
-        |dense AS (
-        |  SELECT probe_id, neighbor_id AS doc_id,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY probe_id
-        |      ORDER BY cosine DESC, neighbor_id) AS INT) AS rank_vec
-        |  FROM cand QUALIFY rank_vec <= 20),
-        |tok AS (
-        |  SELECT DISTINCT doc_id,
-        |    unnest(string_split_regex(text, '\s+')) AS token
-        |  FROM documents),
-        |ov AS (
-        |  SELECT pt.doc_id AS probe_id, ct.doc_id AS doc_id,
-        |    COUNT(*) AS kw_overlap
-        |  FROM tok pt JOIN tok ct
-        |    ON pt.token = ct.token AND ct.doc_id != pt.doc_id
-        |  WHERE pt.doc_id < 3 GROUP BY 1, 2),
-        |sparse AS (
-        |  SELECT probe_id, doc_id,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY probe_id
-        |      ORDER BY kw_overlap DESC, doc_id) AS INT) AS rank_kw
-        |  FROM ov QUALIFY rank_kw <= 20),
+      s"""WITH ${OracleGen.ivfProbeCtes("vec_id < 3")},
+        |${OracleGen.hybridRankCtes},
         |f AS (
         |  SELECT COALESCE(d.probe_id, sp.probe_id) AS probe_id,
         |    COALESCE(d.doc_id, sp.doc_id) AS doc_id,
@@ -3656,9 +3387,7 @@ object SparkEntry {
         |scored AS (
         |  SELECT c.probe_id, c.doc_id, c.rank_first,
         |    COALESCE(pi.n_inter, 0) AS n_inter,
-        |    list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(n.embedding AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(p.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(n.embedding AS DOUBLE[]), CAST(n.embedding AS DOUBLE[]))))
+        |    ${OracleGen.cosine("p.embedding", "n.embedding")}
         |      AS cosine,
         |    CAST(COALESCE(pi.n_inter, 0) AS DOUBLE)
         |      / CAST(sp.n_tok + sd.n_tok - COALESCE(pi.n_inter, 0) AS DOUBLE)
@@ -3679,49 +3408,27 @@ object SparkEntry {
         |    ORDER BY score DESC, doc_id) AS INT) AS rank
         |FROM blended QUALIFY rank <= 10""".stripMargin,
     "q170_ppl_transfer" ->
-      """WITH toks AS (
-        |  SELECT doc_id, source, string_split_regex(text, '\s+') AS t
-        |  FROM documents),
+      s"""WITH toks AS (
+        |  ${OracleGen.wordTokens(cols = "doc_id, source")}),
         |tbg AS (
-        |  SELECT t[i] AS w1, t[i+1] AS w2
-        |  FROM (SELECT t, unnest(range(1, len(t))) AS i
-        |        FROM toks WHERE source = 'src0' AND len(t) >= 2)),
-        |c AS (SELECT w1, w2, COUNT(*) AS c12 FROM tbg GROUP BY 1, 2),
-        |u AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1 FROM c GROUP BY 1),
+        |  ${OracleGen.bigrams("source = 'src0'", docIds = false)}),
+        |${OracleGen.bigramCounts("tbg")},
         |bg AS (
-        |  SELECT doc_id, t[i] AS w1, t[i+1] AS w2
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t))) AS i
-        |        FROM toks WHERE source <> 'src0' AND len(t) >= 2))
-        |SELECT b.doc_id, COUNT(*) AS n_bigrams, COUNT(c.c12) AS n_known,
-        |  CAST(SUM(COALESCE(c.c12, 0)) AS BIGINT) AS sum_c12,
-        |  CAST(SUM(COALESCE(u.c1, 0)) AS BIGINT) AS sum_c1
-        |FROM bg b
-        |LEFT JOIN c ON b.w1 = c.w1 AND b.w2 = c.w2
-        |LEFT JOIN u ON b.w1 = u.w1
-        |GROUP BY b.doc_id""".stripMargin,
+        |  ${OracleGen.bigrams("source <> 'src0'")})
+        |${OracleGen.bigramStats}""".stripMargin,
     // both LMs' integer sufficient stats from one pool scan — the q170
     // algebra with a second (reference) model joined on
     "q204_dsir_stats" ->
-      """WITH toks AS (
-        |  SELECT doc_id, source, string_split_regex(text, '\s+') AS t
-        |  FROM documents),
+      s"""WITH toks AS (
+        |  ${OracleGen.wordTokens(cols = "doc_id, source")}),
         |tbg AS (
-        |  SELECT t[i] AS w1, t[i+1] AS w2
-        |  FROM (SELECT t, unnest(range(1, len(t))) AS i
-        |        FROM toks WHERE source = 'src0' AND len(t) >= 2)),
-        |ct AS (SELECT w1, w2, COUNT(*) AS c12 FROM tbg GROUP BY 1, 2),
-        |ut AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1 FROM ct GROUP BY 1),
+        |  ${OracleGen.bigrams("source = 'src0'", docIds = false)}),
+        |${OracleGen.bigramCounts("tbg", "ct", "ut")},
         |rbg AS (
-        |  SELECT t[i] AS w1, t[i+1] AS w2
-        |  FROM (SELECT t, unnest(range(1, len(t))) AS i
-        |        FROM toks WHERE source = 'src1' AND len(t) >= 2)),
-        |cr AS (SELECT w1, w2, COUNT(*) AS c12 FROM rbg GROUP BY 1, 2),
-        |ur AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1 FROM cr GROUP BY 1),
+        |  ${OracleGen.bigrams("source = 'src1'", docIds = false)}),
+        |${OracleGen.bigramCounts("rbg", "cr", "ur")},
         |bg AS (
-        |  SELECT doc_id, t[i] AS w1, t[i+1] AS w2
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t))) AS i
-        |        FROM toks
-        |        WHERE source NOT IN ('src0', 'src1') AND len(t) >= 2))
+        |  ${OracleGen.bigrams("source NOT IN ('src0', 'src1')")})
         |SELECT b.doc_id, COUNT(*) AS n_bigrams,
         |  COUNT(ct.c12) AS n_known_t,
         |  CAST(SUM(COALESCE(ct.c12, 0)) AS BIGINT) AS sum_c12_t,
@@ -3741,30 +3448,20 @@ object SparkEntry {
     // ln(u)·exp(−log_w) with the q157 salted-md5 coin. Output columns
     // are the exact-typed selection only.
     "q208_dsir_sample" ->
-      """WITH toks AS (
-        |  SELECT doc_id, source, string_split_regex(text, '\s+') AS t
-        |  FROM documents),
+      s"""WITH toks AS (
+        |  ${OracleGen.wordTokens(cols = "doc_id, source")}),
         |tbg AS (
-        |  SELECT t[i] AS w1, t[i+1] AS w2
-        |  FROM (SELECT t, unnest(range(1, len(t))) AS i
-        |        FROM toks WHERE source = 'src0' AND len(t) >= 2)),
-        |ct AS (SELECT w1, w2, COUNT(*) AS c12 FROM tbg GROUP BY 1, 2),
-        |ut AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1 FROM ct GROUP BY 1),
+        |  ${OracleGen.bigrams("source = 'src0'", docIds = false)}),
+        |${OracleGen.bigramCounts("tbg", "ct", "ut")},
         |rbg AS (
-        |  SELECT t[i] AS w1, t[i+1] AS w2
-        |  FROM (SELECT t, unnest(range(1, len(t))) AS i
-        |        FROM toks WHERE source = 'src1' AND len(t) >= 2)),
-        |cr AS (SELECT w1, w2, COUNT(*) AS c12 FROM rbg GROUP BY 1, 2),
-        |ur AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1 FROM cr GROUP BY 1),
+        |  ${OracleGen.bigrams("source = 'src1'", docIds = false)}),
+        |${OracleGen.bigramCounts("rbg", "cr", "ur")},
         |v AS (
         |  SELECT COUNT(DISTINCT tok) AS v FROM (
         |    SELECT unnest(t) AS tok FROM toks
         |    WHERE source NOT IN ('src0', 'src1'))),
         |bg AS (
-        |  SELECT doc_id, t[i] AS w1, t[i+1] AS w2
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t))) AS i
-        |        FROM toks
-        |        WHERE source NOT IN ('src0', 'src1') AND len(t) >= 2)),
+        |  ${OracleGen.bigrams("source NOT IN ('src0', 'src1')")}),
         |stats AS (
         |  SELECT b.doc_id, COUNT(*) AS n_bigrams,
         |    SUM(ln(CAST(COALESCE(ct.c12, 0) + 1 AS DOUBLE)
@@ -3795,9 +3492,9 @@ object SparkEntry {
         |    '[0-9]+', '<NUM>', 'g') AS props_redacted
         |FROM events""".stripMargin,
     "q97_source_overlap" ->
-      """WITH tok AS (
+      s"""WITH tok AS (
         |  SELECT source AS stratum,
-        |    unnest(string_split_regex(text, '\s+')) AS token
+        |    unnest(${OracleGen.words}) AS token
         |  FROM documents
         |  WHERE source IN ('src0', 'src1', 'src2', 'src3', 'src4')),
         |st AS (SELECT DISTINCT stratum, token FROM tok),
@@ -4145,7 +3842,7 @@ object SparkEntry {
     // of the bit algebra to drift
     "q31_simhash_near_dups" ->
       s"""WITH toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(text, '\\s+')) AS t
+        |  SELECT doc_id, unnest(${OracleGen.words}) AS t
         |  FROM documents),
         |th AS (SELECT doc_id,
         |         CAST('0x' || substr(md5(t), 1, 15) AS BIGINT) AS h
@@ -4229,13 +3926,7 @@ object SparkEntry {
         "a.doc_id % 10 <> 0 AND b.doc_id % 10 = 0")}
         |SELECT doc_a, doc_b, jaccard FROM pairs""".stripMargin,
     "q85_boilerplate_ngrams" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        |        FROM toks WHERE len(t) >= 3))
+      s"""WITH ${OracleGen.shingleCtes()}
         |SELECT shingle, COUNT(*) AS df
         |FROM sh GROUP BY shingle HAVING COUNT(*) >= 2""".stripMargin,
     // the production 8-byte hotlist re-derived in SQL: per-token poly
@@ -4247,23 +3938,16 @@ object SparkEntry {
       val h = OracleGen.wordNgramPolySql(j => s"t[i+${j - 1}]", 3)
         .replace("\n", "\n    ")
       s"""WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\\s+') AS t FROM documents),
+        |  ${OracleGen.wordTokens()}),
         |wh AS (
         |  SELECT DISTINCT doc_id,
         |    $h AS hot_hash
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        |        FROM toks WHERE len(t) >= 3))
+        |  FROM ${OracleGen.gramStarts(3, "toks")})
         |SELECT hot_hash, COUNT(*) AS df
         |FROM wh GROUP BY hot_hash HAVING COUNT(*) >= 2""".stripMargin
     },
     "q86_boilerplate_fraction" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        |        FROM toks WHERE len(t) >= 3)),
+      s"""WITH ${OracleGen.shingleCtes()},
         |hot AS (
         |  SELECT shingle FROM sh GROUP BY shingle HAVING COUNT(*) >= 2),
         |sizes AS (
@@ -4289,12 +3973,11 @@ object SparkEntry {
       def pos(hc: String) =
         s"(($hc % $m) + r.i * ((($hc // $m) % $m) | 1)) % $m"
       s"""WITH toks AS (
-         |  SELECT doc_id, string_split_regex(text, '\\s+') AS t FROM documents),
+         |  ${OracleGen.wordTokens()}),
          |wh AS (
          |  SELECT DISTINCT doc_id,
          |    $h AS h
-         |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-         |        FROM toks WHERE len(t) >= 3)),
+         |  FROM ${OracleGen.gramStarts(3, "toks")}),
          |tpos AS (
          |  SELECT DISTINCT ${pos("th.h")} AS p
          |  FROM (SELECT DISTINCT h FROM wh WHERE doc_id % 10 <> 0) th
@@ -4319,40 +4002,15 @@ object SparkEntry {
     // positions are 1-based n-gram starts; spans merge while the gap
     // between consecutive hot positions is <= n (interval union)
     "q102_repeated_spans" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents),
-        |sh AS (
-        |  SELECT doc_id, i AS pos,
-        |    t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        |        FROM toks WHERE len(t) >= 3)),
+      s"""WITH ${OracleGen.shingleCtes(pos = true)},
         |hot AS (
         |  SELECT shingle FROM sh GROUP BY shingle
         |  HAVING COUNT(DISTINCT doc_id) >= 2),
         |hits AS (
         |  SELECT s.doc_id, s.pos FROM sh s JOIN hot h ON s.shingle = h.shingle),
-        |flagged AS (
-        |  SELECT doc_id, pos,
-        |    CASE WHEN pos > LAG(pos) OVER
-        |        (PARTITION BY doc_id ORDER BY pos) + 3 THEN 1 ELSE 0 END
-        |      AS newspan
-        |  FROM hits),
-        |sp AS (
-        |  SELECT doc_id, pos,
-        |    SUM(newspan) OVER (PARTITION BY doc_id ORDER BY pos) AS span
-        |  FROM flagged)
-        |SELECT doc_id, MIN(pos) AS start_pos, MAX(pos) + 2 AS end_pos,
-        |  MAX(pos) + 2 - MIN(pos) + 1 AS n_span_tokens
-        |FROM sp GROUP BY doc_id, span
-        |HAVING MAX(pos) + 2 - MIN(pos) + 1 >= 6""".stripMargin,
+        |${OracleGen.spanMerge}""".stripMargin,
     "q103_scrub_spans" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents),
-        |sh AS (
-        |  SELECT doc_id, i AS pos,
-        |    t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        |        FROM toks WHERE len(t) >= 3)),
+      s"""WITH ${OracleGen.shingleCtes(pos = true)},
         |hot AS (
         |  SELECT shingle FROM sh GROUP BY shingle
         |  HAVING COUNT(DISTINCT doc_id) >= 2),
@@ -4377,74 +4035,44 @@ object SparkEntry {
     // the hotlist state is built from the non-delta 90% (doc_id%10<>0),
     // probed by the doc_id%10=0 delta — the q83 split
     "q104_boilerplate_incremental" ->
-      """WITH ttoks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t
-        |  FROM documents WHERE doc_id % 10 <> 0),
+      s"""WITH ttoks AS (
+        |  ${OracleGen.wordTokens("doc_id % 10 <> 0")}),
         |tsh AS (
-        |  SELECT DISTINCT doc_id,
-        |    t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        |        FROM ttoks WHERE len(t) >= 3)),
+        |  ${OracleGen.trigramShingles("ttoks", distinct = true)}),
         |hot AS (
         |  SELECT shingle FROM tsh GROUP BY shingle HAVING COUNT(*) >= 2),
         |dtoks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t
-        |  FROM documents WHERE doc_id % 10 = 0),
+        |  ${OracleGen.wordTokens("doc_id % 10 = 0")}),
         |dsh AS (
-        |  SELECT DISTINCT doc_id,
-        |    t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        |        FROM dtoks WHERE len(t) >= 3))
+        |  ${OracleGen.trigramShingles("dtoks", distinct = true)})
         |SELECT d.doc_id, COUNT(*) AS n_shingles,
         |  COUNT(h.shingle) AS n_boiler,
         |  CAST(COUNT(h.shingle) AS DOUBLE) / COUNT(*) AS boilerplate_frac
         |FROM dsh d LEFT JOIN hot h ON d.shingle = h.shingle
         |GROUP BY d.doc_id""".stripMargin,
     "q105_spans_incremental" ->
-      """WITH ttoks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t
-        |  FROM documents WHERE doc_id % 10 <> 0),
+      s"""WITH ttoks AS (
+        |  ${OracleGen.wordTokens("doc_id % 10 <> 0")}),
         |tsh AS (
-        |  SELECT DISTINCT doc_id,
-        |    t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        |        FROM ttoks WHERE len(t) >= 3)),
+        |  ${OracleGen.trigramShingles("ttoks", distinct = true)}),
         |hot AS (
         |  SELECT shingle FROM tsh GROUP BY shingle HAVING COUNT(*) >= 2),
         |dtoks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t
-        |  FROM documents WHERE doc_id % 10 = 0),
+        |  ${OracleGen.wordTokens("doc_id % 10 = 0")}),
         |dsh AS (
-        |  SELECT doc_id, i AS pos,
-        |    t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        |        FROM dtoks WHERE len(t) >= 3)),
+        |  ${OracleGen.trigramShingles("dtoks", pos = true)}),
         |hits AS (
         |  SELECT s.doc_id, s.pos FROM dsh s JOIN hot h ON s.shingle = h.shingle),
-        |flagged AS (
-        |  SELECT doc_id, pos,
-        |    CASE WHEN pos > LAG(pos) OVER
-        |        (PARTITION BY doc_id ORDER BY pos) + 3 THEN 1 ELSE 0 END
-        |      AS newspan
-        |  FROM hits),
-        |sp AS (
-        |  SELECT doc_id, pos,
-        |    SUM(newspan) OVER (PARTITION BY doc_id ORDER BY pos) AS span
-        |  FROM flagged)
-        |SELECT doc_id, MIN(pos) AS start_pos, MAX(pos) + 2 AS end_pos,
-        |  MAX(pos) + 2 - MIN(pos) + 1 AS n_span_tokens
-        |FROM sp GROUP BY doc_id, span
-        |HAVING MAX(pos) + 2 - MIN(pos) + 1 >= 6""".stripMargin,
+        |${OracleGen.spanMerge}""".stripMargin,
     "q108_quality_filter" ->
-      """WITH scored AS (
+      s"""WITH scored AS (
         |  SELECT doc_id, source,
         |    (CAST(len(list_distinct(t)) AS DOUBLE) / len(t)) * 2.0
         |      + (CAST(len(list_filter(t, x -> list_contains(['the', 'a'], x)))
         |          AS DOUBLE) / len(t))
         |      - (CAST(length(regexp_replace(text, '[^.!?,;:]', '', 'g'))
         |          AS DOUBLE) / length(text)) AS quality
-        |  FROM (SELECT doc_id, source, text,
-        |          string_split_regex(text, '\s+') AS t FROM documents)),
+        |  FROM (${OracleGen.wordTokens(cols = "doc_id, source, text")})),
         |ranked AS (
         |  SELECT doc_id, source, quality,
         |    PERCENT_RANK() OVER
@@ -4530,20 +4158,10 @@ object SparkEntry {
         |GROUP BY l_orderkey, o_totalprice""".stripMargin,
     // identical semantics to q92 — the manifest path is a pure read-side
     // optimization, so the same oracle must hold
-    "q94_manifest_slice" ->
-      """SELECT event_id, ts, user_id, event_type, value, props
-        |FROM events
-        |WHERE user_id BETWEEN 10 AND 19
-        |  AND ts BETWEEN TIMESTAMP '2024-01-10 00:00:00'
-        |             AND TIMESTAMP '2024-01-15 00:00:00'""".stripMargin,
+    "q94_manifest_slice" -> eventSliceSql,
     // the z-ordered copy holds exactly the original rows, so the slice
     // oracle runs on the plain table
-    "q92_zorder_slice" ->
-      """SELECT event_id, ts, user_id, event_type, value, props
-        |FROM events
-        |WHERE user_id BETWEEN 10 AND 19
-        |  AND ts BETWEEN TIMESTAMP '2024-01-10 00:00:00'
-        |             AND TIMESTAMP '2024-01-15 00:00:00'""".stripMargin,
+    "q92_zorder_slice" -> eventSliceSql,
     // q73's recursive component walk over embedding-cosine pairs: the
     // pair predicate is q39's (hash-exact there), the walk is q73's.
     "q89_semantic_clusters" -> semanticClustersSql,
@@ -4555,20 +4173,9 @@ object SparkEntry {
     // centroids, top-2 multi-assignment, in-list pairs, exact-cosine
     // verify at 0.3; recall counted per integer-basis-point threshold
     "q212_ivf_pair_recall" ->
-      """WITH centroids AS (
-        |  SELECT vec_id AS c_id, embedding AS c_emb
-        |  FROM embeddings ORDER BY vec_id LIMIT 16),
-        |ccos AS (
-        |  SELECT e.vec_id, c.c_id,
-        |    list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(c.c_emb AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))))
-        |      AS ccos
-        |  FROM embeddings e CROSS JOIN centroids c),
+      s"""WITH ${OracleGen.ivfCtes()},
         |lists AS (
-        |  SELECT vec_id, c_id AS list_id FROM ccos
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id
-        |    ORDER BY ccos DESC, c_id) <= 2),
+        |  ${OracleGen.ivfTop("vec_id", k = 2)}),
         |cand AS (
         |  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
         |  FROM lists a JOIN lists b
@@ -4577,15 +4184,11 @@ object SparkEntry {
         |  SELECT cd.vec_a, cd.vec_b FROM cand cd
         |  JOIN embeddings ea ON ea.vec_id = cd.vec_a
         |  JOIN embeddings eb ON eb.vec_id = cd.vec_b
-        |  WHERE list_dot_product(CAST(ea.embedding AS DOUBLE[]), CAST(eb.embedding AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(ea.embedding AS DOUBLE[]), CAST(ea.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(eb.embedding AS DOUBLE[]), CAST(eb.embedding AS DOUBLE[]))))
+        |  WHERE ${OracleGen.cosine("ea.embedding", "eb.embedding")}
         |      >= 0.3),
         |ex AS (
         |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-        |    list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))))
+        |    ${OracleGen.cosine("a.embedding", "b.embedding")}
         |      AS cosine
         |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id),
         |taus AS (SELECT unnest([3000, 4000, 5000, 7000]) AS tau_bp)
@@ -4622,47 +4225,28 @@ object SparkEntry {
         |GROUP BY event_type""".stripMargin,
     // q65's assignment CTEs split delta/corpus: corpus (vec_id >= 50)
     // assigns top-1, the delta probes its top-4 lists, exact cosine
-    // verifies. Same list_dot_product kernel, so doubles are bit-exact.
+    // verifies. Same OracleGen.cosine kernel, so doubles are bit-exact.
     "q93_semantic_dedup_delta" ->
-      """WITH centroids AS (
-        |  SELECT vec_id AS c_id, embedding AS c_emb
-        |  FROM embeddings WHERE vec_id >= 50 ORDER BY vec_id LIMIT 16),
-        |ccos AS (
-        |  SELECT e.vec_id, c.c_id,
-        |    list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(c.c_emb AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))))
-        |      AS ccos
-        |  FROM embeddings e CROSS JOIN centroids c),
+      s"""WITH ${OracleGen.ivfCtes("vec_id >= 50")},
         |assign AS (
-        |  SELECT vec_id AS corpus_id, c_id AS list_id FROM ccos
-        |  WHERE vec_id >= 50
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, c_id) = 1),
+        |  ${OracleGen.ivfTop("vec_id AS corpus_id", "vec_id >= 50")}),
         |plists AS (
-        |  SELECT vec_id AS delta_id, c_id AS list_id FROM ccos
-        |  WHERE vec_id < 50
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, c_id) <= 4)
+        |  ${OracleGen.ivfTop("vec_id AS delta_id", "vec_id < 50", k = 4)})
         |SELECT a.corpus_id, pl.delta_id,
-        |  list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(d.embedding AS DOUBLE[]))
-        |    / (sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))
-        |       * sqrt(list_dot_product(CAST(d.embedding AS DOUBLE[]), CAST(d.embedding AS DOUBLE[]))))
+        |  ${OracleGen.cosine("c.embedding", "d.embedding")}
         |    AS cosine
         |FROM plists pl
         |JOIN assign a ON a.list_id = pl.list_id
         |JOIN embeddings c ON c.vec_id = a.corpus_id
         |JOIN embeddings d ON d.vec_id = pl.delta_id
-        |WHERE list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(d.embedding AS DOUBLE[]))
-        |    / (sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))
-        |       * sqrt(list_dot_product(CAST(d.embedding AS DOUBLE[]), CAST(d.embedding AS DOUBLE[]))))
+        |WHERE ${OracleGen.cosine("c.embedding", "d.embedding")}
         |    >= 0.3""".stripMargin,
     "q90_semantic_dedup" ->
-      """WITH RECURSIVE pairs AS (
+      s"""WITH RECURSIVE pairs AS (
         |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
         |  FROM embeddings a JOIN embeddings b
         |    ON a.label = b.label AND a.vec_id < b.vec_id
-        |  WHERE list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-        |    / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-        |       * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))))
+        |  WHERE ${OracleGen.cosine("a.embedding", "b.embedding")}
         |    >= 0.3),
         |edges AS (
         |  SELECT vec_a AS src, vec_b AS dst FROM pairs
@@ -4680,17 +4264,17 @@ object SparkEntry {
         |LEFT JOIN losers l ON l.vec_id = e.vec_id
         |WHERE l.vec_id IS NULL""".stripMargin,
     "q32_lang_id" ->
-      """WITH scored AS (
+      s"""WITH scored AS (
         |  SELECT doc_id, lang AS actual_lang,
-        |    CAST(len(list_intersect(list_distinct(string_split_regex(text, '\s+')),
+        |    CAST(len(list_intersect(list_distinct(${OracleGen.words}),
         |      ['the', 'a', 'row'])) AS INT) AS en_score,
-        |    CAST(len(list_intersect(list_distinct(string_split_regex(text, '\s+')),
+        |    CAST(len(list_intersect(list_distinct(${OracleGen.words}),
         |      ['data', 'query'])) AS INT) AS es_score,
-        |    CAST(len(list_intersect(list_distinct(string_split_regex(text, '\s+')),
+        |    CAST(len(list_intersect(list_distinct(${OracleGen.words}),
         |      ['merge', 'batch'])) AS INT) AS de_score,
-        |    CAST(len(list_intersect(list_distinct(string_split_regex(text, '\s+')),
+        |    CAST(len(list_intersect(list_distinct(${OracleGen.words}),
         |      ['stream', 'filter'])) AS INT) AS fr_score,
-        |    CAST(len(list_intersect(list_distinct(string_split_regex(text, '\s+')),
+        |    CAST(len(list_intersect(list_distinct(${OracleGen.words}),
         |      ['window', 'join'])) AS INT) AS zh_score
         |  FROM documents)
         |SELECT doc_id, actual_lang, en_score, es_score, de_score, fr_score, zh_score,
@@ -4704,8 +4288,8 @@ object SparkEntry {
         |    ELSE 'zh' END AS pred_lang
         |FROM scored""".stripMargin,
     "q33_quality" ->
-      """WITH base AS (
-        |  SELECT doc_id, text, string_split_regex(text, '\s+') AS t FROM documents)
+      s"""WITH base AS (
+        |  ${OracleGen.wordTokens(cols = "doc_id, text")})
         |SELECT doc_id,
         |  CAST(len(t) AS INT) AS n_tokens,
         |  CAST(len(list_distinct(t)) AS INT) AS n_distinct_tokens,
@@ -4717,8 +4301,8 @@ object SparkEntry {
         |    - (CAST(length(regexp_replace(text, '[^.!?,;:]', '', 'g')) AS DOUBLE) / length(text)) AS quality
         |FROM base""".stripMargin,
     "q124_learned_quality" ->
-      """WITH f AS (
-        |  SELECT doc_id, source, text, string_split_regex(text, '\s+') AS t,
+      s"""WITH f AS (
+        |  SELECT doc_id, source, text, ${OracleGen.words} AS t,
         |    CAST(length(text) AS DOUBLE) AS nc
         |  FROM documents),
         |s AS (
@@ -4771,11 +4355,11 @@ object SparkEntry {
          |FROM per WHERE total_hits * 100 > 11 * n_chars""".stripMargin
     },
     "q34_token_counts" ->
-      """SELECT doc_id,
-        |  CAST(len(string_split_regex(text, '\s+')) AS INT) AS n_ws_tokens,
-        |  CAST(len(list_distinct(string_split_regex(text, '\s+'))) AS INT) AS n_distinct_tokens,
+      s"""SELECT doc_id,
+        |  CAST(len(${OracleGen.words}) AS INT) AS n_ws_tokens,
+        |  CAST(len(list_distinct(${OracleGen.words})) AS INT) AS n_distinct_tokens,
         |  CAST(length(text) AS INT) AS n_chars_measured,
-        |  CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS INT) AS n_bpe_tokens
+        |  CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS INT) AS n_bpe_tokens
         |FROM documents""".stripMargin,
     "q35_fingerprint_prefix" ->
       """SELECT doc_id, md5(substr(text, 1, 80)) AS prefix_fp,
@@ -4791,46 +4375,17 @@ object SparkEntry {
         |  ${OracleGen.kgramPolyMin("text", 8)} AS kgram_fp
         |FROM documents""".stripMargin,
     "q72_curate" ->
-      """WITH base AS (
-        |  SELECT doc_id, text, string_split_regex(text, '\s+') AS t FROM documents),
-        |lang AS (
-        |  SELECT doc_id,
-        |    CASE WHEN en >= es AND en >= de AND en >= fr AND en >= zh THEN 'en'
-        |         WHEN es >= de AND es >= fr AND es >= zh THEN 'es'
-        |         WHEN de >= fr AND de >= zh THEN 'de'
-        |         WHEN fr >= zh THEN 'fr'
-        |         ELSE 'zh' END AS pred_lang
-        |  FROM (SELECT doc_id,
-        |    len(list_intersect(list_distinct(t), ['the', 'a', 'row'])) AS en,
-        |    len(list_intersect(list_distinct(t), ['data', 'query'])) AS es,
-        |    len(list_intersect(list_distinct(t), ['merge', 'batch'])) AS de,
-        |    len(list_intersect(list_distinct(t), ['stream', 'filter'])) AS fr,
-        |    len(list_intersect(list_distinct(t), ['window', 'join'])) AS zh
-        |  FROM base)),
-        |qual AS (
-        |  SELECT doc_id,
-        |    (CAST(len(list_distinct(t)) AS DOUBLE) / len(t)) * 2.0
-        |      + (CAST(len(list_filter(t, x -> list_contains(['the', 'a'], x))) AS DOUBLE) / len(t))
-        |      - (CAST(length(regexp_replace(text, '[^.!?,;:]', '', 'g')) AS DOUBLE) / length(text))
-        |      AS quality
-        |  FROM base),
-        |tot AS (SELECT doc_id, CAST(len(t) - 2 AS BIGINT) AS n_tot
-        |        FROM base WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        |       FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        |             FROM base WHERE len(t) >= 3)),
-        |rep AS (
-        |  SELECT tot.doc_id, 1.0 - CAST(d.n AS DOUBLE) / tot.n_tot AS repetition
-        |  FROM tot JOIN (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id) d
-        |    ON d.doc_id = tot.doc_id)
+      s"""WITH base AS (
+        |  ${OracleGen.wordTokens(cols = "doc_id, text")}),
+        |${OracleGen.curateCtes}
         |SELECT l.doc_id, l.pred_lang, q.quality, r.repetition
         |FROM lang l
         |JOIN qual q ON q.doc_id = l.doc_id
         |JOIN rep r ON r.doc_id = l.doc_id
         |WHERE l.pred_lang = 'en' AND q.quality >= 1.0 AND r.repetition <= 0.2""".stripMargin,
     "q112_bpe_merge" ->
-      """WITH arr AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents),
+      s"""WITH arr AS (
+        |  ${OracleGen.wordTokens()}),
         |occ AS (
         |  SELECT doc_id, COUNT(*) AS n_occ
         |  FROM (SELECT doc_id, t, unnest(range(1, len(t))) AS i FROM arr)
@@ -4841,8 +4396,8 @@ object SparkEntry {
         |FROM arr LEFT JOIN occ o ON o.doc_id = arr.doc_id""".stripMargin,
     "q121_bpe_encode" -> bpeEncodeOracle,
     "q111_token_mixture" ->
-      """WITH c AS (
-        |  SELECT source, SUM(len(string_split_regex(text, '\s+'))) AS n
+      s"""WITH c AS (
+        |  SELECT source, SUM(len(${OracleGen.words})) AS n
         |  FROM documents GROUP BY source),
         |t AS (
         |  SELECT source, printf('%05x', CAST(FLOOR(65536 * LEAST(
@@ -4960,16 +4515,16 @@ object SparkEntry {
         |SELECT event_type, user_id, n_events, rnk FROM r
         |WHERE rnk <= 10""".stripMargin,
     "q110_bpe_pairs" ->
-      """WITH pairs AS (
+      s"""WITH pairs AS (
         |  SELECT t[i] AS a, t[i + 1] AS b
         |  FROM (SELECT t, unnest(range(1, len(t))) AS i
-        |        FROM (SELECT string_split_regex(text, '\s+') AS t
+        |        FROM (SELECT ${OracleGen.words} AS t
         |              FROM documents)))
         |SELECT a, b, COUNT(*) AS n_pairs
         |FROM pairs GROUP BY a, b HAVING COUNT(*) >= 2""".stripMargin,
     "q70_vocab" ->
-      """WITH tok AS (
-        |  SELECT unnest(string_split_regex(text, '\s+')) AS token FROM documents),
+      s"""WITH tok AS (
+        |  SELECT unnest(${OracleGen.words}) AS token FROM documents),
         |cnt AS (SELECT token, COUNT(*) AS n_occurrences FROM tok GROUP BY token)
         |SELECT token, n_occurrences,
         |  CAST(ROW_NUMBER() OVER (ORDER BY n_occurrences DESC, token) AS INT)
@@ -4977,63 +4532,24 @@ object SparkEntry {
         |FROM cnt
         |QUALIFY token_id <= 256""".stripMargin,
     "q69_repetition" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents),
+      s"""WITH toks AS (
+        |  ${OracleGen.wordTokens()}),
         |tot AS (
         |  SELECT doc_id, CAST(len(t) - 2 AS BIGINT) AS n_shingles_total
         |  FROM toks WHERE len(t) >= 3),
         |sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        |        FROM toks WHERE len(t) >= 3)),
+        |  ${OracleGen.trigramShingles("toks", distinct = true)}),
         |d AS (SELECT doc_id, COUNT(*) AS n_distinct_shingles FROM sh GROUP BY doc_id)
         |SELECT tot.doc_id, tot.n_shingles_total, d.n_distinct_shingles,
         |  1.0 - CAST(d.n_distinct_shingles AS DOUBLE) / tot.n_shingles_total
         |    AS repetition
         |FROM tot JOIN d ON d.doc_id = tot.doc_id""".stripMargin,
-    "q68_decontaminate" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        |        FROM toks WHERE len(t) >= 3)),
-        |evsh AS (SELECT * FROM sh WHERE doc_id % 10 = 0),
-        |trsh AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 10 != 0),
-        |sizes AS (SELECT doc_id, COUNT(*) AS n_shingles FROM evsh GROUP BY doc_id),
-        |hits AS (
-        |  SELECT doc_id, COUNT(*) AS n_contaminated
-        |  FROM evsh WHERE shingle IN (SELECT shingle FROM trsh)
-        |  GROUP BY doc_id)
-        |SELECT s.doc_id, s.n_shingles,
-        |  COALESCE(h.n_contaminated, 0) AS n_contaminated,
-        |  CAST(COALESCE(h.n_contaminated, 0) AS DOUBLE) / s.n_shingles AS contamination
-        |FROM sizes s LEFT JOIN hits h ON h.doc_id = s.doc_id""".stripMargin,
+    "q68_decontaminate" -> decontaminateSql,
     // q79 is the broadcast-plan twin of q68: same rows, same SQL truth.
-    "q79_decontaminate_broadcast" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        |        FROM toks WHERE len(t) >= 3)),
-        |evsh AS (SELECT * FROM sh WHERE doc_id % 10 = 0),
-        |trsh AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 10 != 0),
-        |sizes AS (SELECT doc_id, COUNT(*) AS n_shingles FROM evsh GROUP BY doc_id),
-        |hits AS (
-        |  SELECT doc_id, COUNT(*) AS n_contaminated
-        |  FROM evsh WHERE shingle IN (SELECT shingle FROM trsh)
-        |  GROUP BY doc_id)
-        |SELECT s.doc_id, s.n_shingles,
-        |  COALESCE(h.n_contaminated, 0) AS n_contaminated,
-        |  CAST(COALESCE(h.n_contaminated, 0) AS DOUBLE) / s.n_shingles AS contamination
-        |FROM sizes s LEFT JOIN hits h ON h.doc_id = s.doc_id""".stripMargin,
+    "q79_decontaminate_broadcast" -> decontaminateSql,
     "q78_chunk" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents),
+      s"""WITH toks AS (
+        |  ${OracleGen.wordTokens()}),
         |st AS (
         |  SELECT doc_id, t, unnest(generate_series(1, len(t), 48)) AS start
         |  FROM toks WHERE len(t) >= 1)
@@ -5062,8 +4578,8 @@ object SparkEntry {
         |       ELSE 'test' END AS split
         |FROM documents""".stripMargin,
     "q74_tfidf" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS token
+      s"""WITH tok AS (
+        |  SELECT doc_id, unnest(${OracleGen.words}) AS token
         |  FROM documents),
         |tfc AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
         |dfc AS (SELECT token, COUNT(*) AS df FROM tfc GROUP BY 1),
@@ -5080,8 +4596,8 @@ object SparkEntry {
         |SELECT doc_id, lang, bucket_hex FROM s
         |WHERE thr IS NOT NULL AND bucket_hex < thr""".stripMargin,
     "q76_encode" ->
-      """WITH tok AS (
-        |  SELECT unnest(string_split_regex(text, '\s+')) AS token FROM documents),
+      s"""WITH tok AS (
+        |  SELECT unnest(${OracleGen.words}) AS token FROM documents),
         |cnt AS (SELECT token, COUNT(*) AS n_occurrences FROM tok GROUP BY token),
         |vocab AS (
         |  SELECT token,
@@ -5092,8 +4608,7 @@ object SparkEntry {
         |pos AS (
         |  SELECT doc_id, CAST(i - 1 AS INT) AS pos, t[i] AS token
         |  FROM (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS i
-        |        FROM (SELECT doc_id, string_split_regex(text, '\s+') AS t
-        |              FROM documents)))
+        |        FROM (${OracleGen.wordTokens()})))
         |SELECT p.doc_id, p.pos,
         |  CAST(COALESCE(v.token_id, 0) AS INT) AS token_id
         |FROM pos p LEFT JOIN vocab v ON v.token = p.token""".stripMargin,
@@ -5106,9 +4621,9 @@ object SparkEntry {
         |  FROM documents)
         |WHERE rank_in_stratum <= 40""".stripMargin,
     "q67_sequence_pack" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, CAST(doc_id % 8 AS INT) AS shard,
-        |    CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS n_tokens
+        |    CAST(len(${OracleGen.words}) AS BIGINT) AS n_tokens
         |  FROM documents),
         |o AS (
         |  SELECT doc_id, shard, n_tokens,
@@ -5128,38 +4643,8 @@ object SparkEntry {
       s"""WITH RECURSIVE
         |corpus AS (SELECT doc_id, text, source FROM documents
         |           WHERE doc_id % 10 != 0),
-        |base AS (SELECT doc_id, text, string_split_regex(text, '\\s+') AS t
-        |         FROM corpus),
-        |lang AS (
-        |  SELECT doc_id,
-        |    CASE WHEN en >= es AND en >= de AND en >= fr AND en >= zh THEN 'en'
-        |         WHEN es >= de AND es >= fr AND es >= zh THEN 'es'
-        |         WHEN de >= fr AND de >= zh THEN 'de'
-        |         WHEN fr >= zh THEN 'fr'
-        |         ELSE 'zh' END AS pred_lang
-        |  FROM (SELECT doc_id,
-        |    len(list_intersect(list_distinct(t), ['the', 'a', 'row'])) AS en,
-        |    len(list_intersect(list_distinct(t), ['data', 'query'])) AS es,
-        |    len(list_intersect(list_distinct(t), ['merge', 'batch'])) AS de,
-        |    len(list_intersect(list_distinct(t), ['stream', 'filter'])) AS fr,
-        |    len(list_intersect(list_distinct(t), ['window', 'join'])) AS zh
-        |  FROM base)),
-        |qual AS (
-        |  SELECT doc_id,
-        |    (CAST(len(list_distinct(t)) AS DOUBLE) / len(t)) * 2.0
-        |      + (CAST(len(list_filter(t, x -> list_contains(['the', 'a'], x))) AS DOUBLE) / len(t))
-        |      - (CAST(length(regexp_replace(text, '[^.!?,;:]', '', 'g')) AS DOUBLE) / length(text))
-        |      AS quality
-        |  FROM base),
-        |tot AS (SELECT doc_id, CAST(len(t) - 2 AS BIGINT) AS n_tot
-        |        FROM base WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        |       FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        |             FROM base WHERE len(t) >= 3)),
-        |rep AS (
-        |  SELECT tot.doc_id, 1.0 - CAST(d.n AS DOUBLE) / tot.n_tot AS repetition
-        |  FROM tot JOIN (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id) d
-        |    ON d.doc_id = tot.doc_id),
+        |base AS (${OracleGen.wordTokens(cols = "doc_id, text", from = "corpus")}),
+        |${OracleGen.curateCtes},
         |curated AS (
         |  SELECT l.doc_id FROM lang l
         |  JOIN qual q ON q.doc_id = l.doc_id
@@ -5171,18 +4656,13 @@ object SparkEntry {
         |  SELECT c.doc_id FROM curated c
         |  LEFT JOIN clusters cl ON cl.doc_id = c.doc_id
         |  WHERE cl.doc_id IS NULL OR cl.cluster_id = c.doc_id),
-        |evb AS (SELECT doc_id, string_split_regex(text, '\\s+') AS t
-        |        FROM documents WHERE doc_id % 10 = 0),
+        |evb AS (${OracleGen.wordTokens("doc_id % 10 = 0")}),
         |ev5 AS (SELECT DISTINCT
-        |          t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]
-        |            || ' ' || t[i+4] AS shingle
-        |        FROM (SELECT t, unnest(range(1, len(t) - 3)) AS i
-        |              FROM evb WHERE len(t) >= 5)),
+        |          ${OracleGen.wordGram(5)} AS shingle
+        |        FROM ${OracleGen.gramStarts(5, "evb", cols = "t")}),
         |s5 AS (SELECT b.doc_id,
-        |         t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]
-        |           || ' ' || t[i+4] AS shingle
-        |       FROM (SELECT doc_id, t, unnest(range(1, len(t) - 3)) AS i
-        |             FROM base WHERE len(t) >= 5) b
+        |         ${OracleGen.wordGram(5)} AS shingle
+        |       FROM ${OracleGen.gramStarts(5, "base")} b
         |       JOIN survivors sv ON sv.doc_id = b.doc_id),
         |dirty AS (SELECT DISTINCT s.doc_id
         |          FROM s5 s JOIN ev5 e ON e.shingle = s.shingle),
@@ -5191,7 +4671,7 @@ object SparkEntry {
         |          WHERE dy.doc_id IS NULL),
         |cdocs AS (SELECT d.doc_id, d.text, d.source
         |          FROM corpus d JOIN clean c ON c.doc_id = d.doc_id),
-        |mc AS (SELECT source, SUM(len(string_split_regex(text, '\\s+'))) AS n
+        |mc AS (SELECT source, SUM(len(${OracleGen.words})) AS n
         |       FROM cdocs GROUP BY source),
         |mt AS (
         |  SELECT source, printf('%05x', CAST(FLOOR(65536 * LEAST(
@@ -5208,7 +4688,7 @@ object SparkEntry {
         |  WHERE '0' || substr(md5(CAST(d.doc_id AS VARCHAR) || ':graft'), 1, 4)
         |        < mt.thr),
         |pt AS (SELECT doc_id, CAST(doc_id % 8 AS INT) AS shard,
-        |       CAST(len(string_split_regex(text, '\\s+')) AS BIGINT) AS n_tokens
+        |       CAST(len(${OracleGen.words}) AS BIGINT) AS n_tokens
         |       FROM samp),
         |po AS (SELECT doc_id, shard, n_tokens,
         |       CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
@@ -5219,11 +4699,9 @@ object SparkEntry {
         |  CAST(start_offset // 2048 AS BIGINT) AS pack_id
         |FROM po""".stripMargin,
     "q37_knn_bruteforce" ->
-      """WITH pairs AS (
+      s"""WITH pairs AS (
         |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-        |    list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(p.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))))
+        |    ${OracleGen.cosine("p.embedding", "c.embedding")}
         |      AS cosine
         |  FROM embeddings p JOIN embeddings c ON c.vec_id != p.vec_id
         |  WHERE p.vec_id < 10)
@@ -5234,7 +4712,7 @@ object SparkEntry {
         |FROM pairs
         |QUALIFY rank <= 5""".stripMargin,
     "q38_knn_lsh_buckets" ->
-      """WITH bits AS (
+      s"""WITH bits AS (
         |  SELECT e.vec_id, r1.i,
         |    SUM(CAST(floor(CAST(e.embedding[CAST(r2.d AS INT)] AS DOUBLE) * 1000) AS BIGINT)
         |        * (CASE WHEN ((r1.i * 31 + r2.d) * 1103515245 + 12345) % 97 < 48
@@ -5246,44 +4724,27 @@ object SparkEntry {
         |    SUM(CASE WHEN dotv >= 0 THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS bucket
         |  FROM bits GROUP BY vec_id)
         |SELECT CAST(a.bucket AS BIGINT) AS bucket, ea.vec_id AS vec_a, eb.vec_id AS vec_b,
-        |  list_dot_product(CAST(ea.embedding AS DOUBLE[]), CAST(eb.embedding AS DOUBLE[]))
-        |    / (sqrt(list_dot_product(CAST(ea.embedding AS DOUBLE[]), CAST(ea.embedding AS DOUBLE[])))
-        |       * sqrt(list_dot_product(CAST(eb.embedding AS DOUBLE[]), CAST(eb.embedding AS DOUBLE[]))))
+        |  ${OracleGen.cosine("ea.embedding", "eb.embedding")}
         |    AS cosine
         |FROM buckets a JOIN buckets b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
         |JOIN embeddings ea ON ea.vec_id = a.vec_id
         |JOIN embeddings eb ON eb.vec_id = b.vec_id""".stripMargin,
     // IVF: centroid seeds = 16 lowest vec_ids; assignment = argmax cosine
     // (tie -> lowest c_id); probes search their top-4 lists only. Same
-    // list_dot_product cosine as q37, so doubles are bit-identical.
+    // OracleGen.cosine as q37, so doubles are bit-identical.
     "q181_decontaminate_ivf" ->
-      """WITH centroids AS (
-        |  SELECT vec_id AS c_id, embedding AS c_emb
-        |  FROM embeddings WHERE vec_id % 50 <> 0 ORDER BY vec_id LIMIT 16),
-        |ccos AS (
-        |  SELECT e.vec_id, c.c_id,
-        |    list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(c.c_emb AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))))
-        |      AS ccos
-        |  FROM embeddings e CROSS JOIN centroids c),
+      s"""WITH ${OracleGen.ivfCtes("vec_id % 50 <> 0")},
         |assign AS (
-        |  SELECT vec_id AS corpus_id, c_id AS list_id FROM ccos
-        |  WHERE vec_id % 50 <> 0
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, c_id) = 1),
+        |  ${OracleGen.ivfTop("vec_id AS corpus_id", "vec_id % 50 <> 0")}),
         |plists AS (
-        |  SELECT vec_id AS probe_id, c_id AS list_id FROM ccos
-        |  WHERE vec_id % 50 = 0
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, c_id) <= 4),
+        |  ${OracleGen.ivfTop("vec_id AS probe_id", "vec_id % 50 = 0", k = 4)}),
         |hits AS (
         |  SELECT DISTINCT a.corpus_id
         |  FROM plists pl
         |  JOIN assign a ON a.list_id = pl.list_id
         |  JOIN embeddings p ON p.vec_id = pl.probe_id
         |  JOIN embeddings n ON n.vec_id = a.corpus_id
-        |  WHERE list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(n.embedding AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(p.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(n.embedding AS DOUBLE[]), CAST(n.embedding AS DOUBLE[]))))
+        |  WHERE ${OracleGen.cosine("p.embedding", "n.embedding")}
         |      >= 0.3)
         |SELECT c.vec_id, c.label FROM embeddings c
         |WHERE c.vec_id % 50 <> 0
@@ -5292,34 +4753,7 @@ object SparkEntry {
     // q65 algebra with the doomed ids excluded from ASSIGN (the index
     // side) while probes and centroids stay the full build's
     "q199_ivf_delete" ->
-      """WITH centroids AS (
-        |  SELECT vec_id AS c_id, embedding AS c_emb
-        |  FROM embeddings ORDER BY vec_id LIMIT 16),
-        |ccos AS (
-        |  SELECT e.vec_id, c.c_id,
-        |    list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(c.c_emb AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))))
-        |      AS ccos
-        |  FROM embeddings e CROSS JOIN centroids c),
-        |assign AS (
-        |  SELECT vec_id AS neighbor_id, c_id AS list_id FROM ccos
-        |  WHERE vec_id % 7 <> 3
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, c_id) = 1),
-        |plists AS (
-        |  SELECT vec_id AS probe_id, c_id AS list_id FROM ccos
-        |  WHERE vec_id < 10
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, c_id) <= 4),
-        |cand AS (
-        |  SELECT pl.probe_id, a.neighbor_id,
-        |    list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(n.embedding AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(p.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(n.embedding AS DOUBLE[]), CAST(n.embedding AS DOUBLE[]))))
-        |      AS cosine
-        |  FROM plists pl
-        |  JOIN assign a ON a.list_id = pl.list_id AND a.neighbor_id != pl.probe_id
-        |  JOIN embeddings p ON p.vec_id = pl.probe_id
-        |  JOIN embeddings n ON n.vec_id = a.neighbor_id)
+      s"""WITH ${OracleGen.ivfProbeCtes(assignWhere = "vec_id % 7 <> 3")}
         |SELECT probe_id, neighbor_id,
         |  CAST(ROW_NUMBER() OVER (PARTITION BY probe_id
         |    ORDER BY cosine DESC, neighbor_id) AS INT) AS rank,
@@ -5329,20 +4763,9 @@ object SparkEntry {
     // index-as-reference drift: n_ref = the build corpus's assignment
     // counts (what list_stats holds), n_cur = the batch's
     "q200_index_drift" ->
-      """WITH centroids AS (
-        |  SELECT vec_id AS c_id, embedding AS c_emb
-        |  FROM embeddings WHERE vec_id % 3 <> 0 ORDER BY vec_id LIMIT 16),
-        |ccos AS (
-        |  SELECT e.vec_id, e.vec_id % 3 AS m, c.c_id,
-        |    list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(c.c_emb AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))))
-        |      AS ccos
-        |  FROM embeddings e CROSS JOIN centroids c),
+      s"""WITH ${OracleGen.ivfCtes("vec_id % 3 <> 0", cols = "e.vec_id % 3 AS m")},
         |assign AS (
-        |  SELECT vec_id, m, c_id AS list_id FROM ccos
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id
-        |    ORDER BY ccos DESC, c_id) = 1),
+        |  ${OracleGen.ivfTop("vec_id, m")}),
         |rh AS (SELECT list_id, COUNT(*) AS n_ref FROM assign
         |       WHERE m <> 0 GROUP BY list_id),
         |ch AS (SELECT list_id, COUNT(*) AS n_cur FROM assign
@@ -5354,21 +4777,9 @@ object SparkEntry {
     // the q200 index's list_stats reduced to the one-row report; the
     // imbalance decision is integer cross-multiplied (num/den = 3/1)
     "q207_ivf_maintenance" ->
-      """WITH centroids AS (
-        |  SELECT vec_id AS c_id, embedding AS c_emb
-        |  FROM embeddings WHERE vec_id % 3 <> 0 ORDER BY vec_id LIMIT 16),
-        |ccos AS (
-        |  SELECT e.vec_id, c.c_id,
-        |    list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(c.c_emb AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))))
-        |      AS ccos
-        |  FROM embeddings e CROSS JOIN centroids c
-        |  WHERE e.vec_id % 3 <> 0),
+      s"""WITH ${OracleGen.ivfCtes("vec_id % 3 <> 0", where = "e.vec_id % 3 <> 0")},
         |assign AS (
-        |  SELECT vec_id, c_id AS list_id FROM ccos
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id
-        |    ORDER BY ccos DESC, c_id) = 1),
+        |  ${OracleGen.ivfTop("vec_id")}),
         |h AS (SELECT c.c_id AS list_id, COUNT(a.vec_id) AS n
         |      FROM centroids c LEFT JOIN assign a ON a.list_id = c.c_id
         |      GROUP BY 1)
@@ -5380,20 +4791,9 @@ object SparkEntry {
     // embedding drift: the q65 seed-centroid assignment (reference side
     // defines the geometry), per-side counts aligned full-outer
     "q197_embedding_drift" ->
-      """WITH centroids AS (
-        |  SELECT vec_id AS c_id, embedding AS c_emb
-        |  FROM embeddings WHERE vec_id % 2 = 0 ORDER BY vec_id LIMIT 16),
-        |ccos AS (
-        |  SELECT e.vec_id, e.vec_id % 2 AS side, c.c_id,
-        |    list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(c.c_emb AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))))
-        |      AS ccos
-        |  FROM embeddings e CROSS JOIN centroids c),
+      s"""WITH ${OracleGen.ivfCtes("vec_id % 2 = 0", cols = "e.vec_id % 2 AS side")},
         |assign AS (
-        |  SELECT vec_id, side, c_id AS list_id FROM ccos
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id
-        |    ORDER BY ccos DESC, c_id) = 1),
+        |  ${OracleGen.ivfTop("vec_id, side")}),
         |rh AS (SELECT list_id, COUNT(*) AS n_ref FROM assign
         |       WHERE side = 0 GROUP BY list_id),
         |ch AS (SELECT list_id, COUNT(*) AS n_cur FROM assign
@@ -5404,20 +4804,9 @@ object SparkEntry {
         |FROM rh FULL OUTER JOIN ch ON ch.list_id = rh.list_id""".stripMargin,
     // q197 keyed by label: same geometry, per-(label, list) counts
     "q206_embedding_drift_by" ->
-      """WITH centroids AS (
-        |  SELECT vec_id AS c_id, embedding AS c_emb
-        |  FROM embeddings WHERE vec_id % 2 = 0 ORDER BY vec_id LIMIT 16),
-        |ccos AS (
-        |  SELECT e.vec_id, e.label, e.vec_id % 2 AS side, c.c_id,
-        |    list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(c.c_emb AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))))
-        |      AS ccos
-        |  FROM embeddings e CROSS JOIN centroids c),
+      s"""WITH ${OracleGen.ivfCtes("vec_id % 2 = 0", cols = "e.label, e.vec_id % 2 AS side")},
         |assign AS (
-        |  SELECT vec_id, label, side, c_id AS list_id FROM ccos
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id
-        |    ORDER BY ccos DESC, c_id) = 1),
+        |  ${OracleGen.ivfTop("vec_id, label, side")}),
         |rh AS (SELECT label, list_id, COUNT(*) AS n_ref FROM assign
         |       WHERE side = 0 GROUP BY label, list_id),
         |ch AS (SELECT label, list_id, COUNT(*) AS n_cur FROM assign
@@ -5429,45 +4818,14 @@ object SparkEntry {
         |FROM rh FULL OUTER JOIN ch
         |  ON ch.list_id = rh.list_id AND ch.label = rh.label""".stripMargin,
     "q177_decontaminate_semantic" ->
-      """WITH ev AS (SELECT embedding FROM embeddings WHERE vec_id % 50 = 0),
+      s"""WITH ev AS (SELECT embedding FROM embeddings WHERE vec_id % 50 = 0),
         |corpus AS (SELECT * FROM embeddings WHERE vec_id % 50 <> 0)
         |SELECT c.vec_id, c.label FROM corpus c
         |WHERE NOT EXISTS (SELECT 1 FROM ev e
-        |  WHERE list_dot_product(CAST(c.embedding AS DOUBLE[]),
-        |                         CAST(e.embedding AS DOUBLE[]))
-        |    / (sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]),
-        |                             CAST(c.embedding AS DOUBLE[])))
-        |       * sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-        |                               CAST(e.embedding AS DOUBLE[]))))
+        |  WHERE ${OracleGen.cosine("c.embedding", "e.embedding")}
         |    >= 0.3)""".stripMargin,
     "q65_knn_ivf" ->
-      """WITH centroids AS (
-        |  SELECT vec_id AS c_id, embedding AS c_emb
-        |  FROM embeddings ORDER BY vec_id LIMIT 16),
-        |ccos AS (
-        |  SELECT e.vec_id, c.c_id,
-        |    list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(c.c_emb AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))))
-        |      AS ccos
-        |  FROM embeddings e CROSS JOIN centroids c),
-        |assign AS (
-        |  SELECT vec_id AS neighbor_id, c_id AS list_id FROM ccos
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, c_id) = 1),
-        |plists AS (
-        |  SELECT vec_id AS probe_id, c_id AS list_id FROM ccos
-        |  WHERE vec_id < 10
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, c_id) <= 4),
-        |cand AS (
-        |  SELECT pl.probe_id, a.neighbor_id,
-        |    list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(n.embedding AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(p.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(n.embedding AS DOUBLE[]), CAST(n.embedding AS DOUBLE[]))))
-        |      AS cosine
-        |  FROM plists pl
-        |  JOIN assign a ON a.list_id = pl.list_id AND a.neighbor_id != pl.probe_id
-        |  JOIN embeddings p ON p.vec_id = pl.probe_id
-        |  JOIN embeddings n ON n.vec_id = a.neighbor_id)
+      s"""WITH ${OracleGen.ivfProbeCtes()}
         |SELECT probe_id, neighbor_id,
         |  CAST(ROW_NUMBER() OVER (PARTITION BY probe_id
         |    ORDER BY cosine DESC, neighbor_id) AS INT) AS rank,
@@ -5480,23 +4838,11 @@ object SparkEntry {
     // explicit floor(x + 0.5f) both sides spell) and a top-20 float
     // refine.
     "q116_ann_sq8" ->
-      """WITH centroids AS (
-        |  SELECT vec_id AS c_id, embedding AS c_emb
-        |  FROM embeddings ORDER BY vec_id LIMIT 16),
-        |ccos AS (
-        |  SELECT e.vec_id, c.c_id,
-        |    list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(c.c_emb AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))))
-        |      AS ccos
-        |  FROM embeddings e CROSS JOIN centroids c),
+      s"""WITH ${OracleGen.ivfCtes()},
         |assign AS (
-        |  SELECT vec_id AS neighbor_id, c_id AS list_id FROM ccos
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, c_id) = 1),
+        |  ${OracleGen.ivfTop("vec_id AS neighbor_id")}),
         |plists AS (
-        |  SELECT vec_id AS probe_id, c_id AS list_id FROM ccos
-        |  WHERE vec_id < 10
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, c_id) <= 4),
+        |  ${OracleGen.ivfTop("vec_id AS probe_id", "vec_id < 10", k = 4)}),
         |codes AS (
         |  SELECT vec_id,
         |    CASE WHEN mx = 0 THEN list_transform(embedding, x -> CAST(0 AS BIGINT))
@@ -5508,9 +4854,7 @@ object SparkEntry {
         |        FROM embeddings)),
         |qcand AS (
         |  SELECT pl.probe_id, a.neighbor_id,
-        |    list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(nc.c AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(p.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(nc.c AS DOUBLE[]), CAST(nc.c AS DOUBLE[]))))
+        |    ${OracleGen.cosine("p.embedding", "nc.c")}
         |      AS qcos
         |  FROM plists pl
         |  JOIN assign a ON a.list_id = pl.list_id AND a.neighbor_id != pl.probe_id
@@ -5522,9 +4866,7 @@ object SparkEntry {
         |    ORDER BY qcos DESC, neighbor_id) <= 20),
         |cand AS (
         |  SELECT r.probe_id, r.neighbor_id,
-        |    list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(n.embedding AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(p.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(n.embedding AS DOUBLE[]), CAST(n.embedding AS DOUBLE[]))))
+        |    ${OracleGen.cosine("p.embedding", "n.embedding")}
         |      AS cosine
         |  FROM pool r
         |  JOIN embeddings p ON p.vec_id = r.probe_id
@@ -5538,42 +4880,14 @@ object SparkEntry {
     // exact top-5 (q37's CTE) left-joined by the nProbe=2 IVF result
     // (q65's CTE at depth 2): per-probe hit counts, all integers
     "q210_ivf_recall" ->
-      """WITH centroids AS (
-        |  SELECT vec_id AS c_id, embedding AS c_emb
-        |  FROM embeddings ORDER BY vec_id LIMIT 16),
-        |ccos AS (
-        |  SELECT e.vec_id, c.c_id,
-        |    list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(c.c_emb AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))))
-        |      AS ccos
-        |  FROM embeddings e CROSS JOIN centroids c),
-        |assign AS (
-        |  SELECT vec_id AS neighbor_id, c_id AS list_id FROM ccos
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, c_id) = 1),
-        |plists AS (
-        |  SELECT vec_id AS probe_id, c_id AS list_id FROM ccos
-        |  WHERE vec_id < 10
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, c_id) <= 2),
-        |cand AS (
-        |  SELECT pl.probe_id, a.neighbor_id,
-        |    list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(n.embedding AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(p.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(n.embedding AS DOUBLE[]), CAST(n.embedding AS DOUBLE[]))))
-        |      AS cosine
-        |  FROM plists pl
-        |  JOIN assign a ON a.list_id = pl.list_id AND a.neighbor_id != pl.probe_id
-        |  JOIN embeddings p ON p.vec_id = pl.probe_id
-        |  JOIN embeddings n ON n.vec_id = a.neighbor_id),
+      s"""WITH ${OracleGen.ivfProbeCtes(nProbe = 2)},
         |approx AS (
         |  SELECT probe_id, neighbor_id FROM cand
         |  QUALIFY ROW_NUMBER() OVER (PARTITION BY probe_id
         |    ORDER BY cosine DESC, neighbor_id) <= 5),
         |exact_pairs AS (
         |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-        |    list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(p.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))))
+        |    ${OracleGen.cosine("p.embedding", "c.embedding")}
         |      AS cosine
         |  FROM embeddings p JOIN embeddings c ON c.vec_id != p.vec_id
         |  WHERE p.vec_id < 10),
@@ -5588,18 +4902,16 @@ object SparkEntry {
         |  ON a.probe_id = e.probe_id AND a.neighbor_id = e.neighbor_id
         |GROUP BY e.probe_id""".stripMargin,
     "q39_embedding_near_dup" ->
-      """SELECT * FROM (
+      s"""SELECT * FROM (
         |  SELECT a.label, a.vec_id AS vec_a, b.vec_id AS vec_b,
-        |    list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-        |      / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))))
+        |    ${OracleGen.cosine("a.embedding", "b.embedding")}
         |      AS cosine
         |  FROM embeddings a JOIN embeddings b
         |    ON a.label = b.label AND a.vec_id < b.vec_id)
         |WHERE cosine >= 0.4""".stripMargin,
     "q40_vector_norms" ->
-      """SELECT vec_id,
-        |  sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS l2_norm,
+      s"""SELECT vec_id,
+        |  ${OracleGen.norm("embedding")} AS l2_norm,
         |  CAST(len(embedding) AS INT) AS dims,
         |  CAST(list_sum(list_transform(embedding,
         |    x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))) AS BIGINT) AS qsum
@@ -5640,17 +4952,7 @@ object SparkEntry {
          |  CAST(bit_count(xor(ph_a, ph_b)) AS INT) AS hamming
          |FROM cand WHERE bit_count(xor(ph_a, ph_b)) <= 2""".stripMargin,
     "q122_video_near_dup" ->
-      """WITH toks AS (
-         |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents
-         |  WHERE doc_id % 3 = 2),
-         |fr AS (
-         |  SELECT doc_id AS asset_id,
-         |    substr(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]
-         |      || ' ' || t[i+4]), 1, 14) AS fhash
-         |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 3)) AS i
-         |        FROM toks WHERE len(t) >= 5)),
-         |hashes AS (SELECT DISTINCT asset_id, fhash FROM fr),
-         |pa AS (SELECT asset_id, COUNT(*) AS n FROM hashes GROUP BY asset_id),
+      s"""WITH ${OracleGen.frameHashCtes},
          |stop AS (SELECT fhash FROM hashes GROUP BY fhash HAVING COUNT(*) > 64),
          |pruned AS (SELECT * FROM hashes
          |           WHERE fhash NOT IN (SELECT fhash FROM stop)),
@@ -5665,70 +4967,11 @@ object SparkEntry {
          |JOIN pa nb ON p.asset_b = nb.asset_id
          |WHERE CAST(p.n_matched AS DOUBLE) / CAST(least(na.n, nb.n) AS DOUBLE)
          |  >= 0.3""".stripMargin,
-    "q132_video_dup_delta" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents
-        |  WHERE doc_id % 3 = 2),
-        |fr AS (
-        |  SELECT doc_id AS asset_id,
-        |    substr(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]
-        |      || ' ' || t[i+4]), 1, 14) AS fhash
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 3)) AS i
-        |        FROM toks WHERE len(t) >= 5)),
-        |hashes AS (SELECT DISTINCT asset_id, fhash FROM fr),
-        |pa AS (SELECT asset_id, COUNT(*) AS n FROM hashes GROUP BY asset_id),
-        |corpus AS (SELECT * FROM hashes WHERE asset_id % 6 = 2),
-        |delta AS (SELECT * FROM hashes WHERE asset_id % 6 = 5),
-        |stop AS (SELECT fhash FROM corpus GROUP BY fhash HAVING COUNT(*) > 64),
-        |prunedc AS (SELECT * FROM corpus
-        |            WHERE fhash NOT IN (SELECT fhash FROM stop)),
-        |pairs AS (SELECT c.asset_id AS asset_a, d.asset_id AS asset_b,
-        |    COUNT(*) AS n_matched
-        |  FROM prunedc c JOIN delta d USING (fhash) GROUP BY 1, 2)
-        |SELECT p.asset_a, p.asset_b, p.n_matched,
-        |  CAST(p.n_matched AS DOUBLE) / CAST(least(na.n, nb.n) AS DOUBLE)
-        |    AS overlap
-        |FROM pairs p JOIN pa na ON p.asset_a = na.asset_id
-        |JOIN pa nb ON p.asset_b = nb.asset_id
-        |WHERE CAST(p.n_matched AS DOUBLE) / CAST(least(na.n, nb.n) AS DOUBLE)
-        |  >= 0.3""".stripMargin,
+    "q132_video_dup_delta" -> frameDeltaSqlOver("asset_id % 6 = 2"),
     // the q132 probe with the corpus reduced to the never-deleted wave
-    "q203_frame_delete" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents
-        |  WHERE doc_id % 3 = 2),
-        |fr AS (
-        |  SELECT doc_id AS asset_id,
-        |    substr(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]
-        |      || ' ' || t[i+4]), 1, 14) AS fhash
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 3)) AS i
-        |        FROM toks WHERE len(t) >= 5)),
-        |hashes AS (SELECT DISTINCT asset_id, fhash FROM fr),
-        |pa AS (SELECT asset_id, COUNT(*) AS n FROM hashes GROUP BY asset_id),
-        |corpus AS (SELECT * FROM hashes WHERE asset_id % 12 = 2),
-        |delta AS (SELECT * FROM hashes WHERE asset_id % 6 = 5),
-        |stop AS (SELECT fhash FROM corpus GROUP BY fhash HAVING COUNT(*) > 64),
-        |prunedc AS (SELECT * FROM corpus
-        |            WHERE fhash NOT IN (SELECT fhash FROM stop)),
-        |pairs AS (SELECT c.asset_id AS asset_a, d.asset_id AS asset_b,
-        |    COUNT(*) AS n_matched
-        |  FROM prunedc c JOIN delta d USING (fhash) GROUP BY 1, 2)
-        |SELECT p.asset_a, p.asset_b, p.n_matched,
-        |  CAST(p.n_matched AS DOUBLE) / CAST(least(na.n, nb.n) AS DOUBLE)
-        |    AS overlap
-        |FROM pairs p JOIN pa na ON p.asset_a = na.asset_id
-        |JOIN pa nb ON p.asset_b = nb.asset_id
-        |WHERE CAST(p.n_matched AS DOUBLE) / CAST(least(na.n, nb.n) AS DOUBLE)
-        |  >= 0.3""".stripMargin,
+    "q203_frame_delete" -> frameDeltaSqlOver("asset_id % 12 = 2"),
     "q123_audio_align_dup" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents
-        |  WHERE doc_id % 3 = 1),
-        |w AS (
-        |  SELECT doc_id AS asset_id, i - 1 AS wi,
-        |    substr(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2]), 1, 8) AS fp
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        |        FROM toks WHERE len(t) >= 3)),
+      s"""WITH ${OracleGen.audioWindowCtes("fp")},
         |stop AS (SELECT fp FROM (SELECT fp, COUNT(DISTINCT asset_id) AS na
         |                         FROM w GROUP BY fp) WHERE na > 64),
         |pruned AS (SELECT DISTINCT asset_id, wi, fp FROM w
@@ -5737,23 +4980,9 @@ object SparkEntry {
         |    a.wi - b.wi AS dt, COUNT(*) AS votes
         |  FROM pruned a JOIN pruned b USING (fp)
         |  WHERE a.asset_id < b.asset_id GROUP BY 1, 2, 3),
-        |best AS (SELECT asset_a, asset_b, MAX(votes) AS best_votes,
-        |    CAST(SUM(votes) AS BIGINT) AS n_matched
-        |  FROM votes GROUP BY 1, 2 HAVING MAX(votes) >= 2)
-        |SELECT b.asset_a, b.asset_b, b.best_votes,
-        |  MIN(v.dt) AS best_dt, b.n_matched
-        |FROM best b JOIN votes v USING (asset_a, asset_b)
-        |WHERE v.votes = b.best_votes
-        |GROUP BY b.asset_a, b.asset_b, b.best_votes, b.n_matched""".stripMargin,
+        |${OracleGen.bestOffset}""".stripMargin,
     "q133_audio_dup_delta" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents
-        |  WHERE doc_id % 3 = 1),
-        |w AS (
-        |  SELECT doc_id AS asset_id, i - 1 AS wi,
-        |    substr(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2]), 1, 8) AS fp
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        |        FROM toks WHERE len(t) >= 3)),
+      s"""WITH ${OracleGen.audioWindowCtes("fp")},
         |dw AS (SELECT DISTINCT asset_id, wi, fp FROM w),
         |corpus AS (SELECT * FROM dw WHERE asset_id % 6 = 1),
         |delta AS (SELECT * FROM dw WHERE asset_id % 6 = 4),
@@ -5764,23 +4993,9 @@ object SparkEntry {
         |votes AS (SELECT c.asset_id AS asset_a, d.asset_id AS asset_b,
         |    c.wi - d.wi AS dt, COUNT(*) AS votes
         |  FROM prunedc c JOIN delta d USING (fp) GROUP BY 1, 2, 3),
-        |best AS (SELECT asset_a, asset_b, MAX(votes) AS best_votes,
-        |    CAST(SUM(votes) AS BIGINT) AS n_matched
-        |  FROM votes GROUP BY 1, 2 HAVING MAX(votes) >= 2)
-        |SELECT b.asset_a, b.asset_b, b.best_votes,
-        |  MIN(v.dt) AS best_dt, b.n_matched
-        |FROM best b JOIN votes v USING (asset_a, asset_b)
-        |WHERE v.votes = b.best_votes
-        |GROUP BY b.asset_a, b.asset_b, b.best_votes, b.n_matched""".stripMargin,
+        |${OracleGen.bestOffset}""".stripMargin,
     "q150_audio_tolerant" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents
-        |  WHERE doc_id % 3 = 1),
-        |w AS (
-        |  SELECT doc_id AS asset_id, i - 1 AS wi,
-        |    substr(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2]), 1, 8) AS fph
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        |        FROM toks WHERE len(t) >= 3)),
+      s"""WITH ${OracleGen.audioWindowCtes("fph")},
         |wn AS (SELECT asset_id, wi,
         |    xor(try_cast('0x' || fph AS BIGINT), wi % 2) AS fp FROM w),
         |dw AS (SELECT DISTINCT asset_id, wi, fp FROM wn),
@@ -5796,23 +5011,9 @@ object SparkEntry {
         |m AS (SELECT * FROM cand WHERE bit_count(xor(fp_a, fp_b)) <= 1),
         |votes AS (SELECT asset_a, asset_b, w_a - w_b AS dt, COUNT(*) AS votes
         |  FROM m GROUP BY 1, 2, 3),
-        |best AS (SELECT asset_a, asset_b, MAX(votes) AS best_votes,
-        |    CAST(SUM(votes) AS BIGINT) AS n_matched
-        |  FROM votes GROUP BY 1, 2 HAVING MAX(votes) >= 2)
-        |SELECT b.asset_a, b.asset_b, b.best_votes,
-        |  MIN(v.dt) AS best_dt, b.n_matched
-        |FROM best b JOIN votes v USING (asset_a, asset_b)
-        |WHERE v.votes = b.best_votes
-        |GROUP BY b.asset_a, b.asset_b, b.best_votes, b.n_matched""".stripMargin,
+        |${OracleGen.bestOffset}""".stripMargin,
     "q151_audio_tolerant_delta" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents
-        |  WHERE doc_id % 3 = 1),
-        |w AS (
-        |  SELECT doc_id AS asset_id, i - 1 AS wi,
-        |    substr(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2]), 1, 8) AS fph
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        |        FROM toks WHERE len(t) >= 3)),
+      s"""WITH ${OracleGen.audioWindowCtes("fph")},
         |wn AS (SELECT asset_id, wi,
         |    xor(try_cast('0x' || fph AS BIGINT), wi % 2) AS fp FROM w),
         |dw AS (SELECT DISTINCT asset_id, wi, fp FROM wn),
@@ -5833,14 +5034,7 @@ object SparkEntry {
         |m AS (SELECT * FROM cand WHERE bit_count(xor(fp_a, fp_b)) <= 1),
         |votes AS (SELECT asset_a, asset_b, w_a - w_b AS dt, COUNT(*) AS votes
         |  FROM m GROUP BY 1, 2, 3),
-        |best AS (SELECT asset_a, asset_b, MAX(votes) AS best_votes,
-        |    CAST(SUM(votes) AS BIGINT) AS n_matched
-        |  FROM votes GROUP BY 1, 2 HAVING MAX(votes) >= 2)
-        |SELECT b.asset_a, b.asset_b, b.best_votes,
-        |  MIN(v.dt) AS best_dt, b.n_matched
-        |FROM best b JOIN votes v USING (asset_a, asset_b)
-        |WHERE v.votes = b.best_votes
-        |GROUP BY b.asset_a, b.asset_b, b.best_votes, b.n_matched""".stripMargin,
+        |${OracleGen.bestOffset}""".stripMargin,
     "q134_resample_fill" ->
       """WITH daily AS (
         |  SELECT user_id, CAST(ts AS DATE) AS d,
@@ -5904,34 +5098,13 @@ object SparkEntry {
         |GROUP BY s_name
         |ORDER BY numwait DESC, s_name
         |LIMIT 10""".stripMargin,
-    "q144_fuzzy_delta" ->
-      """WITH a AS (SELECT DISTINCT c_name AS t FROM customer
-        |           WHERE c_custkey % 4 = 0),
-        |b AS (SELECT DISTINCT c_name AS t FROM customer
-        |      WHERE c_custkey % 4 = 1)
-        |SELECT a.t AS name_a, b.t AS name_b,
-        |  CAST(levenshtein(a.t, b.t) AS INT) AS dist
-        |FROM a JOIN b ON levenshtein(a.t, b.t) <= 1""".stripMargin,
+    "q144_fuzzy_delta" -> fuzzyDeltaSqlOver("c_custkey % 4 = 0"),
     // the q144 probe over the REDUCED corpus: what an index that never
     // ingested the deleted names would answer
-    "q202_fuzzy_delete" ->
-      """WITH a AS (SELECT DISTINCT c_name AS t FROM customer
-        |           WHERE c_custkey % 4 = 0 AND c_custkey % 8 <> 4),
-        |b AS (SELECT DISTINCT c_name AS t FROM customer
-        |      WHERE c_custkey % 4 = 1)
-        |SELECT a.t AS name_a, b.t AS name_b,
-        |  CAST(levenshtein(a.t, b.t) AS INT) AS dist
-        |FROM a JOIN b ON levenshtein(a.t, b.t) <= 1""".stripMargin,
+    "q202_fuzzy_delete" -> fuzzyDeltaSqlOver("c_custkey % 4 = 0 AND c_custkey % 8 <> 4"),
     // identical slices to q144 — the bucketed catalog layout must answer
     // with the same rows as the path-partitioned one
-    "q185_fuzzy_bucketed_probe" ->
-      """WITH a AS (SELECT DISTINCT c_name AS t FROM customer
-        |           WHERE c_custkey % 4 = 0),
-        |b AS (SELECT DISTINCT c_name AS t FROM customer
-        |      WHERE c_custkey % 4 = 1)
-        |SELECT a.t AS name_a, b.t AS name_b,
-        |  CAST(levenshtein(a.t, b.t) AS INT) AS dist
-        |FROM a JOIN b ON levenshtein(a.t, b.t) <= 1""".stripMargin,
+    "q185_fuzzy_bucketed_probe" -> fuzzyDeltaSqlOver("c_custkey % 4 = 0"),
     "q145_cumulative_reach" ->
       """WITH fd AS (
         |  SELECT event_type, user_id, MIN(CAST(ts AS DATE)) AS d
@@ -6123,7 +5296,7 @@ object SparkEntry {
         |  COUNT(*) FILTER (WHERE o_orderpriority = '5-LOW') AS p5
         |FROM orders GROUP BY o_orderstatus""".stripMargin,
     "q60_knn_lsh_multi" ->
-      """WITH bits AS (
+      s"""WITH bits AS (
         |  SELECT e.vec_id, r1.i // 8 AS table_id, r1.i % 8 AS bit,
         |    SUM(CAST(floor(CAST(e.embedding[CAST(r2.d AS INT)] AS DOUBLE) * 1000) AS BIGINT)
         |        * (CASE WHEN ((r1.i * 31 + r2.d) * 1103515245 + 12345) % 97 < 48
@@ -6139,9 +5312,7 @@ object SparkEntry {
         |  FROM buckets a JOIN buckets b
         |    ON a.table_id = b.table_id AND a.bucket = b.bucket AND a.vec_id < b.vec_id)
         |SELECT c.vec_a, c.vec_b,
-        |  list_dot_product(CAST(ea.embedding AS DOUBLE[]), CAST(eb.embedding AS DOUBLE[]))
-        |    / (sqrt(list_dot_product(CAST(ea.embedding AS DOUBLE[]), CAST(ea.embedding AS DOUBLE[])))
-        |       * sqrt(list_dot_product(CAST(eb.embedding AS DOUBLE[]), CAST(eb.embedding AS DOUBLE[]))))
+        |  ${OracleGen.cosine("ea.embedding", "eb.embedding")}
         |    AS cosine
         |FROM cand c
         |JOIN embeddings ea ON ea.vec_id = c.vec_a

@@ -159,32 +159,11 @@ object GraftFunctions {
   def jaro_winkler(a: Column, b: Column): Column =
     column(JaroWinkler(expr(a), expr(b)))
 
-  /** Spark's internal bloom-filter aggregate (the machinery behind runtime
-    * row-level filtering), surfaced as a Column: folds `c` (must be a
-    * LongType hash, e.g. `xxhash64(...)`) into a `numBits`-wide filter,
-    * returned as one BINARY value. Partials merge by bitwise OR —
-    * associative, commutative, duplicate- and order-invariant — so the
-    * result bytes are deterministic under any partitioning.
-    */
-  def bloom_filter_agg(c: Column, estimatedItems: Long, numBits: Long): Column =
-    column(new org.apache.spark.sql.catalyst.expressions.aggregate
-      .BloomFilterAggregate(expr(c),
-        org.apache.spark.sql.catalyst.expressions.Literal(estimatedItems),
-        org.apache.spark.sql.catalyst.expressions.Literal(numBits))
-      .toAggregateExpression())
-
-  /** Membership probe against a [[bloom_filter_agg]] result. `filter` must
-    * be foldable (a collected-bytes literal) or a scalar subquery; false
-    * positives possible, false negatives never.
-    */
-  def might_contain(filter: Column, c: Column): Column =
-    column(org.apache.spark.sql.catalyst.expressions
-      .BloomFilterMightContain(expr(filter), expr(c)))
-
   /** Deterministic cross-engine Bloom fold of a non-negative BIGINT key
     * column (see [[PolyBloomAgg]]): position math is plain integer SQL,
     * so decisions through it are hash-exact oracle-checkable — unlike
-    * [[bloom_filter_agg]], whose internal re-hash has no SQL analog.
+    * Spark's runtime `BloomFilterAggregate`, whose internal re-hash has no
+    * SQL analog.
     */
   def poly_bloom_agg(c: Column, numBits: Int, k: Int): Column =
     column(PolyBloomAgg(expr(c), numBits, k).toAggregateExpression())
@@ -237,11 +216,6 @@ object GraftFunctions {
     LshBucket(exprs(0), litInt(exprs(1), "lsh_bucket: bits"),
       litInt(exprs(2), "lsh_bucket: dims"),
       if (exprs.size > 3) litInt(exprs(3), "lsh_bucket: planeOffset") else 0)
-  }
-
-  private[functions] def kgramMinHashFromSql(exprs: Seq[Expression]): Expression = {
-    require(exprs.size == 2, "kgram_min_hash(text, k)")
-    KgramMinHash(exprs(0), litInt(exprs(1), "kgram_min_hash: k"))
   }
 
   private[functions] def wordNgramHashesFromSql(
@@ -308,7 +282,6 @@ object GraftFunctions {
       require(exprs.size == 2, "cosine_similarity(vec1, vec2)")
       CosineSimilarity(exprs(0), exprs(1)) },
     "lsh_bucket" -> lshBucketFromSql _,
-    "kgram_min_hash" -> kgramMinHashFromSql _,
     "multi_match_counts" -> multiMatchFromSql _,
     "poly_bloom_agg" -> { exprs: Seq[Expression] =>
       require(exprs.size == 3, "poly_bloom_agg(key, numBits, k)")

@@ -114,8 +114,6 @@ final class AcAutomaton private (
     outLink: Array[Int],
     dense: Array[Int]) extends Serializable {
 
-  private def numNodes: Int = fail.length
-
   /** Dense-DFA availability (exposed for the spec's dual-path fuzz). */
   def isDense: Boolean = dense != null
 

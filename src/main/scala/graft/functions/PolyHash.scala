@@ -138,8 +138,8 @@ object PolyHashMath {
   }
 
   /** Min over every char k-gram window of the window's Horner hash (one
-    * clamped window of the whole text when it is shorter than k — the
-    * [[KgramMinHashMath]] convention). All values are in [0, M), so
+    * clamped window of the whole text when it is shorter than k — the SQL
+    * substring clamp). All values are in [0, M), so
     * signed long MIN is the unsigned order too (and DuckDB `list_min`
     * agrees).
     */
@@ -216,10 +216,10 @@ case class PolyHash61(child: Expression)
 }
 
 /** `kgram_poly_min_hash(s, k)` — the rolling-hash document fingerprint:
-  * min over char k-gram windows of the window's poly hash. Same window
-  * semantics as [[KgramMinHash]] (whole-text window when shorter than k;
-  * NULL text → NULL fingerprint), different hash so the q36 oracle can
-  * recompute it in DuckDB.
+  * min over char k-gram windows of the window's poly hash (one window of
+  * the whole text when it is shorter than k; NULL text → NULL
+  * fingerprint). The q36 oracle recomputes it in DuckDB
+  * ([[graft.OracleGen.kgramPolyMin]]).
   */
 case class KgramPolyMinHash(child: Expression, k: Int)
     extends UnaryExpression with PolyHashInput {

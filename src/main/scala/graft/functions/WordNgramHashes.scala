@@ -67,7 +67,7 @@ case class WordNgramHashes(child: Expression, n: Int) extends UnaryExpression {
 }
 
 /** The fused tokenize-and-hash loop (static forwarder for generated Java —
-  * the [[KgramMinHashMath]] pattern).
+  * the [[LshBucketMath]] pattern).
   */
 object WordNgramHashesMath {
 
@@ -128,7 +128,7 @@ object WordNgramHashesMath {
     ArrayData.toArrayData(out)
   }
 
-  /** Column-API surface (companion to [[KgramMinHashMath.kgramMinHashCol]]). */
+  /** Column-API surface (companion to [[LshBucketMath.lshBucketCol]]). */
   def wordNgramHashesCol(text: Column, n: Int): Column =
     GraftFunctions.column(WordNgramHashes(GraftFunctions.expr(text), n))
 }

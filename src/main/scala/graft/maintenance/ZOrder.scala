@@ -80,17 +80,6 @@ object ZOrder {
     * rows, sharper min/max stats (spec-pinned: the 2-D predicate scan
     * reads a fraction of the append-order layout's row groups).
     */
-  /** [[write]] once per directory — the q88 ensure pattern, so a
-    * registered query can exercise the layout while repeat executions
-    * (bench pass 2) measure the pruned READ, which is what the layout
-    * sells. Callers tag `dir` by source so scale factors can't cross-serve.
-    */
-  def ensureLayout(spark: org.apache.spark.sql.SparkSession,
-                   df: => DataFrame, dir: String, cols: Seq[String],
-                   numFiles: Int, bits: Int = 16): Unit =
-    if (!graft.sources.Tables.pathExists(spark, dir))
-      write(df, dir, cols, numFiles, bits)
-
   def write(df: DataFrame, dir: String, cols: Seq[String],
             numFiles: Int, bits: Int = 16): Unit = {
     // Range boundaries ARE the product of this layout: a sampled boundary

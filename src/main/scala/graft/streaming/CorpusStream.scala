@@ -746,16 +746,6 @@ object CorpusStream {
     drain(spark, q, outDir, schema)
   }
 
-  /** [[runOnce]] for the post-compaction stream. */
-  def runOnceAfterCompaction(spark: SparkSession, srcDir: String,
-                             deltaOutDir: String, checkpointDir: String,
-                             schema: StructType, compactedDir: String)
-      : org.apache.spark.sql.DataFrame = {
-    val q = dedupStreamQueryAfterCompaction(spark, srcDir, deltaOutDir,
-      checkpointDir, schema, compactedDir)
-    drain(spark, q, deltaOutDir, schema)
-  }
-
   private def drain(spark: SparkSession, q: StreamingQuery, outDir: String,
                     schema: StructType): org.apache.spark.sql.DataFrame = {
     q.processAllAvailable(); q.stop()

@@ -288,12 +288,8 @@ object TextAnalysis {
     * codegen'd [[graft.functions.KgramPolyMinHash]]) are BOTH
     * cross-engine and oracle-checked: the 61-bit Mersenne poly hash is
     * the identical value in DuckDB SQL (see [[graft.functions.PolyHashMath]]),
-    * which flipped q36 from rows-only to hash-exact. Same fused
-    * zero-copy window loop as the xxhash64 [[graft.functions.KgramMinHash]]
-    * it replaced here (that expression remains for engine-internal
-    * fingerprints where cross-engine checkability is not needed); the
-    * per-window cost class is unchanged (a handful of mul/shift ops per
-    * char — q36's 0.16 s at sf0.1 was the loop fusion, not the hash).
+    * which flipped q36 from rows-only to hash-exact. One fused window
+    * loop per document: a handful of mul/shift ops per char.
     */
   def fingerprints(docs: DataFrame, prefixLen: Int = 80, k: Int = 8): DataFrame =
     docs.select(

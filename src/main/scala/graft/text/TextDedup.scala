@@ -948,20 +948,6 @@ object TextDedup {
                          minDocs: Int = 2): DataFrame =
     scrubRanges(docs, spanRangesOf(docs, n, minDocs, minSpanTokens = n))
 
-  /** The rebuild half of passage cleaning, reusable against ANY span
-    * table with (doc_id, start_pos, end_pos) — [[scrubRepeatedSpans]]
-    * feeds the array form straight through ([[scrubRanges]]);
-    * [[graft.text.Corpus.scrubAgainstHotlist]] hands the incremental
-    * (state-probed) flat spans here. Spans must be disjoint per document
-    * (both generators emit maximal intervals, which are).
-    */
-  private[text] def scrubSpans(docs: DataFrame, spans: DataFrame): DataFrame =
-    scrubRanges(docs, spans
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(
-        struct(col("start_pos").as("s"), col("end_pos").as("e"))))
-        .as("_ranges")))
-
   /** The rebuild against per-doc sorted disjoint ranges
     * (doc_id, _ranges ARRAY<STRUCT<s, e>>) — [[chainSpanRanges]]' shape.
     */

@@ -264,49 +264,6 @@ class FunctionsSpec extends SparkSpec {
       "CAST(id AS STRING))) FROM range(1000)").head().getLong(0) == 1000L)
   }
 
-  test("KgramMinHash is bit-identical to the HOF form (ASCII, multi-byte, short, empty, null)") {
-    import graft.functions.KgramMinHashMath
-    val k = 8
-    val texts = Seq(
-      "the quick brown fox jumps over the lazy dog",
-      "naïve café — δοκιμή многобайтовый 試験テキスト",   // multi-byte chars
-      "short",                                            // shorter than k
-      "exactly8",                                         // exactly k chars
-      "",                                                 // empty
-      null.asInstanceOf[String])
-      .zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      .toDF("doc_id", "text")
-    val hof = expr(
-      s"""array_min(transform(sequence(1, greatest(length(text) - ${k - 1}, 1)),
-         |  i -> xxhash64(substring(text, i, $k))))""".stripMargin)
-    val out = texts.select(
-      col("doc_id"),
-      hof.as("hof_fp"),
-      KgramMinHashMath.kgramMinHashCol(col("text"), k).as("expr_fp"),
-      col("text").isNull.as("is_null_text"))
-      .collect()
-    out.foreach { r =>
-      if (r.getBoolean(3)) {
-        // deliberate difference: the HOF chain maps NULL text to the seed
-        // (greatest(null,1)=1 → xxhash64(NULL)=42); the expression
-        // propagates NULL — a NULL document has no fingerprint
-        assert(r.isNullAt(2), "expression must propagate NULL text")
-        assert(!r.isNullAt(1) && r.getLong(1) == 42L,
-          "HOF null-to-seed behavior changed — revisit the documented difference")
-      } else {
-        assert(r.getLong(1) == r.getLong(2),
-          s"fingerprint mismatch for doc ${r.getLong(0)}")
-      }
-    }
-    // and across the real corpus
-    val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    val mism = docs.select(
-      hof.as("a"),
-      KgramMinHashMath.kgramMinHashCol(col("text"), k).as("b"))
-      .filter(!(col("a") <=> col("b"))).count()
-    assert(mism == 0, s"$mism corpus fingerprints differ from the HOF form")
-  }
-
   test("RewriteHofCosine turns the HOF cosine shape into the expression") {
     import graft.functions.RewriteHofCosine
     val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
@@ -376,15 +333,6 @@ class FunctionsSpec extends SparkSpec {
           "rewritten zero-norm cosine must stay NULL")
       } finally spark.experimental.extraOptimizations = Nil
     } finally spark.conf.set("spark.sql.ansi.enabled", ansiWas)
-  }
-
-  test("kgram_min_hash is callable from SQL after registration") {
-    GraftFunctions.registerAll(spark)
-    val r = spark.sql(
-      "SELECT kgram_min_hash('the quick brown fox', 8) AS fp").collect().head
-    val direct = graft.functions.KgramMinHashMath.compute(
-      org.apache.spark.unsafe.types.UTF8String.fromString("the quick brown fox"), 8)
-    assert(r.getLong(0) == direct)
   }
 
   test("WordNgramHashes matches the split-based shingle pipeline's structure") {
@@ -459,18 +407,6 @@ class FunctionsSpec extends SparkSpec {
     df.collect()
   }
 
-  test("KgramMinHash participates in whole-stage codegen (no fallback)") {
-    import graft.functions.KgramMinHashMath
-    // project over a parquet scan — a local Seq would constant-fold via
-    // ConvertToLocalRelation and never reach codegen
-    val df = Tables.load(spark, "/root/testdata/sf0.001", "documents")
-      .select(KgramMinHashMath.kgramMinHashCol(col("text"), 8).as("fp"))
-    val p = df.queryExecution.executedPlan.toString
-    // the "*(n)" prefix marks operators inside a WholeStageCodegen stage
-    assert(p.contains("*(1) Project [kgram_min_hash"), p.take(500))
-    df.collect() // force actual codegen compilation, not just planning
-  }
-
   test("PolyHashMath matches the cross-language reference (pinned literals " +
       "+ BigInt property over the real corpus)") {
     import graft.functions.PolyHashMath
@@ -523,8 +459,8 @@ class FunctionsSpec extends SparkSpec {
     import graft.functions.PolyHashMath
     import org.apache.spark.unsafe.types.UTF8String
     def h(s: String): Long = PolyHashMath.hashString(UTF8String.fromString(s))
-    // n <= k: ONE clamped window of the whole text (the KgramMinHash
-    // convention)
+    // n <= k: ONE clamped window of the whole text (the SQL substring
+    // clamp)
     assert(PolyHashMath.kgramMin(UTF8String.fromString("short"), 8) == h("short"))
     assert(PolyHashMath.kgramMin(UTF8String.fromString("exactly8"), 8) == h("exactly8"))
     assert(PolyHashMath.kgramMin(UTF8String.fromString(""), 8) == 0L)

@@ -86,4 +86,17 @@ class GraftSessionSpec extends SparkSpec {
     assert(e.getMessage.contains("prefix(es) q9999_ match no query"), e.getMessage)
     intercept[IllegalArgumentException](SparkEntry.selected(Some(" , ")))
   }
+
+  test("oracleSql holds 210 oracles, one per query but the 13 rows-only ones") {
+    val oracles = SparkEntry.oracleSql.keySet
+    val queries = SparkEntry.queries.keySet
+    assert(oracles.subsetOf(queries), (oracles -- queries).toSeq.sorted)
+    assert(oracles.size == 210)
+    assert(queries -- oracles == Set(
+      "q51_approx_distinct", "q71_median_approx", "q84_sketch_rollup",
+      "q91_semantic_dedup_ivf", "q101_overlap_sketch", "q115_heavy_sketch",
+      "q127_pq_search", "q128_ann_ivf_pq", "q129_kll_quantile_rollup",
+      "q137_profile_approx", "q139_theta_set_algebra", "q146_reach_theta",
+      "q194_ks_sketch"))
+  }
 }

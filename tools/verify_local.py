@@ -80,6 +80,9 @@ def main():
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     sf_dir = args[0] if len(args) > 0 else "/root/testdata/sf0.01"
     out_dir = args[1] if len(args) > 1 else "/tmp/verify_out"
+    # queries whose Spark run threw: Verify prints "[verify] <name> failed"
+    # and exits 0, leaving any older parquet of that name in out_dir
+    spark_failed = []
     if "--skip-spark" not in sys.argv:
         # --batch: a one-shot sbt JVM that exits with the run (--client
         # would leave an sbt server of ~570 MB behind, and it does not
@@ -100,6 +103,9 @@ def main():
         for line in (r.stdout + "\n" + r.stderr).splitlines():
             if "[verify]" in line:
                 print(line)
+                m = re.search(r"\[verify\] (\S+) failed", line)
+                if m and m.group(1) not in spark_failed:
+                    spark_failed.append(m.group(1))
 
     oracle = json.loads(Path(f"{out_dir}/oracle_sql.json").read_text())
     con = duckdb.connect()
@@ -109,6 +115,7 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
     n_fail = 0
+    passed = set()
     secs = {}
     for name in sorted(oracle):
         spark_path = Path(out_dir) / name
@@ -178,8 +185,10 @@ def main():
         elif status == "close":
             i, c, a, b = bad
             print(f"WARN {tag}: float-close-but-not-exact row {i} col {c}: spark={a!r} oracle={b!r}")
+            passed.add(name)
         else:
             print(f"PASS {tag}: {want.num_rows} rows exact")
+            passed.add(name)
 
     # queries without oracle: rows-only check
     for p in sorted(Path(out_dir).iterdir()):
@@ -190,9 +199,13 @@ def main():
     slowest = sorted(secs.items(), key=lambda kv: -kv[1])[:5]
     print("\nslowest oracles (duckdb s): " +
           ", ".join(f"{n} {t:.2f}" for n, t in slowest))
-    # every oracle query fails at most once above, wherever it stops
-    print(f"{len(oracle) - n_fail}/{len(oracle)} oracle queries pass")
-    sys.exit(1 if n_fail else 0)
+    # a query that failed on Spark fails here too, oracle or rows-only: a
+    # compare that passed read an earlier run's output
+    for name in spark_failed:
+        stale = " (its compare above read stale output)" if name in passed else ""
+        print(f"FAIL {name}: Spark run failed{stale}")
+    print(f"{len(passed - set(spark_failed))}/{len(oracle)} oracle queries pass")
+    sys.exit(1 if n_fail or spark_failed else 0)
 
 
 if __name__ == "__main__":
